@@ -27,7 +27,7 @@ belongs to SURVEY §2.5's pipeline-operator envelope.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -129,34 +129,5 @@ def kmeans_summary(
             F.round(F.sum("dist2"), 4).alias("inertia"),
             F.round(F.avg("dist2"), 6).alias("mean_dist2"),
         )
-        .orderBy("cluster")
-    )
-
-
-def silhouette_proxy(
-    df: DataFrame, id_col: str, vec_col: str, k: int = 4, iters: int = 2
-) -> DataFrame:
-    """Simplified per-cluster separation score: for each point, the gap
-    between its own-centroid distance and its SECOND-nearest centroid
-    distance (a(x) vs b(x) with centroid stand-ins — the O(n*k)
-    silhouette proxy; the true silhouette's O(n^2) pairwise pass does
-    not exist at scale). Emitted per cluster: mean gap ratio."""
-    assigned, centroids = kmeans(df, id_col, vec_col, k=k, iters=iters)
-    ranked = F.array_sort(
-        F.array(
-            *[
-                F.struct(_dist2(F.col("__v"), c).alias("dist2"), F.lit(int(cid)).alias("cluster"))
-                for cid, c in centroids
-            ]
-        )
-    )
-    second = ranked[1]["dist2"]
-    return (
-        assigned.select(
-            "cluster",
-            ((second - F.col("dist2")) / F.greatest(second, F.lit(1e-12))).alias("gap"),
-        )
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("gap"), 6).alias("mean_gap"))
         .orderBy("cluster")
     )

@@ -25,7 +25,10 @@ def bucketize(value: Column, lo: float, hi: float, buckets: int) -> Column:
     """Clamped equal-width bucket index in [0, buckets-1]; NULL for NULL."""
     width = (hi - lo) / buckets if hi > lo else 1.0
     raw = F.floor((value.cast("double") - F.lit(lo)) / F.lit(width))
-    return F.least(F.lit(buckets - 1), F.greatest(F.lit(0), raw)).cast("int")
+    # greatest/least skip NULL arguments, so a NULL value must be kept
+    # NULL explicitly or it would land in bucket 0
+    clamped = F.least(F.lit(buckets - 1), F.greatest(F.lit(0), raw))
+    return F.when(raw.isNotNull(), clamped).cast("int")
 
 
 def value_histogram(

@@ -117,17 +117,6 @@ def bloom_orphans(
     return definite.unionByName(verified.select(*definite.columns))
 
 
-def conversation_orphans(df: DataFrame, group: str = "conv_id", order: str = "turn_idx") -> DataFrame:
-    """Conversations with no turn 0 — the transcripts-native RI rule
-    (FIXTURES.md V2): every conv_id group must contain its root turn.
-    One aggregation, no join: (group, first_turn)."""
-    return (
-        df.groupBy(group)
-        .agg(F.min(order).alias("first_turn"), F.count(F.lit(1)).alias("n_turns"))
-        .filter(F.col("first_turn") != 0)
-    )
-
-
 def fk_profile(
     child: DataFrame,
     child_col: str,

@@ -2,56 +2,21 @@
 (conv_id, turn_idx) ordering" row-level invariant from BASELINE.json
 input_hint, generalized (SURVEY.md §2.4 "Monotone/dense turn_idx").
 
-Two strategies:
-- ``ordering_violations``: per-row attribution via a window (lag) — needs
-  a shuffle by group key; pre-repartition by xxhash64(conv_id) so the
-  same shuffle serves every conversation-scoped check (SURVEY.md §4.2).
+Per-row ordering attribution (duplicate order value, gap, inversion,
+missing root, monotone-column inversion) is the CheckSuite key-window
+pass (plans/check_suite.py), which shares one shuffle of the key columns
+with the uniqueness and referential-root checks. This module holds the
+group-level operators:
 - ``density``: group-level verdicts via pure aggregation — dense iff
   min==0 and max+1==count and count==distinct — salted-agg compatible
-  (all aggregates are algebraic)."""
+  (all aggregates are algebraic);
+- ``reindex_dense``: the repair for a failed density check;
+- ``islands``: the contiguous runs of an id column per group."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def repartition_by_group(df: DataFrame, group: str = "conv_id", n: int | None = None) -> DataFrame:
-    """Explicit repartition by hash of the conversation key so all
-    conversation-scoped windows reuse one shuffle (input_hint mandate)."""
-    cols = [F.xxhash64(F.col(group))]
-    return df.repartition(n, *cols) if n else df.repartition(*cols)
-
-
-def ordering_violations(
-    df: DataFrame,
-    group: str = "conv_id",
-    order: str = "turn_idx",
-    monotone: list[str] | None = None,
-) -> DataFrame:
-    """Rows that break per-group ordering: duplicate order value, gap in
-    the dense sequence, or inversion of a monotone companion column (ts).
-    Output: offending rows + `ordering_issue` string column."""
-    w = Window.partitionBy(group).orderBy(order)
-    prev_order = F.lag(order).over(w)
-    issues = [
-        F.when(prev_order.isNotNull() & (F.col(order) == prev_order), F.lit("duplicate_order")),
-        F.when(prev_order.isNotNull() & (F.col(order) > prev_order + 1), F.lit("gap")),
-        F.when(prev_order.isNotNull() & (F.col(order) < prev_order), F.lit("inversion")),
-        F.when(prev_order.isNull() & (F.col(order) != 0), F.lit("missing_root")),
-    ]
-    for c in monotone or []:
-        prev_c = F.lag(c).over(w)
-        issues.append(
-            F.when(prev_c.isNotNull() & (F.col(c) < prev_c), F.lit(f"{c}_inversion"))
-        )
-    issue = F.array_compact(F.array(*issues))
-    return (
-        df.withColumn("__issues", issue)
-        .filter(F.size("__issues") > 0)
-        .withColumn("ordering_issue", F.array_join("__issues", ","))
-        .drop("__issues")
-    )
 
 
 def density(

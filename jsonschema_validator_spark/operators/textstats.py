@@ -303,20 +303,6 @@ def text_profile(text: Column) -> Column:
     return F.pandas_udf(_batch, "lang_pred string, quality double")(text)
 
 
-def text_quality_report(df: DataFrame, text_col: str, group_by: str | None = None) -> DataFrame:
-    """One-pass quality metrics, optionally grouped."""
-    t = F.col(text_col)
-    aggs = [
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg(F.length(t)), 4).alias("avg_chars"),
-        F.round(F.avg(token_count(t)), 4).alias("avg_tokens"),
-        F.round(F.avg(punct_ratio(t)), 4).alias("avg_punct_ratio"),
-        F.round(F.avg(stopword_ratio(t)), 4).alias("avg_stopword_ratio"),
-        F.round(F.avg(quality_score(t)), 4).alias("avg_quality"),
-    ]
-    return (df.groupBy(group_by) if group_by else df.groupBy()).agg(*aggs)
-
-
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str,

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,7 +56,6 @@ from jsonschema_validator_spark.functions.keywords import (
 )
 from jsonschema_validator_spark.operators import drift as drift_ops
 from jsonschema_validator_spark.operators import integrity as ri_ops
-from jsonschema_validator_spark.operators import ordering as ord_ops
 from jsonschema_validator_spark.operators import stats as stats_ops
 from jsonschema_validator_spark.operators import uniqueness as uniq_ops
 
@@ -244,14 +242,12 @@ class CheckSuite:
         return f"{ce.keyword}@{ce.path}"
 
     # -- dual API ----------------------------------------------------------
-    def verdicts(
-        self, df: DataFrame, fused: bool = True, refs: dict | None = None
-    ) -> DataFrame:
+    def verdicts(self, df: DataFrame, refs: dict | None = None) -> DataFrame:
         """Per-partition verdict rows: (day, check, pass, violation_count,
         rows_checked, metrics).
 
-        fused=True (default) is the scale plan (SURVEY.md §4.1/§4.2): the
-        whole suite runs as TWO passes over the input —
+        The whole suite runs as TWO passes over the input (SURVEY.md
+        §4.1/§4.2) —
 
         - pass A: ONE scan computing every row-check flag, the drift
           bucket, and all stats partials in a single
@@ -267,67 +263,15 @@ class CheckSuite:
           day-level aggregate.
 
         Checks whose spec shape can't fuse (drift without fixed lo/hi
-        bounds, unique on columns unrelated to the ordering key) fall
-        back to their standalone single-pass jobs. fused=False forces the
-        one-job-per-check legacy path (kept for parity testing).
+        bounds or with a baseline partition, unique on other than two
+        columns, referential, a repeated drift/stats/volume/freshness
+        check) fall back to their standalone single-pass jobs.
 
         refs: name -> DataFrame for cross-table checks (the
         `referential` dataset check's parent side); a parent not found
         in refs is treated as a table reference for sources.read_table
         (e.g. 'parquet:/path' or 'iceberg:cat.db.tbl')."""
         self._require_built()
-        out = (
-            self._fused_verdicts(df, refs) if fused else self._legacy_verdicts(df, refs)
-        )
-        if not out:
-            raise UninitialisedPlanError("empty check suite")
-        res = out[0]
-        for o in out[1:]:
-            res = res.unionByName(o)
-        return res
-
-    def _legacy_verdicts(self, df: DataFrame, refs: dict | None = None) -> list[DataFrame]:
-        part = self.partition_by
-        out: list[DataFrame] = []
-        flags = self._flag_cols(df)
-        if flags:
-            out.append(self._flag_verdict_rows(df, flags))
-        for d in self.spec.get("dataset", []):
-            out.append(self._dataset_verdicts(df, d, refs))
-        return out
-
-    def _flag_verdict_rows(self, df: DataFrame, flags) -> DataFrame:
-        part = self.partition_by
-        sel = df.select(
-            F.col(part),
-            *[(~c).cast("long").alias(f"f{i}") for i, (_, c) in enumerate(flags)],
-        )
-        agg = sel.groupBy(part).agg(
-            F.count(F.lit(1)).alias("rows_checked"),
-            *[F.sum(f"f{i}").alias(self._check_name(ce)) for i, (ce, _) in enumerate(flags)],
-        )
-        return self._unpivot_flag_agg(agg, flags)
-
-    def _unpivot_flag_agg(self, agg: DataFrame, flags) -> DataFrame:
-        part = self.partition_by
-        long = agg.unpivot(
-            ids=[part, "rows_checked"],
-            values=[self._check_name(ce) for ce, _ in flags],
-            variableColumnName="check",
-            valueColumnName="violation_count",
-        )
-        return long.select(
-            F.col(part).alias("day"),
-            "check",
-            (F.col("violation_count") == 0).alias("pass"),
-            "violation_count",
-            "rows_checked",
-            F.lit(None).cast("map<string,double>").alias("metrics"),
-        )
-
-    # -- fused two-pass plan ------------------------------------------------
-    def _fused_verdicts(self, df: DataFrame, refs: dict | None = None) -> list[DataFrame]:
-        part = self.partition_by
         dataset = list(self.spec.get("dataset", []))
         out: list[DataFrame] = []
         fused: set[int] = set()
@@ -349,13 +293,6 @@ class CheckSuite:
         fresh_is = [i for i, d in enumerate(dataset) if d["check"] == "freshness"]
         freshA = dataset[fresh_is[0]] if len(fresh_is) == 1 else None
 
-        # key checks sharing one (group, order) pair -> pass B
-        key_groups: dict[tuple[str, str], list[int]] = {}
-        for i, d in enumerate(dataset):
-            k = self._fusable_key(d)
-            if k is not None:
-                key_groups.setdefault(k, []).append(i)
-
         # --- run pass A and the pass B jobs concurrently ------------------
         # (independent scans: A reads payload columns, B only key columns;
         # overlapping them fills scheduler bubbles at high core counts)
@@ -373,7 +310,7 @@ class CheckSuite:
                 fused.add(vol_is[0])
             if freshA is not None:
                 fused.add(fresh_is[0])
-        for (g, o), idxs in key_groups.items():
+        for (g, o), idxs in self._key_groups(dataset).items():
             tasks.append(
                 lambda g=g, o=o, idxs=idxs: self._pass_b(
                     df, g, o, [dataset[i] for i in idxs]
@@ -394,7 +331,12 @@ class CheckSuite:
         for i, d in enumerate(dataset):
             if i not in fused:
                 out.append(self._dataset_verdicts(df, d, refs))
-        return out
+        if not out:
+            raise UninitialisedPlanError("empty check suite")
+        res = out[0]
+        for o in out[1:]:
+            res = res.unionByName(o)
+        return res
 
     def _pass_a(
         self,
@@ -495,8 +437,8 @@ class CheckSuite:
                     if "__" in name:
                         col, metric = name.split("__", 1)
                         if col in by_col:
-                            # keep NULL-valued metric keys (matches the
-                            # legacy create_map output for all-null cols)
+                            # keep NULL-valued metric keys (as the
+                            # standalone stats path's create_map does)
                             by_col[col][metric] = None if val is None else float(val)
                 for c in stats_columns:
                     out.append((day, f"stats:{c}", True, 0, rows_checked, by_col[c]))
@@ -545,48 +487,83 @@ class CheckSuite:
                 )
         return out
 
+    @staticmethod
+    def _key_groups(dataset: list[dict]) -> dict[tuple[str, str], list[int]]:
+        """Indices of the key checks sharing each (group, order) window:
+        unique on two columns, referential_root and ordering."""
+        groups: dict[tuple[str, str], list[int]] = {}
+        for i, d in enumerate(dataset):
+            if d["check"] == "unique":
+                cols = d["columns"]
+                if len(cols) != 2:
+                    continue
+                key = (cols[0], cols[1])
+            elif d["check"] in ("referential_root", "ordering"):
+                key = (d.get("group", "conv_id"), d.get("order", "turn_idx"))
+            else:
+                continue
+            groups.setdefault(key, []).append(i)
+        return groups
+
+    @staticmethod
+    def _monotone(checks: list[dict]) -> list[str]:
+        """The ordering check's monotone companion columns, if any."""
+        monotone: list[str] = []
+        for d in checks:
+            if d["check"] == "ordering":
+                monotone = d.get("monotone") or []
+        return monotone
+
+    def _key_window(self, g: str, o: str, monotone: list[str]) -> tuple:
+        """The per-row key-check conditions over (g ORDER BY o), built once
+        per (g, o, monotone) and shared by verdict pass B (counts) and the
+        violations pass (structs): (duplicate, rootless, issues) where
+        duplicate marks every row whose order value repeats in its group,
+        rootless marks every row of a group whose smallest order value is
+        not 0, and issues is the ordered list of (ordering issue name,
+        condition)."""
+        from pyspark.sql import Window
+
+        memo_key = ("keyWindow", g, o, tuple(monotone))
+        conds = self._expr_memo.get(memo_key)
+        if conds is None:
+            w = Window.partitionBy(g).orderBy(o)
+            cur = F.col(o)
+            lag_o = F.lag(o).over(w)
+            lead_o = F.lead(o).over(w)
+            first_o = F.first(o, ignorenulls=True).over(w)  # == min: asc order
+            issues = [
+                ("duplicate_order", lag_o.isNotNull() & (cur == lag_o)),
+                ("gap", lag_o.isNotNull() & (cur > lag_o + 1)),
+                ("inversion", lag_o.isNotNull() & (cur < lag_o)),
+                ("missing_root", lag_o.isNull() & (cur != 0)),
+            ]
+            for c in monotone:
+                lag_c = F.lag(c).over(w)
+                issues.append((f"{c}_inversion", lag_c.isNotNull() & (F.col(c) < lag_c)))
+            conds = ((lag_o == cur) | (lead_o == cur), first_o != 0, issues)
+            self._expr_memo[memo_key] = conds
+        return conds
+
     def _pass_b(self, df: DataFrame, g: str, o: str, checks: list[dict]) -> list[tuple]:
         """One window over (group ORDER BY order) — uniqueness, root
         presence and ordering flags per row from a single sort-based
         shuffle of the key columns only (no payload columns move); the
         O(partitions) day-level aggregate is collected and shaped on the
         driver."""
-        from pyspark.sql import Window
-
         part = self.partition_by
-        monotone: list[str] = []
-        for d in checks:
-            if d["check"] == "ordering":
-                monotone = d.get("monotone") or []
+        monotone = self._monotone(checks)
+        dup, rootless, issues = self._key_window(g, o, monotone)
+        ordering_any = issues[0][1]
+        for _, cond in issues[1:]:
+            ordering_any = ordering_any | cond
 
-        memo_key = ("passB", g, o, tuple(monotone))
-        flag_cols = self._expr_memo.get(memo_key)
-        if flag_cols is None:
-            w = Window.partitionBy(g).orderBy(o)
-            cur = F.col(o)
-            lag_o = F.lag(o).over(w)
-            lead_o = F.lead(o).over(w)
-            first_o = F.first(o, ignorenulls=True).over(w)  # == min: asc order
-
-            dup_member = (lag_o == cur) | (lead_o == cur)
-            ordering_any = (
-                (lag_o.isNotNull() & (cur == lag_o))
-                | (lag_o.isNotNull() & (cur > lag_o + 1))
-                | (lag_o.isNotNull() & (cur < lag_o))
-                | (lag_o.isNull() & (cur != 0))
-            )
-            for c in monotone:
-                lag_c = F.lag(c).over(w)
-                ordering_any = ordering_any | (lag_c.isNotNull() & (F.col(c) < lag_c))
-            root_member = first_o != 0
-            flag_cols = [
-                dup_member.cast("long").alias("__dup"),
-                ordering_any.cast("long").alias("__ord"),
-                root_member.cast("long").alias("__root"),
-            ]
-            self._expr_memo[memo_key] = flag_cols
-
-        perrow = df.select(part, g, o, *monotone).select(F.col(part), *flag_cols)
+        perrow = df.select(part, g, o, *monotone).select(
+            F.col(part),
+            dup.cast("long").alias("__dup"),
+            ordering_any.cast("long").alias("__ord"),
+            rootless.cast("long").alias("__root"),
+        )
         day2 = perrow.groupBy(part).agg(
             F.count(F.lit(1)).alias("rows_checked"),
             F.coalesce(F.sum("__dup"), F.lit(0)).alias("__dup"),
@@ -600,10 +577,8 @@ class CheckSuite:
                 label, flag = f"unique({','.join(d['columns'])})", "__dup"
             elif d["check"] == "referential_root":
                 label, flag = f"referential_root({g})", "__root"
-            elif d["check"] == "ordering":
-                label, flag = f"ordering({g})", "__ord"
             else:
-                continue
+                label, flag = f"ordering({g})", "__ord"
             for r in day2:
                 viol = r[flag]
                 out.append((r[part], label, viol == 0, viol, r["rows_checked"], None))
@@ -612,7 +587,6 @@ class CheckSuite:
     def violations(
         self,
         df: DataFrame,
-        fused: bool = True,
         sample_per_check: int | None = None,
         refs: dict | None = None,
     ) -> DataFrame:
@@ -620,13 +594,12 @@ class CheckSuite:
         (validation_error.rs:5-10): (conv_id, turn_idx, column, keyword,
         message, path, day).
 
-        fused=True collapses the unique/referential-root/ordering
-        violation attribution into ONE window pass over (group ORDER BY
-        order) — the same single key-shuffle as the verdict pass B,
-        emitting violation structs instead of counts — replacing three
-        separate scans (composite-key window, orphan agg + broadcast
-        semi join, ordering window). Row flags are one fused select
-        either way.
+        Row flags are one fused select. The unique/referential-root/
+        ordering attribution is ONE window pass over (group ORDER BY
+        order) — the same single key-shuffle and the same conditions as
+        the verdict pass B, emitting violation structs instead of counts.
+        Key checks that can't fuse (unique on other than two columns,
+        referential) run their standalone jobs.
 
         sample_per_check caps the output at N example rows per
         (day, check-keyword) via a deterministic hash ranking — at
@@ -636,8 +609,6 @@ class CheckSuite:
         tally (the reference's lazy-error-iterator intent,
         /root/reference/README.md:26)."""
         self._require_built()
-        part = self.partition_by
-        k1, k2 = self.keys
         out: list[DataFrame] = []
 
         flags = self._flag_cols(df)
@@ -654,44 +625,15 @@ class CheckSuite:
                 )
                 for ce, c in flags
             ]
-            rows = (
-                df.select(
-                    F.col(k1).alias("conv_id"),
-                    F.col(k2).cast("int").alias("turn_idx"),
-                    F.col(part).alias("day"),
-                    F.array_compact(F.array(*structs)).alias("v"),
-                )
-                .filter(F.size("v") > 0)
-                .select(
-                    "conv_id", "turn_idx", F.explode("v").alias("e"), "day"
-                )
-                .select(
-                    "conv_id",
-                    "turn_idx",
-                    F.col("e.column").alias("column"),
-                    F.col("e.keyword").alias("keyword"),
-                    F.col("e.message").alias("message"),
-                    F.col("e.path").alias("path"),
-                    "day",
-                )
-            )
-            out.append(rows)
+            out.append(self._explode_structs(df, structs))
 
         dataset = list(self.spec.get("dataset", []))
-        fused_idx: set[int] = set()
-        if fused:
-            key_groups: dict[tuple[str, str], list[int]] = {}
-            for i, d in enumerate(dataset):
-                k = self._fusable_key(d)
-                if k is not None:
-                    key_groups.setdefault(k, []).append(i)
-            for (g, o), idxs in key_groups.items():
-                out.append(
-                    self._fused_key_violations(df, g, o, [dataset[i] for i in idxs])
-                )
-                fused_idx.update(idxs)
+        fused: set[int] = set()
+        for (g, o), idxs in self._key_groups(dataset).items():
+            out.append(self._fused_key_violations(df, g, o, [dataset[i] for i in idxs]))
+            fused.update(idxs)
         for i, d in enumerate(dataset):
-            if i in fused_idx:
+            if i in fused:
                 continue
             v = self._dataset_violations(df, d, refs)
             if v is not None:
@@ -716,92 +658,15 @@ class CheckSuite:
             )
         return res
 
-    @staticmethod
-    def _fusable_key(d: dict) -> tuple[str, str] | None:
-        """(group, order) pair a key check can fuse on, or None."""
-        if d["check"] == "unique":
-            cols = d["columns"]
-            return (cols[0], cols[1]) if len(cols) == 2 else None
-        if d["check"] in ("referential_root", "ordering"):
-            return (d.get("group", "conv_id"), d.get("order", "turn_idx"))
-        return None
-
-    def _fused_key_violations(
-        self, df: DataFrame, g: str, o: str, checks: list[dict]
-    ) -> DataFrame:
-        """One window over (group ORDER BY order) emitting the violation
-        structs for every fused key check — same flags as verdict pass B,
-        same output shape/messages as the per-check legacy paths."""
-        from pyspark.sql import Window
-
-        part = self.partition_by
+    def _explode_structs(self, df: DataFrame, structs: list) -> DataFrame:
+        """One violation row per non-NULL (column, keyword, message, path)
+        struct of each input row."""
         k1, k2 = self.keys
-        monotone: list[str] = []
-        for d in checks:
-            if d["check"] == "ordering":
-                monotone = d.get("monotone") or []
-
-        w = Window.partitionBy(g).orderBy(o)
-        cur = F.col(o)
-        lag_o = F.lag(o).over(w)
-        lead_o = F.lead(o).over(w)
-        first_o = F.first(o, ignorenulls=True).over(w)
-
-        def struct_of(cols: str, keyword: str, message) -> object:
-            return F.struct(
-                F.lit(cols).alias("column"),
-                F.lit(keyword).alias("keyword"),
-                (F.lit(message) if isinstance(message, str) else message).alias("message"),
-                F.lit("#").alias("path"),
-            )
-
-        structs = []
-        for d in checks:
-            if d["check"] == "unique":
-                dup_member = (lag_o == cur) | (lead_o == cur)
-                structs.append(
-                    F.when(
-                        dup_member, struct_of(",".join(d["columns"]), "unique", "duplicate key")
-                    )
-                )
-            elif d["check"] == "referential_root":
-                structs.append(
-                    F.when(
-                        first_o != 0,
-                        struct_of(
-                            ",".join(d.get("columns", [k1, k2])),
-                            "referential",
-                            "conversation has no root turn",
-                        ),
-                    )
-                )
-            elif d["check"] == "ordering":
-                issues = [
-                    F.when(lag_o.isNotNull() & (cur == lag_o), F.lit("duplicate_order")),
-                    F.when(lag_o.isNotNull() & (cur > lag_o + 1), F.lit("gap")),
-                    F.when(lag_o.isNotNull() & (cur < lag_o), F.lit("inversion")),
-                    F.when(lag_o.isNull() & (cur != 0), F.lit("missing_root")),
-                ]
-                for c in monotone:
-                    lag_c = F.lag(c).over(w)
-                    issues.append(
-                        F.when(lag_c.isNotNull() & (F.col(c) < lag_c), F.lit(f"{c}_inversion"))
-                    )
-                issue = F.array_join(F.array_compact(F.array(*issues)), ",")
-                structs.append(
-                    F.when(
-                        F.size(F.array_compact(F.array(*issues))) > 0,
-                        struct_of(",".join(d.get("columns", [k1, k2])), "ordering", issue),
-                    )
-                )
-
-        needed = list(dict.fromkeys([part, g, o, *monotone, k1, k2]))
         return (
-            df.select(*needed)
-            .select(
+            df.select(
                 F.col(k1).alias("conv_id"),
                 F.col(k2).cast("int").alias("turn_idx"),
-                F.col(part).alias("day"),
+                F.col(self.partition_by).alias("day"),
                 F.array_compact(F.array(*structs)).alias("v"),
             )
             .filter(F.size("v") > 0)
@@ -817,44 +682,98 @@ class CheckSuite:
             )
         )
 
+    def _fused_key_violations(
+        self, df: DataFrame, g: str, o: str, checks: list[dict]
+    ) -> DataFrame:
+        """One window over (group ORDER BY order) emitting the violation
+        structs for every fused key check, from the same conditions as
+        verdict pass B (so violation and verdict counts agree)."""
+        part = self.partition_by
+        k1, k2 = self.keys
+        monotone = self._monotone(checks)
+        dup, rootless, issues = self._key_window(g, o, monotone)
+
+        def struct_of(cols: str, keyword: str, message) -> object:
+            return F.struct(
+                F.lit(cols).alias("column"),
+                F.lit(keyword).alias("keyword"),
+                (F.lit(message) if isinstance(message, str) else message).alias("message"),
+                F.lit("#").alias("path"),
+            )
+
+        structs = []
+        for d in checks:
+            if d["check"] == "unique":
+                structs.append(
+                    F.when(dup, struct_of(",".join(d["columns"]), "unique", "duplicate key"))
+                )
+            elif d["check"] == "referential_root":
+                structs.append(
+                    F.when(
+                        rootless,
+                        struct_of(
+                            ",".join(d.get("columns", [k1, k2])),
+                            "referential",
+                            "conversation has no root turn",
+                        ),
+                    )
+                )
+            else:
+                named = [F.when(cond, F.lit(name)) for name, cond in issues]
+                issue = F.array_join(F.array_compact(F.array(*named)), ",")
+                structs.append(
+                    F.when(
+                        F.size(F.array_compact(F.array(*named))) > 0,
+                        struct_of(",".join(d.get("columns", [k1, k2])), "ordering", issue),
+                    )
+                )
+
+        needed = list(dict.fromkeys([part, g, o, *monotone, k1, k2]))
+        return self._explode_structs(df.select(*needed), structs)
+
     def run(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
         return self.verdicts(df), self.violations(df)
 
     # -- dataset checks -----------------------------------------------------
-    def _resolve_parent(self, df: DataFrame, d: dict, refs: dict | None) -> DataFrame:
+    def _dangling_rows(self, df: DataFrame, d: dict, refs: dict | None) -> DataFrame:
+        """Rows of df whose `referential` key has no row in the parent."""
+        cols = d["columns"]
+        pcols = d.get("parent_columns", cols)
         parent = d.get("parent")
         if refs and parent in refs:
-            return refs[parent]
-        from jsonschema_validator_spark.sources import read_table
+            parent_df = refs[parent]
+        else:
+            from jsonschema_validator_spark.sources import read_table
 
-        return read_table(df.sparkSession, parent)
+            parent_df = read_table(df.sparkSession, parent)
+        parent_df = parent_df.select(*[F.col(pc).alias(c) for pc, c in zip(pcols, cols)])
+        return ri_ops.orphans(df, parent_df, cols)
+
+    def _row_count_verdicts(self, df: DataFrame, rows: DataFrame, label: str) -> DataFrame:
+        """Verdict rows counting the violating rows of df per partition."""
+        part = self.partition_by
+        agg = rows.groupBy(part).agg(F.count(F.lit(1)).alias("violation_count"))
+        totals = df.groupBy(part).agg(F.count(F.lit(1)).alias("rows_checked"))
+        return (
+            totals.join(agg, part, "left")
+            .fillna(0, subset=["violation_count"])
+            .select(
+                F.col(part).alias("day"),
+                F.lit(label).alias("check"),
+                (F.col("violation_count") == 0).alias("pass"),
+                "violation_count",
+                "rows_checked",
+                F.lit(None).cast("map<string,double>").alias("metrics"),
+            )
+        )
 
     def _dataset_verdicts(self, df: DataFrame, d: dict, refs: dict | None = None) -> DataFrame:
         part = self.partition_by
         kind = d["check"]
-        nullmap = F.lit(None).cast("map<string,double>")
 
         if kind == "referential":
-            cols = d["columns"]
-            pcols = d.get("parent_columns", cols)
-            parent = self._resolve_parent(df, d, refs).select(
-                *[F.col(pc).alias(c) for pc, c in zip(pcols, cols)]
-            )
-            rows = ri_ops.orphans(df, parent, cols)
-            agg = rows.groupBy(part).agg(F.count(F.lit(1)).alias("violation_count"))
-            totals = df.groupBy(part).agg(F.count(F.lit(1)).alias("rows_checked"))
-            return (
-                totals.join(agg, part, "left")
-                .fillna(0, subset=["violation_count"])
-                .select(
-                    F.col(part).alias("day"),
-                    F.lit(f"referential({','.join(cols)})").alias("check"),
-                    (F.col("violation_count") == 0).alias("pass"),
-                    "violation_count",
-                    "rows_checked",
-                    nullmap.alias("metrics"),
-                )
-            )
+            rows = self._dangling_rows(df, d, refs)
+            return self._row_count_verdicts(df, rows, f"referential({','.join(d['columns'])})")
 
         if kind == "unique":
             cols = d["columns"]
@@ -865,58 +784,7 @@ class CheckSuite:
             )
             # attribute duplicate keys to partitions via a semi join back
             dup_rows = df.join(dups.select(*cols), cols, "left_semi")
-            agg = dup_rows.groupBy(part).agg(F.count(F.lit(1)).alias("violation_count"))
-            totals = df.groupBy(part).agg(F.count(F.lit(1)).alias("rows_checked"))
-            return (
-                totals.join(agg, part, "left")
-                .fillna(0, subset=["violation_count"])
-                .select(
-                    F.col(part).alias("day"),
-                    F.lit(f"unique({','.join(cols)})").alias("check"),
-                    (F.col("violation_count") == 0).alias("pass"),
-                    "violation_count",
-                    "rows_checked",
-                    nullmap.alias("metrics"),
-                )
-            )
-
-        if kind == "referential_root":
-            group, order = d.get("group", "conv_id"), d.get("order", "turn_idx")
-            orphan = ri_ops.conversation_orphans(df, group, order)
-            rows = df.join(F.broadcast(orphan.select(group)), group, "left_semi")
-            agg = rows.groupBy(part).agg(F.count(F.lit(1)).alias("violation_count"))
-            totals = df.groupBy(part).agg(F.count(F.lit(1)).alias("rows_checked"))
-            return (
-                totals.join(agg, part, "left")
-                .fillna(0, subset=["violation_count"])
-                .select(
-                    F.col(part).alias("day"),
-                    F.lit(f"referential_root({group})").alias("check"),
-                    (F.col("violation_count") == 0).alias("pass"),
-                    "violation_count",
-                    "rows_checked",
-                    nullmap.alias("metrics"),
-                )
-            )
-
-        if kind == "ordering":
-            v = ord_ops.ordering_violations(
-                df, d.get("group", "conv_id"), d.get("order", "turn_idx"), d.get("monotone")
-            )
-            agg = v.groupBy(part).agg(F.count(F.lit(1)).alias("violation_count"))
-            totals = df.groupBy(part).agg(F.count(F.lit(1)).alias("rows_checked"))
-            return (
-                totals.join(agg, part, "left")
-                .fillna(0, subset=["violation_count"])
-                .select(
-                    F.col(part).alias("day"),
-                    F.lit(f"ordering({d.get('group', 'conv_id')})").alias("check"),
-                    (F.col("violation_count") == 0).alias("pass"),
-                    "violation_count",
-                    "rows_checked",
-                    nullmap.alias("metrics"),
-                )
-            )
+            return self._row_count_verdicts(df, dup_rows, f"unique({','.join(cols)})")
 
         if kind == "drift":
             value = F.expr(d.get("value", "length(text)"))
@@ -1022,13 +890,13 @@ class CheckSuite:
         k1, k2 = self.keys
         kind = d["check"]
 
-        def shape(rows: DataFrame, keyword: str, message) -> DataFrame:
+        def shape(rows: DataFrame, keyword: str, message: str) -> DataFrame:
             return rows.select(
                 F.col(k1).alias("conv_id"),
                 F.col(k2).cast("int").alias("turn_idx"),
-                F.lit(",".join(d.get("columns", [k1, k2]))).alias("column"),
+                F.lit(",".join(d["columns"])).alias("column"),
                 F.lit(keyword).alias("keyword"),
-                (F.lit(message) if isinstance(message, str) else message).alias("message"),
+                F.lit(message).alias("message"),
                 F.lit("#").alias("path"),
                 F.col(part).alias("day"),
             )
@@ -1037,21 +905,5 @@ class CheckSuite:
             rows = uniq_ops.duplicate_rows(df, d["columns"])
             return shape(rows, "unique", "duplicate key")
         if kind == "referential":
-            cols = d["columns"]
-            pcols = d.get("parent_columns", cols)
-            parent = self._resolve_parent(df, d, refs).select(
-                *[F.col(pc).alias(c) for pc, c in zip(pcols, cols)]
-            )
-            rows = ri_ops.orphans(df, parent, cols)
-            return shape(rows, "referential", "dangling reference")
-        if kind == "referential_root":
-            group = d.get("group", "conv_id")
-            orphan = ri_ops.conversation_orphans(df, group, d.get("order", "turn_idx"))
-            rows = df.join(F.broadcast(orphan.select(group)), group, "left_semi")
-            return shape(rows, "referential", "conversation has no root turn")
-        if kind == "ordering":
-            rows = ord_ops.ordering_violations(
-                df, d.get("group", "conv_id"), d.get("order", "turn_idx"), d.get("monotone")
-            )
-            return shape(rows, "ordering", F.col("ordering_issue"))
+            return shape(self._dangling_rows(df, d, refs), "referential", "dangling reference")
         return None  # drift/stats are partition-level: verdict-only

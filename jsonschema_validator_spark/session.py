@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 16g. In local mode the
+    driver JVM runs every task, and a heap limit near the host's memory
+    lets G1 grow the heap until the kernel's OOM killer stops the JVM."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{min(16 * 1024, total // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "jsonschema_validator_spark",
     master: str | None = None,
@@ -44,7 +55,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local-bench default 32m: a GB-scale single-file scan must split

@@ -13,10 +13,11 @@ Usage: python scripts/bench_once.py <cores> <warmups> <runs> <fixture>
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jsonschema_validator_spark.session import get_spark
 from jsonschema_validator_spark.plans import CheckSuite

@@ -6,7 +6,7 @@ markdown table with the sf1/sf0.1 ratio. At 10x rows a scale-sound
 plan should cost <= ~10x plus fixed overhead; the table flags any
 query whose ratio exceeds 20x (2x its sf-scaled expectation).
 
-Usage: PYTHONPATH=/root/repo python scripts/bench_sf1.py [out.md]
+Usage (from the repository root): PYTHONPATH=. python scripts/bench_sf1.py [out.md]
 """
 
 from __future__ import annotations

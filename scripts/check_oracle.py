@@ -6,10 +6,11 @@ floats rounded)."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -43,7 +44,7 @@ def normalize(rows, cols):
 
 
 def main(sf_dir: str, only: list[str]):
-    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=16)
+    spark = get_spark(app_name="oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

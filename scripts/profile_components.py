@@ -5,23 +5,20 @@ what fails to scale. Usage: python scripts/profile_components.py <cores>"""
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
-from jsonschema_validator_spark.operators import drift as drift_ops
-from jsonschema_validator_spark.operators import integrity as ri_ops
-from jsonschema_validator_spark.operators import ordering as ord_ops
-from jsonschema_validator_spark.operators import stats as stats_ops
-from jsonschema_validator_spark.operators import uniqueness as uniq_ops
 from jsonschema_validator_spark.plans import CheckSuite
 from jsonschema_validator_spark.session import get_spark
 from jsonschema_validator_spark.specs import transcripts_spec
 
-FIXTURE = "/root/repo/bench_data/transcripts_dirty_bench.parquet"
+FIXTURE = os.path.join(REPO, "bench_data", "transcripts_dirty_bench.parquet")
 
 
 def main(cores: int) -> None:
@@ -52,8 +49,7 @@ def main(cores: int) -> None:
         "scan_count": lambda: df.select("day").groupBy("day").count().write.format("noop").mode("overwrite").save(),
         "flags": flags_only,
         "unique": lambda: noop(suite._dataset_verdicts(df, spec["dataset"][0])),
-        "referential": lambda: noop(suite._dataset_verdicts(df, spec["dataset"][1])),
-        "ordering": lambda: noop(suite._dataset_verdicts(df, spec["dataset"][2])),
+        "key_window": lambda: suite._pass_b(df, "conv_id", "turn_idx", spec["dataset"][:3]),
         "drift": lambda: noop(suite._dataset_verdicts(df, spec["dataset"][3])),
         "stats": lambda: noop(suite._dataset_verdicts(df, spec["dataset"][4])),
         "full": lambda: noop(suite.verdicts(df)),

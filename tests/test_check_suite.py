@@ -167,8 +167,9 @@ def test_referential_cross_table_check(spark):
 
 def test_volume_and_freshness_checks(spark):
     """volume: tolerance band around the median partition count;
-    freshness: newest event within max_age_hours of as_of. Fused and
-    legacy paths agree."""
+    freshness: newest event within max_age_hours of as_of. A repeated
+    check can't join the fused scan and runs its standalone job, with the
+    same verdicts."""
     from jsonschema_validator_spark.plans import CheckSuite
 
     rows = []
@@ -195,15 +196,23 @@ def test_volume_and_freshness_checks(spark):
         ],
     }
     suite = CheckSuite(spec).build()
-    for fused in (True, False):
-        v = {(r.day, r.check): r for r in suite.verdicts(df, fused=fused).collect()}
-        assert v[("d1", "volume")]["pass"] and v[("d2", "volume")]["pass"]
-        assert not v[("d3", "volume")]["pass"]  # 10 vs median 98
-        # d1: newest 00:00, age 3.5h > 3h -> stale; d2: 2.5h ok; d3: 1.5h ok
-        assert not v[("d1", "freshness(ts)")]["pass"]
-        assert v[("d2", "freshness(ts)")]["pass"]
-        assert v[("d3", "freshness(ts)")]["pass"]
-        assert abs(v[("d2", "freshness(ts)")].metrics["age_hours"] - 2.5) < 1e-6
+    v = {(r.day, r.check): r for r in suite.verdicts(df).collect()}
+    assert v[("d1", "volume")]["pass"] and v[("d2", "volume")]["pass"]
+    assert not v[("d3", "volume")]["pass"]  # 10 vs median 98
+    # d1: newest 00:00, age 3.5h > 3h -> stale; d2: 2.5h ok; d3: 1.5h ok
+    assert not v[("d1", "freshness(ts)")]["pass"]
+    assert v[("d2", "freshness(ts)")]["pass"]
+    assert v[("d3", "freshness(ts)")]["pass"]
+    assert abs(v[("d2", "freshness(ts)")].metrics["age_hours"] - 2.5) < 1e-6
+
+    twice = CheckSuite({**spec, "dataset": spec["dataset"] * 2}).build()
+    standalone = twice.verdicts(df).collect()
+    assert len(standalone) == 2 * len(v)
+    for r in standalone:
+        want = v[(r.day, r.check)]
+        assert (r["pass"], r.violation_count, r.rows_checked, r.metrics) == (
+            want["pass"], want.violation_count, want.rows_checked, want.metrics
+        )
 
     # malformed freshness fails at compile
     import pytest as _pytest
@@ -215,9 +224,10 @@ def test_volume_and_freshness_checks(spark):
 
 def test_every_dataset_check_kind_executes(spark):
     """Guard the compile/runtime split for the whole DATASET_CHECKS set:
-    every kind accepted at compile must execute through fused verdicts,
-    legacy verdicts, and violations without error (the 'referential'
-    kind once compiled fine and exploded at runtime)."""
+    every kind accepted at compile must execute through verdicts and
+    violations without error (the 'referential' kind once compiled fine
+    and exploded at runtime), both in the fused passes and in the
+    standalone jobs of the shapes those passes can't absorb."""
     from jsonschema_validator_spark.plans import CheckSuite
     from jsonschema_validator_spark.plans.check_suite import DATASET_CHECKS
 
@@ -246,19 +256,22 @@ def test_every_dataset_check_kind_executes(spark):
     }
     assert set(config) == DATASET_CHECKS, set(config) ^ DATASET_CHECKS
 
-    for kind, d in config.items():
+    standalone = [
+        {"check": "unique", "columns": ["conv_id"]},
+        {"check": "drift", "value": "length(text)"},
+        *[config[k] for k in ("stats", "volume", "freshness") for _ in range(2)],
+    ]
+    for dataset in [[d] for d in config.values()] + [standalone]:
         suite = CheckSuite(
             {
-                "name": f"k_{kind}",
+                "name": "k",
                 "partition_by": "day",
                 "keys": ["conv_id", "turn_idx"],
                 "row": {},
-                "dataset": [d],
+                "dataset": dataset,
             }
         ).build()
-        for fused in (True, False):
-            rows = suite.verdicts(df, fused=fused, refs={"p": parent}).collect()
-            assert rows, (kind, fused)
+        assert suite.verdicts(df, refs={"p": parent}).collect(), dataset
         suite.violations(df, refs={"p": parent}).collect()
 
 

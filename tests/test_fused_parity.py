@@ -1,66 +1,46 @@
 """The fused two-pass verdict plan (one heavy scan + one key-window
-shuffle, driver-side shaping) must produce exactly the legacy
-one-job-per-check output — same (day, check) keys, same pass flags,
-same violation counts, same metrics (approx_distinct within HLL vs
-HyperLogLog++ tolerance; everything else to 1e-6)."""
+shuffle, driver-side shaping) must produce exactly what an independent
+oracle says the spec means: DuckDB SQL over the same parquet file
+(perfbench/oracle.py), written from the spec's JSON-Schema meaning rather
+than from the engine's compiled expressions. Every (day, check) verdict
+row and every violation row is compared; metrics to 1e-9 relative, except
+approx_distinct, which must fall within the HLL error bound of the exact
+distinct count."""
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 
 from jsonschema_validator_spark.fixtures import generate_transcripts
 from jsonschema_validator_spark.plans import CheckSuite
 from jsonschema_validator_spark.specs import transcripts_spec
+from perfbench import oracle
 
 
-@pytest.mark.parametrize("dirty", [False, True])
-def test_fused_violations_match_legacy(spark, dirty):
-    fx = generate_transcripts("tiny", dirty=dirty)
-    df = spark.createDataFrame(fx.table.to_pandas()).cache()
-    suite = CheckSuite(transcripts_spec()).build()
-
-    def key(r):
-        return (r.conv_id, r.turn_idx, r.column, r.keyword, r.message, r.path, r.day)
-
-    legacy = sorted(key(r) for r in suite.violations(df, fused=False).collect())
-    fused = sorted(key(r) for r in suite.violations(df, fused=True).collect())
-    assert legacy == fused, (len(legacy), len(fused))
+@pytest.fixture(scope="module")
+def suite():
+    return CheckSuite(transcripts_spec()).build()
 
 
-@pytest.mark.parametrize("dirty", [False, True])
-def test_fused_matches_legacy(spark, dirty):
-    fx = generate_transcripts("tiny", dirty=dirty)
-    df = spark.createDataFrame(fx.table.to_pandas()).cache()
-    suite = CheckSuite(transcripts_spec()).build()
+@pytest.fixture(scope="module", params=[False, True], ids=["clean", "dirty"])
+def fixture(request, spark, tmp_path_factory):
+    """(engine DataFrame, expected verdicts, expected violations) over one
+    parquet file of the tiny transcripts fixture."""
+    path = str(tmp_path_factory.mktemp("parity") / "transcripts.parquet")
+    pq.write_table(generate_transcripts("tiny", dirty=request.param).table, path)
+    want_v, want_x = oracle.transcripts_expected(oracle.connect(), path, transcripts_spec())
+    return spark.read.parquet(path), want_v, want_x
 
-    legacy = {(r.day, r.check): r for r in suite.verdicts(df, fused=False).collect()}
-    fused = {(r.day, r.check): r for r in suite.verdicts(df, fused=True).collect()}
-    assert set(legacy) == set(fused), set(legacy) ^ set(fused)
 
-    mismatches = []
-    for key, lr in legacy.items():
-        fr = fused[key]
-        if (lr["pass"], lr.violation_count, lr.rows_checked) != (
-            fr["pass"],
-            fr.violation_count,
-            fr.rows_checked,
-        ):
-            mismatches.append((key, "verdict", lr, fr))
-            continue
-        lm, fm = lr.metrics or {}, fr.metrics or {}
-        if set(lm) != set(fm):
-            mismatches.append((key, "metric keys", set(lm) ^ set(fm)))
-            continue
-        for mk in lm:
-            lv, fv = lm[mk], fm[mk]
-            if (lv is None) != (fv is None):
-                mismatches.append((key, mk, lv, fv))
-            elif lv is not None:
-                tol = (
-                    0.11 * max(abs(lv), 1.0)
-                    if mk == "approx_distinct"
-                    else 1e-6
-                )
-                if abs(lv - fv) > tol:
-                    mismatches.append((key, mk, lv, fv))
-    assert not mismatches, mismatches[:20]
+def test_verdicts_match_oracle(fixture, suite):
+    df, want_v, _ = fixture
+    diffs = oracle.verdict_diffs(suite.verdicts(df).collect(), want_v)
+    assert not diffs, (len(diffs), diffs[:20])
+
+
+def test_violations_match_oracle(fixture, suite):
+    df, _, want_x = fixture
+    got = oracle.normalise_violations(suite.violations(df).collect())
+    diffs = oracle.violation_diffs(got, want_x)
+    assert not diffs, (sum(got.values()), sum(want_x.values()), diffs)
