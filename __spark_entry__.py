@@ -1983,10 +1983,9 @@ def q_tree_depth_events(spark, sf_dir):
     window arithmetic (each user's r-th event points to r-1, every 5th
     branches to r-2 — a deterministic forest both engines replay), the
     engine resolves every node's depth and root, and the output is the
-    (depth, n_nodes) histogram joined with per-root branch stats
-    totals. The DuckDB oracle rebuilds the same forest and walks it
-    with a recursive CTE — an independent algorithm (sequential
-    descent) against the doubling implementation."""
+    (depth, n_nodes) histogram. The DuckDB oracle rebuilds the same
+    forest and walks it with a recursive CTE — an independent algorithm
+    (sequential descent) against the doubling implementation."""
     from pyspark.sql import Window
 
     from jsonschema_validator_spark.operators.trees import tree_paths

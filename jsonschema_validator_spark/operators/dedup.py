@@ -8,8 +8,7 @@
 - SimHash                           — 64-bit weighted hash, Hamming buckets
 
 All hashing is JVM-side (xxhash64/md5 built-ins, bit ops via Column
-algebra). The only per-batch Python is none — even MinHash signatures are
-computed with transform() over a literal array of hash-parameter pairs.
+algebra) except MinHash signatures: one Arrow-vectorized pandas UDF.
 At 100 TB: exact dedup shuffles one 16-byte hash per row; LSH shuffles
 (bands x rows) short keys; the quadratic verify only touches candidate
 buckets.
@@ -20,16 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# deterministic 64-bit mixers for minhash permutations: h_i(x) = a_i*x+b_i
-# (odd multipliers; wraparound multiplication is fine for min-ordering)
-_MERSENNE = (1 << 61) - 1
-
-
-def _hash_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
-    import random
-
-    r = random.Random(seed)
-    return [(r.randrange(1, _MERSENNE - 1) | 1, r.randrange(0, _MERSENNE - 1)) for _ in range(n)]
+from .fixpoint import fixpoint, release
 
 
 def content_hash(col: Column) -> Column:
@@ -301,37 +291,24 @@ def connected_components(
     dst: str = "doc_b",
     max_iter: int = 25,
     num_partitions: int | None = None,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph — the
     clustering step that turns pairwise dedup output into keep/drop
     decisions (component representative = MIN id, deterministic).
 
-    Two selectable algorithms, both pure join/agg (no driver-side
-    graph), both raising :class:`ComponentsNotConverged` rather than
-    returning silently-wrong labels if ``max_iter`` rounds elapse first:
+    Iterative min-label propagation, pure join/agg (no driver-side
+    graph): each round every node takes the minimum label among itself
+    and its neighbors, so a component of diameter D settles in D rounds
+    (near-dup clusters are dense and a few hops across). If
+    ``max_iter`` rounds elapse first it raises
+    :class:`ComponentsNotConverged` rather than return split labels.
+    Each label row carries whether it changed this round, so in
+    ``operators.fixpoint`` one ``max`` is both the convergence check
+    and the job that materializes the round.
 
-    - ``algorithm="label"`` — iterative min-label propagation: each
-      round every node takes the minimum label among itself and its
-      neighbors; O(component diameter) rounds. The right default for
-      dedup graphs, whose near-dup clusters are dense and a few hops
-      across.
-    - ``algorithm="star"`` — alternating large-star/small-star
-      (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-      each round rewires strictly-larger / smaller neighbors to the
-      neighborhood minimum, halving component height — O(log n) rounds
-      regardless of diameter. The variant for adversarial long-chain
-      graphs at 10^12 scale, where O(diameter) propagation (and its
-      per-round driver action) would be the bottleneck.
-
-    ``localCheckpoint`` truncates the lineage each round so the plan
-    doesn't grow with iterations. Input edges are undirected (either
-    orientation); output is one row per node appearing in any edge:
-    (id, component) with component = the smallest id reachable."""
-    if algorithm == "star":
-        return _components_star(edges, src, dst, max_iter, num_partitions)
-    if algorithm != "label":
-        raise ValueError(f"algorithm must be 'label' or 'star', got {algorithm!r}")
+    Input edges are undirected (either orientation); output is one row
+    per node appearing in any edge: (id, component) with component =
+    the smallest id reachable."""
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -341,130 +318,41 @@ def connected_components(
         # iterative jobs pay per-round fixed cost per shuffle partition;
         # size to the edge volume, not the session default
         e = e.repartition(num_partitions, "a")
-    e = e.localCheckpoint(eager=True)
-    labels = (
-        e.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=False)
+    labels = e.select(F.col("a").alias("id")).distinct().select(
+        "id", F.col("id").alias("component"), F.lit(True).alias("changed")
     )
-    changed = 0
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame, row) -> DataFrame | None:
+        if not row[0]:
+            return None
         # neighbor minimum: for each node, the smallest label among its
         # neighbors; then fold in the node's own label
         nbr_min = (
-            e.join(labels.withColumnRenamed("id", "b").withColumnRenamed("component", "nc"), "b")
+            e.join(labels.select(F.col("id").alias("b"), F.col("component").alias("nc")), "b")
             .groupBy("a")
             .agg(F.min("nc").alias("nbr_component"))
             .withColumnRenamed("a", "id")
         )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))).alias(
-                    "component"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        new = F.least(F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component")))
+        return labels.join(nbr_min, "id", "left").select(
+            "id", new.alias("component"), (new != F.col("component")).alias("changed")
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
+
+    try:
+        labels = fixpoint(
+            labels,
+            [F.max("changed")],
+            step,
+            max_iter,
+            lambda *_: ComponentsNotConverged(
+                f"min-label propagation did not converge in {max_iter} rounds "
+                "(component diameter exceeds max_iter) — raise max_iter"
+            ),
         )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise ComponentsNotConverged(
-            f"min-label propagation did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter) — raise max_iter or use "
-            "algorithm='star' (O(log n) rounds)"
-        )
-    return labels
-
-
-def _components_star(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iter: int,
-    num_partitions: int | None,
-) -> DataFrame:
-    """Large-star/small-star connected components: O(log n) rounds on
-    ANY graph shape (chains included), each round two join+groupBy
-    passes over the current edge set.
-
-    - large-star: every node u computes m = min(u, N(u)) and rewires
-      each strictly-larger neighbor v > u to m.
-    - small-star: with edges oriented u > v, every node u rewires its
-      smaller neighbors (and itself) to m = min neighbor.
-
-    The star graph (every node → its component min) is the fixed point;
-    convergence is detected with one agg action per round (count +
-    order-independent hash-sum of the edge set — monotone algorithm, so
-    an unchanged pair means the fixed point was reached)."""
-
-    def _canon(e: DataFrame) -> DataFrame:
-        out = e.filter(F.col("u") != F.col("v")).distinct()
-        if num_partitions:
-            out = out.repartition(num_partitions, "u")
-        return out.localCheckpoint(eager=True)
-
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # node universe up front: self-loop-only nodes (a doc paired with
-    # itself) must still appear in the output as singleton components,
-    # but the star rounds drop self-loops
-    nodes = (
-        raw.select(F.col("u").alias("id"))
-        .unionByName(raw.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = _canon(raw)
-    prev = (-1, None)
-    for _ in range(max_iter):
-        # large-star over both orientations
-        both = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = both.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        e = _canon(
-            both.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # small-star over edges oriented u > v
-        oriented = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        joined = oriented.join(mins, "u")
-        e = _canon(
-            joined.filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins.select("u", F.col("m").alias("v")))
-        )
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # order-independent set fingerprint; bit_xor can't overflow
-            # under ANSI (sum of xxhash64 values can)
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).first()
-        cur = (row["n"], row["h"])
-        if cur == prev:
-            # star fixed point: every edge is (node, component-min);
-            # nodes with no surviving edge are their own component
-            star = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-            return nodes.join(star, "id", "left").select(
-                "id", F.coalesce("component", "id").alias("component")
-            )
-        prev = cur
-    raise ComponentsNotConverged(
-        f"large-star/small-star did not converge in {max_iter} rounds — "
-        "O(log n) expected; raise max_iter"
-    )
+    finally:
+        release(e)
+    return labels.select("id", "component")
 
 
 def ngram_overlap(

@@ -14,14 +14,17 @@ ONE groupBy(src, dst) — O(distinct edges), not O(rows). Each power
 step is one join of the rank vector against the edge relation plus a
 groupBy(dst): shuffles are on node keys, map-side combinable, and the
 rank vector never leaves the cluster (no collect; dangling mass is a
-single scalar aggregate per step, O(1) to the driver per iteration —
-`iters` is small and fixed by contract).
+single scalar aggregate per step, O(1) to the driver per iteration).
+The steps run in operators/fixpoint: that aggregate is also the job
+that checkpoints the step, so lineage does not grow with `iters`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import fixpoint
 
 
 def pagerank(
@@ -56,35 +59,40 @@ def pagerank(
     trans = e.join(out, "__s").select(
         "__s", "__d", (F.col("__w") / F.col("__out")).alias("__p")
     )
+    # every node, flagged dangling unless it has an out-edge: a round's
+    # probe is then the dangling mass its power step redistributes
     nodes = (
-        e.select(F.col("__s").alias("node"))
-        .union(e.select(F.col("__d").alias("node")))
-        .distinct()
+        e.select(F.col("__s").alias("node"), F.lit(False).alias("__dangling"))
+        .union(e.select(F.col("__d").alias("node"), F.lit(True).alias("__dangling")))
+        .groupBy("node")
+        .agg(F.min("__dangling").alias("__dangling"))
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
         return edges.sparkSession.createDataFrame([], "node string, rank double")
     base = (1.0 - damping) / n_nodes
-    pr = nodes.withColumn("__pr", F.lit(1.0 / n_nodes))
-    has_out = out.select(F.col("__s").alias("node")).distinct()
-    for _ in range(iters):
-        dangling = (
-            pr.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("__pr"), F.lit(0.0)).alias("m"))
-            .collect()[0]["m"]
-        )
+
+    def step(pr: DataFrame, row) -> DataFrame:
         inflow = (
             pr.join(trans, pr["node"] == trans["__s"])
             .groupBy(F.col("__d").alias("node"))
             .agg(F.sum(F.col("__pr") * F.col("__p")).alias("__in"))
         )
-        pr = nodes.join(inflow, "node", "left").select(
+        return pr.join(inflow, "node", "left").select(
             "node",
             (
                 F.lit(base)
-                + damping * (F.coalesce(F.col("__in"), F.lit(0.0)) + dangling / n_nodes)
+                + damping * (F.coalesce(F.col("__in"), F.lit(0.0)) + row["m"] / n_nodes)
             ).alias("__pr"),
+            "__dangling",
         )
+
+    pr = fixpoint(
+        nodes.withColumn("__pr", F.lit(1.0 / n_nodes)),
+        [F.coalesce(F.sum(F.when(F.col("__dangling"), F.col("__pr"))), F.lit(0.0)).alias("m")],
+        step,
+        iters,
+    )
     return pr.select("node", F.round("__pr", 6).alias("rank"))
 
 

@@ -27,10 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_META_SCHEMA = (
-    "doc_id long, n_bytes long, digest string"
-)
-
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, kind string, width int, height int, "
     "n_frames int, feature array<float>"

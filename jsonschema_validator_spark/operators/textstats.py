@@ -15,12 +15,6 @@ _LANG_MARKERS = {
     "de": ["der", "die", "und", "das", "ist"],
 }
 
-_EN_STOPWORDS = [
-    "the", "and", "of", "to", "a", "in", "is", "it", "that", "for",
-    "on", "with", "as", "at", "by", "an", "be", "this", "are", "or",
-]
-
-
 def token_count(text: Column) -> Column:
     """Whitespace token count (matches string_split-on-space oracles)."""
     return F.size(F.split(text, " "))
@@ -41,13 +35,6 @@ def punct_ratio(text: Column) -> Column:
     return F.length(stripped) / F.greatest(F.length(text), F.lit(1))
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or _EN_STOPWORDS
-    toks = F.split(F.lower(text), " ")
-    hits = F.size(F.filter(toks, lambda t: t.isin(sw)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def mean_word_length(text: Column) -> Column:
     toks = F.split(text, " ")
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -56,8 +43,8 @@ def mean_word_length(text: Column) -> Column:
 
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: penalize extreme length,
-    high punctuation, low stopword incidence — the usual cheap pre-filter
-    before expensive dedup/training stages."""
+    high punctuation and implausible mean word length — the usual cheap
+    pre-filter before expensive dedup/training stages."""
     length_ok = (F.length(text) >= 20) & (F.length(text) <= 50_000)
     punct_ok = punct_ratio(text) < 0.3
     words_ok = (mean_word_length(text) >= 2) & (mean_word_length(text) <= 15)

@@ -12,10 +12,10 @@ Scale shape — the whole point of this module: a naive one-step walk
 (depth += 1 per join) costs O(max_depth) shuffles, unusable at
 thousand-turn agent sessions; pointer doubling squares the hop length
 each round (ptr' = ptr.ptr, dist' = dist + ptr.dist), so a depth-D
-forest resolves in ceil(log2 D) self-joins — the same O(log n)-rounds
-discipline as operators/dedup.connected_components (large-star /
-small-star). Each round shuffles only (id, ptr, dist, root?) — payload
-never rides along.
+forest resolves in ceil(log2 D) self-joins. The rounds run in
+operators/fixpoint, the loop connected components and PageRank share.
+Each round shuffles only (id, ptr, dist, root?) — payload never rides
+along.
 
 Cycles (corrupt parent pointers) cannot terminate the recursion; after
 ``max_iters`` rounds (two doubling steps per round — supports depth
@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import fixpoint
 
 
 class TreeNotConverged(RuntimeError):
@@ -67,50 +69,31 @@ def tree_paths(
         .alias("dist"),
         F.when(F.col(parent_col).isNull(), F.col(id_col)).alias("root"),
         F.lit(False).alias("__orphan"),
-    ).localCheckpoint(eager=False)
-    # ONE driver action per round: the checkpoint is LAZY, so the
-    # convergence/orphan agg below is the job that computes the round's
-    # join, persists the checkpoint blocks as a side effect of that
-    # same job, and returns the counts — the eager-checkpoint + agg
-    # formulation paid two scheduled jobs per round and that fixed
-    # overhead (not shuffle volume) dominated at bench scale (11.7s ->
-    # see BENCH; VERDICT r4 #3). Failure paths (orphans / no
-    # convergence) pay extra sample-collect jobs, but only on failure.
-    for it in range(max_iters + 1):
-        row = state.agg(
-            F.sum(F.col("root").isNull().cast("long")).alias("p"),
-            F.sum(F.col("__orphan").cast("long")).alias("o"),
-        ).first()
+    )
+
+    pending = F.col("root").isNull()
+
+    def sample(state: DataFrame, cond) -> list:
+        return [r["id"] for r in state.filter(cond).select("id").limit(5).collect()]
+
+    def step(state: DataFrame, row) -> DataFrame | None:
         if row["o"]:
-            sample = [
-                r["id"]
-                for r in state.filter("__orphan").select("id").limit(5).collect()
-            ]
-            raise TreeNotConverged(
-                f"parent pointers reference missing ids (orphans), e.g. {sample}"
-            )
-        if not row["p"]:
-            break
-        if it == max_iters:
-            sample = [
-                r["id"]
-                for r in state.filter(F.col("root").isNull())
-                .select("id")
-                .limit(5)
-                .collect()
-            ]
-            raise TreeNotConverged(
-                f"nodes unresolved after {max_iters} quadrupling rounds "
-                f"(cycle or depth > 4**{max_iters}), e.g. {sample}"
-            )
-        # TWO doubling steps per materialization (pointer QUADRUPLING):
-        # composing the self-join twice before the checkpoint halves
-        # the number of scheduled jobs — at bench scale the per-job
-        # fixed cost, not shuffle volume, is what the loop pays for —
-        # while the lineage within a round stays bounded at two joins.
-        state = _double_step(_double_step(state)).localCheckpoint(
-            eager=False
+            ids = sample(state, "__orphan")
+            raise TreeNotConverged(f"parent pointers reference missing ids (orphans), e.g. {ids}")
+        # TWO doubling steps per round (pointer QUADRUPLING) halve the
+        # rounds, and per-round fixed cost, not shuffle volume, is what
+        # the loop pays for; a round's lineage stays two joins deep
+        return _double_step(_double_step(state)) if row["p"] else None
+
+    def exhausted(state: DataFrame, row) -> Exception:
+        return TreeNotConverged(
+            f"nodes unresolved after {max_iters} quadrupling rounds "
+            f"(cycle or depth > 4**{max_iters}), e.g. {sample(state, pending)}"
         )
+
+    # the pending and orphan counts are each round's one job
+    probe = [F.sum(pending.cast("long")).alias("p"), F.sum(F.col("__orphan").cast("long")).alias("o")]
+    state = fixpoint(state, probe, step, max_iters, exhausted)
     return state.select("id", F.col("dist").alias("depth"), "root")
 
 
@@ -163,8 +146,9 @@ def linearize_best_path(
     thousands of small trees) is what this shape removes. Same
     per-conversation-fits-in-a-worker assumption every conversation
     operator in this package already makes (a path is bounded by the
-    context length, not the corpus). NULL scores never win unless the
-    whole tree is unscored (coalesced below every real score).
+    context length, not the corpus). NULL and NaN scores never win
+    unless no leaf of the tree has a real score (both map below every
+    real score, so ties among them go to the smallest id).
 
     Output: (root, leaf_id, n_turns, path) with path the '->'-joined id
     chain root -> leaf.
@@ -176,12 +160,11 @@ def linearize_best_path(
     # one lazy checkpoint computes it once instead of three times
     df = df.localCheckpoint(eager=False)
     paths = tree_paths(df, id_col, parent_col, max_iters=max_iters)
+    lowest = F.lit(float("-inf"))
     nodes = df.select(
         F.col(id_col).alias("id"),
         F.col(parent_col).alias("parent"),
-        F.coalesce(F.col(score_col).cast("double"), F.lit(float("-inf"))).alias(
-            "score"
-        ),
+        F.nanvl(F.coalesce(F.col(score_col).cast("double"), lowest), lowest).alias("score"),
     ).join(paths.select("id", "root"), "id")
     children = df.filter(F.col(parent_col).isNotNull()).select(
         F.col(parent_col).alias("id"), F.lit(True).alias("__has_child")

@@ -55,11 +55,13 @@ def main(sf_dir: str, only: list[str]):
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        # a 300-query session accumulates every query's .cache() /
-        # localCheckpoint blocks; without per-query cleanup the JVM
-        # eventually GC-thrashes (observed: a 2.9s-in-isolation query
-        # taking 807s mid-sweep). Queries never share cached state, so
-        # dropping it between queries changes nothing but memory.
+        # a 300-query session accumulates every query's .cache()
+        # blocks; without per-query cleanup the JVM eventually
+        # GC-thrashes (observed: a 2.9s-in-isolation query taking 807s
+        # mid-sweep). Queries never share cached state, so dropping it
+        # between queries changes nothing but memory. clearCache() does
+        # not reach localCheckpoint blocks: the iterative operators
+        # release those themselves (operators/fixpoint).
         spark.catalog.clearCache()
         t0 = time.time()
         try:

@@ -302,11 +302,10 @@ def test_text_profile_matches_columns(spark):
         assert pq_ == r.q_col, (r.doc_id, r.p.quality, r.q_col)
 
 
-@pytest.mark.parametrize("algorithm", ["label", "star"])
-def test_connected_components_vs_union_find(spark, algorithm):
-    """Both component algorithms must agree with a driver-side
-    union-find on a deterministic random-ish graph including a long
-    chain (multi-hop propagation) and isolated pairs."""
+def test_connected_components_vs_union_find(spark):
+    """Min-label propagation must agree with a driver-side union-find
+    on a deterministic random-ish graph including a long chain
+    (multi-hop propagation) and isolated pairs."""
     from jsonschema_validator_spark.operators.dedup import connected_components
 
     edges = [(i, i + 1) for i in range(0, 12)]          # chain 0..12
@@ -335,16 +334,16 @@ def test_connected_components_vs_union_find(spark, algorithm):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {
         r.id: r.component
-        for r in connected_components(df, algorithm=algorithm).collect()
+        for r in connected_components(df).collect()
     }
     assert got == expected
 
 
-def test_components_long_chain_star_beats_label(spark):
+def test_components_long_chain_needs_diameter_rounds(spark):
     """Adversarial diameter: on a 40-node chain, min-label propagation
-    at max_iter=5 must now RAISE (round 2 returned silently-split
-    labels), while large-star/small-star converges within the same
-    budget — O(log n) rounds vs O(diameter)."""
+    at max_iter=8 must RAISE rather than return silently-split labels;
+    with one round more than the diameter it converges to one
+    component (the 41st round is the one that changes no label)."""
     from jsonschema_validator_spark.operators.dedup import (
         ComponentsNotConverged,
         connected_components,
@@ -353,10 +352,10 @@ def test_components_long_chain_star_beats_label(spark):
     edges = [(i, i + 1) for i in range(40)]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     with pytest.raises(ComponentsNotConverged):
-        connected_components(df, max_iter=8, algorithm="label")
+        connected_components(df, max_iter=8)
     got = {
         r.id: r.component
-        for r in connected_components(df, max_iter=8, algorithm="star").collect()
+        for r in connected_components(df, max_iter=41).collect()
     }
     assert got == {i: 0 for i in range(41)}
 

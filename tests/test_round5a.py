@@ -288,3 +288,16 @@ def test_linearize_packed_extraction_matches_contract(spark):
     got = {r["root"]: r for r in linearize_best_path(df, "id", "parent", "score").collect()}
     assert got[1]["leaf_id"] == 2 and got[1]["path"] == "1->2"
     assert got[20]["leaf_id"] == 21 and got[20]["path"] == "20->21"
+
+
+@pytest.mark.parametrize("nan_first", [True, False])
+def test_linearize_nan_leaf_never_wins(spark, nan_first):
+    """A NaN-scored leaf ranks with the unscored ones: the 0.5 leaf wins
+    whichever row comes first."""
+    from jsonschema_validator_spark.operators.trees import linearize_best_path
+
+    leaves = [(2, 1, float("nan")), (3, 1, 0.5)]
+    rows = [(1, None, None)] + (leaves if nan_first else leaves[::-1])
+    df = spark.createDataFrame(rows, "id long, parent long, score double").coalesce(1)
+    (got,) = linearize_best_path(df, "id", "parent", "score").collect()
+    assert got["leaf_id"] == 3 and got["path"] == "1->3"
