@@ -233,14 +233,6 @@ class Schema:
     def _row_df(self, value) -> DataFrame:
         return self.spark.createDataFrame([(json.dumps(value),)], "j string")
 
-    @staticmethod
-    def _tmp_prefix(df: DataFrame) -> str:
-        """Temp-column prefix guaranteed not to prefix-collide with any
-        existing column, so ``drop(*tmp)`` can never eat user data (a
-        fixed ``__jsv_`` prefix would silently replace-and-drop a user
-        column of the same name)."""
-        return _tmp_prefix(df)
-
     def _bind(self, df: DataFrame, json_col: str):
         props = self.raw.get("properties", {}) if isinstance(self.raw, dict) else {}
         return _bind_variant(df, json_col, list(props))

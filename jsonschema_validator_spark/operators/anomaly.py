@@ -190,8 +190,7 @@ def robust_outliers(
     exists): pass 1 computes per-group medians, pass 2 the deviation
     medians; both are O(groups) relations broadcast back onto the rows,
     so the row set itself is scanned twice and shuffled never. At
-    100 TB swap the exact percentile for approx_percentile the same way
-    column_stats documents.
+    100 TB swap the exact percentile for approx_percentile.
 
     Zero-MAD groups (>= 50% of values identical) flag only rows that
     DIFFER from the median (score = +inf conceptually); rows AT the

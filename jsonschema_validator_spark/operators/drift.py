@@ -31,6 +31,29 @@ def bucketize(value: Column, lo: float, hi: float, buckets: int) -> Column:
     return F.when(raw.isNotNull(), clamped).cast("int")
 
 
+def value_bounds(df: DataFrame, items: list[tuple[Column, float | None, float | None]]) -> list[tuple[float, float]]:
+    """Resolve the (lo, hi) bucket-grid bounds of each (value, lo, hi):
+    a missing bound is the value's min or max over df, taken for every
+    item in ONE aggregate job (none runs when every bound is given). An
+    all-NULL value gets the grid (0, 1)."""
+    need = [k for k, (_, lo, hi) in enumerate(items) if lo is None or hi is None]
+    row = None
+    if need:
+        row = df.agg(
+            *[f(items[k][0].cast("double")) for k in need for f in (F.min, F.max)]
+        ).first()
+    out = []
+    for k, (_, lo, hi) in enumerate(items):
+        if k in need:
+            i = need.index(k)
+            lo = row[2 * i] if lo is None else lo
+            hi = row[2 * i + 1] if hi is None else hi
+            if lo is None or hi is None:  # all-null value
+                lo, hi = 0.0, 1.0
+        out.append((float(lo), float(hi)))
+    return out
+
+
 def value_histogram(
     df: DataFrame,
     value: Column | str,
@@ -42,15 +65,8 @@ def value_histogram(
     """(partition, bucket, n) with the SAME bucket grid for every
     partition (shared bucketing is what makes KS/PSI comparable)."""
     value = F.col(value) if isinstance(value, str) else value
-    if lo is None or hi is None:
-        row = df.agg(
-            F.min(value.cast("double")).alias("lo"), F.max(value.cast("double")).alias("hi")
-        ).first()
-        lo = row["lo"] if lo is None else lo
-        hi = row["hi"] if hi is None else hi
-        if lo is None:  # all-null column
-            lo, hi = 0.0, 1.0
-    b = bucketize(value, float(lo), float(hi), buckets)
+    [(lo, hi)] = value_bounds(df, [(value, lo, hi)])
+    b = bucketize(value, lo, hi, buckets)
     return (
         df.select(F.col(partition_col).alias("part"), b.alias("bucket"))
         .filter(F.col("bucket").isNotNull())
@@ -121,10 +137,8 @@ def ks_psi_from_histogram(
     baseline_partition: str | None = None,
     eps: float = 1e-6,
 ) -> DataFrame:
-    """KS + PSI from a pre-computed (part, bucket, n) histogram — the
-    fused-pass entry point: CheckSuite computes one day x bucket relation
-    for flags/stats/drift in a single scan and feeds it here, so drift
-    costs no extra pass over the input."""
+    """KS + PSI from a pre-computed (part, bucket, n) histogram, such as
+    the summed per-batch histogram sink of streaming/validate.py."""
     dense = _pin_dense_histogram(hist, buckets)
 
     # baseline distribution per bucket (dense already covers the grid)
@@ -226,6 +240,17 @@ def drift_matrix(
     )
 
 
+class MissingBaselineError(ValueError):
+    """A drift check names a baseline partition that holds no non-NULL
+    value to compare against (absent from the input, or all-NULL)."""
+
+    def __init__(self, partition):
+        self.partition = partition
+        super().__init__(
+            f"drift baseline partition {partition!r} has no non-NULL value in the input"
+        )
+
+
 def ks_psi_local(
     hist_rows,
     buckets: int,
@@ -237,11 +262,14 @@ def ks_psi_local(
     CheckSuite plan: the histogram is O(partitions x buckets) (tiny even
     at 10^12 input turns), so shipping it to the driver and skipping a
     dozen micro-stages is strictly cheaper than the distributed version.
-    Returns {part: (n_rows, n_base, ks_stat, psi)}."""
+    Returns {part: (n_rows, n_base, ks_stat, psi)}. Raises
+    MissingBaselineError when baseline_partition has no counted value."""
     import numpy as np
 
     parts = sorted({r[0] for r in hist_rows})
     idx = {p: i for i, p in enumerate(parts)}
+    if baseline_partition is not None and baseline_partition not in idx:
+        raise MissingBaselineError(baseline_partition)
     m = np.zeros((len(parts), buckets), dtype=np.float64)
     for p, b, n in hist_rows:
         m[idx[p], int(b)] += n

@@ -814,17 +814,19 @@ def knn_label_agreement(
             qlabs = pdf["__lab"].to_numpy()
             agrees = []
             for i in range(len(pdf)):
+                # no neighbor, or a NULL label (NaN once a nullable
+                # numeric column reaches pandas): AVG over no equality
+                if kk <= 0 or pd.isna(qlabs[i]):
+                    agrees.append(None)
+                    continue
                 s = S[i].copy()
                 s[b_ids == qids[i]] = -np.inf  # exclude self
                 kth = np.partition(s, n - kk)[n - kk]
                 cand = np.flatnonzero(s >= kth)
                 # (sim DESC, id ASC) exactly, including k-th-place ties
                 cand = cand[np.lexsort((b_ids[cand], -s[cand]))][:kk]
-                if qlabs[i] is None:
-                    agrees.append(None)  # AVG over all-NULL equality
-                    continue
                 nlabs = b_labs[cand]
-                valid = np.array([x is not None for x in nlabs])
+                valid = ~pd.isna(nlabs)
                 if not valid.any():
                     agrees.append(None)
                     continue

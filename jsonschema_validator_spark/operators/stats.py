@@ -1,7 +1,9 @@
 """Per-column statistics in ONE aggregation pass — the table-scale
 generalization of required/minimum/maximum/minLength (SURVEY.md §2.4):
-null-rate, approximate distinct (HyperLogLog++), min/max/mean, length
-stats. One scan, one shuffle, all columns (SURVEY.md §4.1 fused pass)."""
+null-rate, approximate distinct (Datasketches HLL), min/max/mean, length
+stats, as mergeable partials (``stats_partial_aggs``) and their merge
+(``stats_merge_aggs``). One scan, one shuffle, all columns (SURVEY.md
+§4.1 fused pass: CheckSuite pass A)."""
 
 from __future__ import annotations
 
@@ -10,46 +12,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType, T.DecimalType)
-
-
-def column_stats(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    partition_col: str | None = None,
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Wide per-partition stats: one groupBy(partition) pass emitting, for
-    every column c: c__null_rate, c__approx_distinct, and (numeric)
-    c__min/c__max/c__mean or (string) c__len_min/c__len_max/c__len_mean.
-
-    Returns one row per partition (plus rows_checked)."""
-    columns = columns or [c for c in df.columns if c != partition_col]
-    aggs = [F.count(F.lit(1)).alias("rows_checked")]
-    for c in columns:
-        dtype = df.schema[c].dataType
-        col = F.col(c)
-        aggs.append(F.avg(col.isNull().cast("double")).alias(f"{c}__null_rate"))
-        aggs.append(F.approx_count_distinct(c, rsd).cast("double").alias(f"{c}__approx_distinct"))
-        if isinstance(dtype, NUMERIC):
-            aggs += [
-                F.min(col).cast("double").alias(f"{c}__min"),
-                F.max(col).cast("double").alias(f"{c}__max"),
-                F.avg(col).cast("double").alias(f"{c}__mean"),
-            ]
-        elif isinstance(dtype, T.StringType):
-            ln = F.length(col)
-            aggs += [
-                F.min(ln).cast("double").alias(f"{c}__len_min"),
-                F.max(ln).cast("double").alias(f"{c}__len_max"),
-                F.avg(ln).cast("double").alias(f"{c}__len_mean"),
-            ]
-        elif isinstance(dtype, (T.TimestampType, T.DateType)):
-            aggs += [
-                F.min(col).cast("double").alias(f"{c}__min"),
-                F.max(col).cast("double").alias(f"{c}__max"),
-            ]
-    grouped = df.groupBy(partition_col) if partition_col else df.groupBy()
-    return grouped.agg(*aggs)
 
 
 def _hll_input(col, dtype):
@@ -69,7 +31,7 @@ def _hll_input(col, dtype):
 
 def stats_partial_aggs(schema: T.StructType, columns: list[str]) -> list:
     """Decomposable (mergeable) per-column stat partials for a fine-grained
-    groupBy — the map-side half of column_stats. Distinct counts use
+    groupBy — the map-side half of the per-column stats. Distinct counts use
     Datasketches HLL (hll_sketch_agg), whose sketches MERGE across groups,
     unlike approx_count_distinct whose final estimate can't re-aggregate.
     Pair with stats_merge_aggs at the coarser (partition-level) groupBy."""
@@ -99,7 +61,7 @@ def stats_partial_aggs(schema: T.StructType, columns: list[str]) -> list:
 
 
 def stats_merge_aggs(schema: T.StructType, columns: list[str]) -> list:
-    """Merge stats_partial_aggs partials to the column_stats output schema
+    """Merge stats_partial_aggs partials to the per-column stats
     (c__null_rate, c__approx_distinct, c__min/max/mean, c__len_*). The
     caller's agg must also provide sum(__n) -> rows_checked."""
     aggs = []

@@ -209,28 +209,3 @@ def linearize_best_path(
     return packed.mapInPandas(
         walk, "root long, leaf_id long, n_turns int, path string"
     )
-
-
-def branch_stats(
-    df: DataFrame, id_col: str, parent_col: str
-) -> DataFrame:
-    """Per-root tree-shape rollup: n_nodes, max_depth, n_leaves,
-    n_branch_points (nodes with >= 2 children — where the agent
-    actually forked). One tree_paths resolution + one fan-out count;
-    both aggregations are partial+final (skew-immune)."""
-    df = df.localCheckpoint(eager=False)
-    paths = tree_paths(df, id_col, parent_col)
-    fanout = (
-        df.filter(F.col(parent_col).isNotNull())
-        .groupBy(F.col(parent_col).alias("id"))
-        .agg(F.count(F.lit(1)).alias("__children"))
-    )
-    nodes = paths.join(fanout, "id", "left").withColumn(
-        "__children", F.coalesce("__children", F.lit(0))
-    )
-    return nodes.groupBy("root").agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.max("depth").alias("max_depth"),
-        F.sum((F.col("__children") == 0).cast("long")).alias("n_leaves"),
-        F.sum((F.col("__children") >= 2).cast("long")).alias("n_branch_points"),
-    )

@@ -135,10 +135,47 @@ def _freshness_rows(per_part: dict, d: dict) -> list[tuple]:
     return out
 
 
-DATASET_CHECKS = {
-    "unique", "referential_root", "referential", "ordering", "drift", "stats",
-    "volume", "freshness",
-}
+# partition-level checks: all run in verdict pass A and have no per-row
+# violations
+PARTITION_CHECKS = {"drift", "stats", "volume", "freshness"}
+DATASET_CHECKS = {"unique", "referential_root", "referential", "ordering", *PARTITION_CHECKS}
+
+
+def _standalone(d: dict) -> bool:
+    """Key checks neither pass can absorb, run as their own row-count
+    jobs: referential (a parent-table join) and unique on other than two
+    columns."""
+    return d["check"] == "referential" or (d["check"] == "unique" and len(d["columns"]) != 2)
+
+
+def _drift_value(d: dict) -> str:
+    return d.get("value", "length(text)")
+
+
+def _drift_rows(hist: list[tuple], buckets: int, d: dict) -> list[tuple]:
+    """Drift verdict rows from a collected (partition, bucket, n)
+    histogram of non-NULL values. The KS decision rule defaults to the
+    two-sample asymptotic critical value at ks_alpha — sample-size-aware,
+    so a 10^6-row partition isn't judged by a flat threshold tuned for
+    10^3 rows; an explicit ks_threshold overrides. Below min_rows the
+    check abstains (passes): PSI/KS over B buckets are noise when n ~ B
+    (E[PSI] ~ B/n); metrics are still reported."""
+    ks_t = d.get("ks_threshold")
+    alpha = d.get("ks_alpha", 0.01)
+    psi_t = d.get("psi_threshold", 0.2)
+    min_rows = d.get("min_rows", 200)
+    label = f"drift({_drift_value(d)})"
+    out = []
+    stats = drift_ops.ks_psi_local(hist, buckets, d.get("baseline"))
+    for day, (n_rows, n_base, ks, psi) in stats.items():
+        crit = (
+            ks_t
+            if ks_t is not None
+            else drift_ops.ks_critical_value(max(n_rows, 1), max(n_base, 1), alpha)
+        )
+        ok = bool(n_rows < min_rows or (ks <= crit and psi <= psi_t))
+        out.append((day, label, ok, 0, n_rows, {"ks_stat": ks, "psi": psi, "ks_crit": float(crit)}))
+    return out
 
 
 def _column_of(path: str) -> str:
@@ -249,23 +286,21 @@ class CheckSuite:
         The whole suite runs as TWO passes over the input (SURVEY.md
         §4.1/§4.2) —
 
-        - pass A: ONE scan computing every row-check flag, the drift
-          bucket, and all stats partials in a single
-          groupBy(partition, bucket); flags/drift/stats verdicts all
-          derive from that tiny day x bucket relation (Catalyst's
-          ReuseExchange runs the scan + shuffle once for all branches).
-          Distinct counts stay decomposable via hll_sketch_agg /
-          hll_union_agg (mergeable HLL sketches, unlike
-          approx_count_distinct whose final estimate can't re-merge).
+        - pass A: ONE scan and ONE groupBy(partition) computing every
+          row-check flag count, one count per bucket of every drift
+          check, every stats partial and the newest value of every
+          freshness column; flag/drift/stats/volume/freshness verdicts
+          all derive from the collected O(partitions) wide rows. Drift
+          checks without lo/hi bounds get them from one min/max job
+          first. Distinct counts use mergeable HLL sketches
+          (hll_sketch_agg / hll_union_agg).
         - pass B: ONE window over (group ORDER BY order) — a single
           shuffle of the key columns, no text — computing uniqueness,
           referential-root and ordering flags per row, then one
           day-level aggregate.
 
-        Checks whose spec shape can't fuse (drift without fixed lo/hi
-        bounds or with a baseline partition, unique on other than two
-        columns, referential, a repeated drift/stats/volume/freshness
-        check) fall back to their standalone single-pass jobs.
+        Only `referential` (a parent-table join) and `unique` on other
+        than two columns run their own row-count jobs.
 
         refs: name -> DataFrame for cross-table checks (the
         `referential` dataset check's parent side); a parent not found
@@ -273,25 +308,7 @@ class CheckSuite:
         (e.g. 'parquet:/path' or 'iceberg:cat.db.tbl')."""
         self._require_built()
         dataset = list(self.spec.get("dataset", []))
-        out: list[DataFrame] = []
-        fused: set[int] = set()
-
-        # --- select what pass A / pass B can absorb -----------------------
-        drift_is = [
-            i
-            for i, d in enumerate(dataset)
-            if d["check"] == "drift"
-            and d.get("lo") is not None
-            and d.get("hi") is not None
-            and d.get("baseline") is None
-        ]
-        driftA = dataset[drift_is[0]] if len(drift_is) == 1 else None
-        stats_is = [i for i, d in enumerate(dataset) if d["check"] == "stats"]
-        statsA = dataset[stats_is[0]] if len(stats_is) == 1 else None
-        vol_is = [i for i, d in enumerate(dataset) if d["check"] == "volume"]
-        volA = dataset[vol_is[0]] if len(vol_is) == 1 else None
-        fresh_is = [i for i, d in enumerate(dataset) if d["check"] == "freshness"]
-        freshA = dataset[fresh_is[0]] if len(fresh_is) == 1 else None
+        partition_level = [d for d in dataset if d["check"] in PARTITION_CHECKS]
 
         # --- run pass A and the pass B jobs concurrently ------------------
         # (independent scans: A reads payload columns, B only key columns;
@@ -300,37 +317,25 @@ class CheckSuite:
 
         flags = self._flag_cols(df)
         tasks = []
-        if flags or driftA is not None or statsA is not None or volA is not None or freshA is not None:
-            tasks.append(lambda: self._pass_a(df, flags, driftA, statsA, volA, freshA))
-            if driftA is not None:
-                fused.add(drift_is[0])
-            if statsA is not None:
-                fused.add(stats_is[0])
-            if volA is not None:
-                fused.add(vol_is[0])
-            if freshA is not None:
-                fused.add(fresh_is[0])
+        if flags or partition_level:
+            tasks.append(lambda: self._pass_a(df, flags, partition_level))
         for (g, o), idxs in self._key_groups(dataset).items():
             tasks.append(
                 lambda g=g, o=o, idxs=idxs: self._pass_b(
                     df, g, o, [dataset[i] for i in idxs]
                 )
             )
-            fused.update(idxs)
 
-        local_rows: list[tuple] = []
+        out: list[DataFrame] = []
         if tasks:
+            local_rows: list[tuple] = []
             with ThreadPoolExecutor(len(tasks)) as ex:
                 for rows in ex.map(lambda t: t(), tasks):
                     local_rows.extend(rows)
             out.append(
                 df.sparkSession.createDataFrame(local_rows, schema=VERDICT_ROW_SCHEMA)
             )
-
-        # --- anything not fusable keeps its standalone job ----------------
-        for i, d in enumerate(dataset):
-            if i not in fused:
-                out.append(self._dataset_verdicts(df, d, refs))
+        out += [self._dataset_verdicts(df, d, refs) for d in dataset if _standalone(d)]
         if not out:
             raise UninitialisedPlanError("empty check suite")
         res = out[0]
@@ -338,153 +343,116 @@ class CheckSuite:
             res = res.unionByName(o)
         return res
 
-    def _pass_a(
-        self,
-        df: DataFrame,
-        flags,
-        driftA: dict | None,
-        statsA: dict | None,
-        volA: dict | None = None,
-        freshA: dict | None = None,
-    ) -> list[tuple]:
-        """One heavy scan: flags + drift bucket + stats partials aggregated
-        by (partition, bucket) in ONE distributed job. The day-level merge
-        is collected to the driver (O(partitions) wide rows, plus an
-        O(partitions x buckets) count histogram for drift) and shaped into
-        verdict row tuples in plain Python — the many tiny consumer
+    def _pass_a(self, df: DataFrame, flags, checks: list[dict]) -> list[tuple]:
+        """One heavy scan: flags, per-bucket drift counts, freshness maxima
+        and stats partials aggregated by partition in ONE distributed job.
+        The O(partitions) wide rows are collected to the driver and shaped
+        into verdict row tuples in plain Python — the many tiny consumer
         branches each cost zero Spark stages this way. Why not leave the
         branches distributed: Catalyst's per-branch column pruning
         specializes each consumer's partial agg, exchanges stop being
         equal, ReuseExchange never fires, and the heavy scan runs once PER
         CONSUMER (measured: 12 parquet scans for this suite). HLL sketches
         are merged distributed (hll_union_agg) BEFORE the collect, so only
-        final estimates reach the driver."""
+        final estimates reach the driver.
+
+        checks: the suite's drift/stats/volume/freshness checks."""
         part = self.partition_by
-        buckets = int(driftA.get("buckets", 20)) if driftA is not None else 0
+        drifts = [d for d in checks if d["check"] == "drift"]
+        bounds = tuple(
+            drift_ops.value_bounds(
+                df, [(F.expr(_drift_value(d)), d.get("lo"), d.get("hi")) for d in drifts]
+            )
+        )
+        grids = [(int(d.get("buckets", 20)), lo, hi) for d, (lo, hi) in zip(drifts, bounds)]
+        stats_of = {
+            id(d): d.get("columns") or [c for c in df.columns if c != part]
+            for d in checks
+            if d["check"] == "stats"
+        }
+        stats_columns = list(dict.fromkeys(c for cols in stats_of.values() for c in cols))
+        ts_columns = list(dict.fromkeys(d["ts"] for d in checks if d["check"] == "freshness"))
 
         # Column construction is driver-serial py4j chatter (~100s of
-        # round trips); memoize by schema — compile-once / run-many
-        memo_key = ("passA", df.schema.json())
+        # round trips); memoize by schema, checks and drift bounds —
+        # compile-once / run-many
+        memo_key = ("passA", df.schema.json(), len(flags), repr(checks), bounds)
         cached = self._expr_memo.get(memo_key)
         if cached is None:
-            group_keys = [part]
             sel_cols = [F.col(part)]
-            if driftA is not None:
-                b = drift_ops.bucketize(
-                    F.expr(driftA.get("value", "length(text)")),
-                    float(driftA["lo"]),
-                    float(driftA["hi"]),
-                    buckets,
-                )
-                sel_cols.append(b.alias("__bucket"))
-                group_keys.append("__bucket")
-
             sel_cols += [(~c).cast("long").alias(f"f{i}") for i, (_, c) in enumerate(flags)]
+            sel_cols += [
+                drift_ops.bucketize(F.expr(_drift_value(d)), lo, hi, b).alias(f"__b{k}")
+                for k, (d, (b, lo, hi)) in enumerate(zip(drifts, grids))
+            ]
+            sel_cols += [F.col(c).alias(f"__ts{j}") for j, c in enumerate(ts_columns)]
+            sel_cols += [F.col(c) for c in stats_columns]
 
-            if freshA is not None:
-                sel_cols.append(F.col(freshA["ts"]).alias("__fresh_ts"))
-
-            stats_columns: list[str] = []
-            if statsA is not None:
-                stats_columns = statsA.get("columns") or [c for c in df.columns if c != part]
-                sel_cols += [F.col(c) for c in stats_columns]
-
+            # partials by partition, then their merge: the merge runs on
+            # the same hash partitioning, so it adds no shuffle
             aggs = [F.count(F.lit(1)).alias("__n")]
-            aggs += [F.sum(f"f{i}").alias(f"s{i}") for i in range(len(flags))]
-            if freshA is not None:
-                aggs.append(F.max("__fresh_ts").alias("__fresh_max"))
-            if statsA is not None:
-                aggs += stats_ops.stats_partial_aggs(df.schema, stats_columns)
-
             day_aggs = [F.sum("__n").alias("rows_checked")]
-            day_aggs += [F.sum(f"s{i}").alias(f"s{i}") for i in range(len(flags))]
-            if freshA is not None:
-                day_aggs.append(F.max("__fresh_max").alias("__fresh_max"))
-            if statsA is not None:
-                day_aggs += stats_ops.stats_merge_aggs(df.schema, stats_columns)
+            sums = [f"s{i}" for i in range(len(flags))]
+            aggs += [F.sum(f"f{i}").alias(s) for i, s in enumerate(sums)]
+            for k, (b, _, _) in enumerate(grids):
+                hk = [f"__h{k}_{j}" for j in range(b)]
+                aggs += [F.count_if(F.col(f"__b{k}") == j).alias(h) for j, h in enumerate(hk)]
+                sums += hk
+            day_aggs += [F.sum(s).alias(s) for s in sums]
+            aggs += [F.max(f"__ts{j}").alias(f"__ts{j}") for j in range(len(ts_columns))]
+            day_aggs += [F.max(f"__ts{j}").alias(f"__ts{j}") for j in range(len(ts_columns))]
+            aggs += stats_ops.stats_partial_aggs(df.schema, stats_columns)
+            day_aggs += stats_ops.stats_merge_aggs(df.schema, stats_columns)
 
-            cached = (group_keys, sel_cols, aggs, day_aggs, stats_columns)
+            cached = (sel_cols, aggs, day_aggs)
             self._expr_memo[memo_key] = cached
-        group_keys, sel_cols, aggs, day_aggs, stats_columns = cached
+        sel_cols, aggs, day_aggs = cached
 
-        dayb = df.select(*sel_cols).groupBy(*group_keys).agg(*aggs)
-        if driftA is not None:
-            # two consumers (day-level merge + drift histogram): persist
-            # the tiny (partition, bucket) relation so the scan runs once
-            dayb = dayb.persist()
-
-        wide_rows = dayb.groupBy(part).agg(*day_aggs).collect()  # heavy job
-
-        hist_rows = None
-        if driftA is not None:
-            hist_rows = (
-                dayb.filter(F.col("__bucket").isNotNull())
-                .select(part, "__bucket", "__n")
-                .collect()  # reads the persisted relation, no rescan
-            )
-            dayb.unpersist(blocking=False)
+        wide_rows = (
+            df.select(*sel_cols).groupBy(part).agg(*aggs).groupBy(part).agg(*day_aggs).collect()
+        )
 
         # ---- driver-side shaping (tiny) ----------------------------------
         out: list[tuple] = []
+        metrics: dict = {}  # (day, stats column) -> metrics map
         for r in wide_rows:
             day, rows_checked = r[part], r["rows_checked"]
             for i, (ce, _) in enumerate(flags):
                 viol = r[f"s{i}"] or 0
                 out.append((day, self._check_name(ce), viol == 0, viol, rows_checked, None))
-            if statsA is not None:
-                by_col: dict[str, dict[str, float | None]] = {c: {} for c in stats_columns}
-                for name, val in r.asDict().items():
-                    if "__" in name:
-                        col, metric = name.split("__", 1)
-                        if col in by_col:
-                            # keep NULL-valued metric keys (as the
-                            # standalone stats path's create_map does)
-                            by_col[col][metric] = None if val is None else float(val)
-                for c in stats_columns:
-                    out.append((day, f"stats:{c}", True, 0, rows_checked, by_col[c]))
-        if volA is not None:
-            out.extend(
-                _volume_rows(
-                    {r[self.partition_by]: r["rows_checked"] for r in wide_rows}, volA
+            for name, val in r.asDict().items():
+                col, _, metric = name.partition("__")
+                if metric and col in stats_columns:
+                    # keep NULL-valued metric keys
+                    metrics.setdefault((day, col), {})[metric] = (
+                        None if val is None else float(val)
+                    )
+        counts = {r[part]: r["rows_checked"] for r in wide_rows}
+        k = 0
+        for d in checks:
+            kind = d["check"]
+            if kind == "stats":
+                out += [
+                    (day, f"stats:{c}", True, 0, n, metrics[(day, c)])
+                    for day, n in counts.items()
+                    for c in stats_of[id(d)]
+                ]
+            elif kind == "volume":
+                out += _volume_rows(counts, d)
+            elif kind == "freshness":
+                j = ts_columns.index(d["ts"])
+                out += _freshness_rows(
+                    {r[part]: (r["rows_checked"], r[f"__ts{j}"]) for r in wide_rows}, d
                 )
-            )
-        if freshA is not None:
-            out.extend(
-                _freshness_rows(
-                    {
-                        r[self.partition_by]: (r["rows_checked"], r["__fresh_max"])
-                        for r in wide_rows
-                    },
-                    freshA,
-                )
-            )
-        if driftA is not None:
-            stats = drift_ops.ks_psi_local(
-                [(r[part], r["__bucket"], r["__n"]) for r in hist_rows],
-                buckets,
-                driftA.get("baseline"),
-            )
-            ks_t = driftA.get("ks_threshold")
-            alpha = driftA.get("ks_alpha", 0.01)
-            psi_t = driftA.get("psi_threshold", 0.2)
-            min_rows = driftA.get("min_rows", 200)
-            label = f"drift({driftA.get('value', 'length(text)')})"
-            for day, (n_rows, n_base, ks, psi) in stats.items():
-                # default KS decision rule: the two-sample asymptotic
-                # critical value at ks_alpha — sample-size-aware, so a
-                # 10^6-row partition isn't judged by a flat threshold
-                # tuned for 10^3 rows. An explicit ks_threshold in the
-                # spec overrides (the round-2 flat behavior).
-                crit = (
-                    ks_t
-                    if ks_t is not None
-                    else drift_ops.ks_critical_value(max(n_rows, 1), max(n_base, 1), alpha)
-                )
-                ok = bool(n_rows < min_rows or (ks <= crit and psi <= psi_t))
-                out.append(
-                    (day, label, ok, 0, n_rows,
-                     {"ks_stat": ks, "psi": psi, "ks_crit": float(crit)})
-                )
+            else:
+                hist = [
+                    (r[part], j, r[f"__h{k}_{j}"])
+                    for r in wide_rows
+                    for j in range(grids[k][0])
+                    if r[f"__h{k}_{j}"]
+                ]
+                out += _drift_rows(hist, grids[k][0], d)
+                k += 1
         return out
 
     @staticmethod
@@ -628,16 +596,9 @@ class CheckSuite:
             out.append(self._explode_structs(df, structs))
 
         dataset = list(self.spec.get("dataset", []))
-        fused: set[int] = set()
         for (g, o), idxs in self._key_groups(dataset).items():
             out.append(self._fused_key_violations(df, g, o, [dataset[i] for i in idxs]))
-            fused.update(idxs)
-        for i, d in enumerate(dataset):
-            if i in fused:
-                continue
-            v = self._dataset_violations(df, d, refs)
-            if v is not None:
-                out.append(v)
+        out += [self._dataset_violations(df, d, refs) for d in dataset if _standalone(d)]
         if not out:
             # a suite of only partition-level checks (drift/stats/volume/
             # freshness) has no per-row violations — empty, not an error
@@ -768,127 +729,21 @@ class CheckSuite:
         )
 
     def _dataset_verdicts(self, df: DataFrame, d: dict, refs: dict | None = None) -> DataFrame:
-        part = self.partition_by
-        kind = d["check"]
-
-        if kind == "referential":
+        """The row-count verdict job of a standalone (``_standalone``)
+        check: referential, or unique on other than two columns."""
+        if d["check"] == "referential":
             rows = self._dangling_rows(df, d, refs)
             return self._row_count_verdicts(df, rows, f"referential({','.join(d['columns'])})")
 
-        if kind == "unique":
-            cols = d["columns"]
-            dups = (
-                uniq_ops.salted_duplicate_keys(df, cols, d.get("salt_buckets", 64))
-                if d.get("salted")
-                else uniq_ops.duplicate_keys(df, cols)
-            )
-            # attribute duplicate keys to partitions via a semi join back
-            dup_rows = df.join(dups.select(*cols), cols, "left_semi")
-            return self._row_count_verdicts(df, dup_rows, f"unique({','.join(cols)})")
+        cols = d["columns"]
+        # attribute duplicate keys to partitions via a semi join back
+        dups = uniq_ops.duplicate_keys(df, cols)
+        dup_rows = df.join(dups.select(*cols), cols, "left_semi")
+        return self._row_count_verdicts(df, dup_rows, f"unique({','.join(cols)})")
 
-        if kind == "drift":
-            value = F.expr(d.get("value", "length(text)"))
-            res = drift_ops.ks_psi(
-                df, value, part, d.get("buckets", 20),
-                baseline_partition=d.get("baseline"),
-                lo=d.get("lo"), hi=d.get("hi"),
-            )
-            return self._drift_verdict_rows(res, d)
-
-        if kind == "stats":
-            wide = stats_ops.column_stats(df, d.get("columns"), part)
-            return self._stats_verdict_rows(wide)
-
-        if kind == "volume":
-            counts = {
-                r[part]: r["n"]
-                for r in df.groupBy(part).agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            return df.sparkSession.createDataFrame(
-                _volume_rows(counts, d), schema=VERDICT_ROW_SCHEMA
-            )
-
-        if kind == "freshness":
-            rows = df.groupBy(part).agg(
-                F.count(F.lit(1)).alias("n"), F.max(d["ts"]).alias("mx")
-            ).collect()
-            return df.sparkSession.createDataFrame(
-                _freshness_rows({r[part]: (r["n"], r["mx"]) for r in rows}, d),
-                schema=VERDICT_ROW_SCHEMA,
-            )
-
-        raise MalformedSchemaError("#/dataset", kind, "unknown dataset check")
-
-    def _drift_verdict_rows(self, res: DataFrame, d: dict) -> DataFrame:
-        """Shape ks_psi output (part, n_rows, n_base, ks_stat, psi) into
-        verdict rows. KS threshold defaults to the sample-size-aware
-        asymptotic critical value c(alpha)*sqrt((n+m)/(n*m)) computed as
-        a Column from the per-partition sample sizes; an explicit
-        ks_threshold in the spec overrides with the flat rule."""
-        import math as _math
-
-        ks_t = d.get("ks_threshold")
-        alpha = d.get("ks_alpha", 0.01)
-        psi_t = d.get("psi_threshold", 0.2)
-        # abstain (pass) below min_rows: PSI/KS over B buckets are pure
-        # noise when n ~ B (E[PSI] ~ B/n); metrics still reported
-        min_rows = d.get("min_rows", 200)
-        if ks_t is not None:
-            crit = F.lit(float(ks_t))
-        else:
-            c = _math.sqrt(-0.5 * _math.log(alpha / 2.0))
-            n = F.greatest(F.col("n_rows"), F.lit(1)).cast("double")
-            m = F.greatest(F.col("n_base"), F.lit(1)).cast("double")
-            crit = F.lit(c) * F.sqrt((n + m) / (n * m))
-        return res.select(
-            F.col("part").alias("day"),
-            F.lit(f"drift({d.get('value', 'length(text)')})").alias("check"),
-            (
-                (F.col("n_rows") < min_rows)
-                | ((F.col("ks_stat") <= crit) & (F.col("psi") <= psi_t))
-            ).alias("pass"),
-            F.lit(0).cast("long").alias("violation_count"),
-            F.col("n_rows").alias("rows_checked"),
-            F.create_map(
-                F.lit("ks_stat"), F.col("ks_stat"),
-                F.lit("psi"), F.col("psi"),
-                F.lit("ks_crit"), crit,
-            ).alias("metrics"),
-        )
-
-    def _stats_verdict_rows(self, wide: DataFrame) -> DataFrame:
-        """Shape a wide per-partition stats row (col__metric columns) into
-        one verdict row per column with a metrics map."""
-        part = self.partition_by
-        metric_cols = [c for c in wide.columns if c not in (part, "rows_checked")]
-        by_col: dict[str, list[str]] = {}
-        for mc in metric_cols:
-            col, metric = mc.split("__", 1)
-            by_col.setdefault(col, []).append(mc)
-        frames = []
-        for col, mcs in by_col.items():
-            kv = []
-            for mc in mcs:
-                kv += [F.lit(mc.split("__", 1)[1]), F.col(mc)]
-            frames.append(
-                wide.select(
-                    F.col(part).alias("day"),
-                    F.lit(f"stats:{col}").alias("check"),
-                    F.lit(True).alias("pass"),
-                    F.lit(0).cast("long").alias("violation_count"),
-                    F.col("rows_checked"),
-                    F.create_map(*kv).alias("metrics"),
-                )
-            )
-        res = frames[0]
-        for fr in frames[1:]:
-            res = res.unionByName(fr)
-        return res
-
-    def _dataset_violations(self, df: DataFrame, d: dict, refs: dict | None = None) -> DataFrame | None:
+    def _dataset_violations(self, df: DataFrame, d: dict, refs: dict | None = None) -> DataFrame:
         part = self.partition_by
         k1, k2 = self.keys
-        kind = d["check"]
 
         def shape(rows: DataFrame, keyword: str, message: str) -> DataFrame:
             return rows.select(
@@ -901,9 +756,6 @@ class CheckSuite:
                 F.col(part).alias("day"),
             )
 
-        if kind == "unique":
-            rows = uniq_ops.duplicate_rows(df, d["columns"])
-            return shape(rows, "unique", "duplicate key")
-        if kind == "referential":
+        if d["check"] == "referential":
             return shape(self._dangling_rows(df, d, refs), "referential", "dangling reference")
-        return None  # drift/stats are partition-level: verdict-only
+        return shape(uniq_ops.duplicate_rows(df, d["columns"]), "unique", "duplicate key")

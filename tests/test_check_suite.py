@@ -168,8 +168,7 @@ def test_referential_cross_table_check(spark):
 def test_volume_and_freshness_checks(spark):
     """volume: tolerance band around the median partition count;
     freshness: newest event within max_age_hours of as_of. A repeated
-    check can't join the fused scan and runs its standalone job, with the
-    same verdicts."""
+    check gives the same verdicts again."""
     from jsonschema_validator_spark.plans import CheckSuite
 
     rows = []
@@ -226,8 +225,7 @@ def test_every_dataset_check_kind_executes(spark):
     """Guard the compile/runtime split for the whole DATASET_CHECKS set:
     every kind accepted at compile must execute through verdicts and
     violations without error (the 'referential' kind once compiled fine
-    and exploded at runtime), both in the fused passes and in the
-    standalone jobs of the shapes those passes can't absorb."""
+    and exploded at runtime), alone and all in one suite."""
     from jsonschema_validator_spark.plans import CheckSuite
     from jsonschema_validator_spark.plans.check_suite import DATASET_CHECKS
 
@@ -256,12 +254,7 @@ def test_every_dataset_check_kind_executes(spark):
     }
     assert set(config) == DATASET_CHECKS, set(config) ^ DATASET_CHECKS
 
-    standalone = [
-        {"check": "unique", "columns": ["conv_id"]},
-        {"check": "drift", "value": "length(text)"},
-        *[config[k] for k in ("stats", "volume", "freshness") for _ in range(2)],
-    ]
-    for dataset in [[d] for d in config.values()] + [standalone]:
+    for dataset in [[d] for d in config.values()] + [list(config.values())]:
         suite = CheckSuite(
             {
                 "name": "k",
@@ -273,6 +266,96 @@ def test_every_dataset_check_kind_executes(spark):
         ).build()
         assert suite.verdicts(df, refs={"p": parent}).collect(), dataset
         suite.violations(df, refs={"p": parent}).collect()
+
+
+def _partition_df(spark):
+    """Days d1 and d2 alike; d3 with only short texts and later turn
+    numbers; one NULL text on d1; a day d4 whose texts are all NULL."""
+    rows = []
+    for day, span, first in [("d1", 20, 0), ("d2", 20, 0), ("d3", 10, 40)]:
+        for i in range(40):
+            text = "x" * (5 + (i * 7) % span)
+            rows.append((day, f"c{day}{i % 8}", first + i, text, f"2026-01-05 0{i % 4}:00:00"))
+    rows.append(("d1", "cnull", 99, None, "2026-01-05 00:00:00"))
+    rows += [("d4", f"c4{i}", i, None, "2026-01-06 00:00:00") for i in range(3)]
+    return spark.createDataFrame(
+        rows, "day string, conv_id string, turn_idx int, text string, ts_s string"
+    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
+
+
+def _suite_rows(dataset):
+    return CheckSuite(
+        {"name": "p", "partition_by": "day", "keys": ["conv_id", "turn_idx"], "row": {}, "dataset": dataset}
+    ).build()
+
+
+def test_partition_checks_in_any_number_and_shape(spark):
+    """Drift without bounds, drift against a baseline partition, two drift
+    checks with different buckets, and repeated stats/volume/freshness
+    checks all run in one suite: each check's rows equal its single-check
+    suite's, and both drift shapes equal the distributed drift.ks_psi
+    reference (ks_stat, psi, rows_checked, pass) to 1e-9."""
+    from collections import Counter
+
+    from jsonschema_validator_spark.operators.drift import ks_critical_value, ks_psi
+
+    df = _partition_df(spark)
+    unbounded = {"check": "drift", "value": "length(text)", "buckets": 10, "min_rows": 0}
+    baseline = {"check": "drift", "value": "turn_idx", "buckets": 7, "baseline": "d2", "min_rows": 0}
+    volume = {"check": "volume", "tolerance": 0.5}
+    fresh = {"check": "freshness", "ts": "ts", "as_of": "2026-01-06T01:00:00", "max_age_hours": 20.0}
+    checks = [
+        unbounded,
+        baseline,
+        {"check": "stats", "columns": ["conv_id", "text"]},
+        {"check": "stats", "columns": ["text", "turn_idx"]},
+        volume, volume, fresh, fresh,
+        {"check": "unique", "columns": ["conv_id"]},
+    ]
+
+    def shaped(r):
+        m = r.metrics and {k: round(v, 9) if v is not None else None for k, v in r.metrics.items()}
+        return (r["pass"], r.violation_count, r.rows_checked, m)
+
+    want, n_want = {}, Counter()
+    for d in checks:
+        for r in _suite_rows([d]).verdicts(df).collect():
+            want[(r.day, r.check)] = shaped(r)
+            n_want[(r.day, r.check)] += 1
+    got = _suite_rows(checks).verdicts(df).collect()
+    assert Counter((r.day, r.check) for r in got) == n_want
+    for r in got:
+        assert shaped(r) == want[(r.day, r.check)], (r.day, r.check)
+
+    by_key = {(r.day, r.check): r for r in got}
+    assert ("d4", "drift(length(text))") not in by_key  # no non-NULL value
+    assert by_key[("d4", "volume")].rows_checked == 3
+    assert by_key[("d1", "drift(length(text))")].rows_checked == 40  # non-NULL only
+    for d in (unbounded, baseline):
+        ref = ks_psi(df, F.expr(d["value"]), "day", d["buckets"], baseline_partition=d.get("baseline")).collect()
+        assert len(ref) == sum(1 for k in by_key if k[1] == f"drift({d['value']})")
+        passes = set()
+        for x in ref:
+            r = by_key[(x.part, f"drift({d['value']})")]
+            ok = x.ks_stat <= ks_critical_value(max(x.n_rows, 1), max(x.n_base, 1)) and x.psi <= 0.2
+            assert r.rows_checked == x.n_rows and r["pass"] == ok, x.part
+            assert abs(r.metrics["ks_stat"] - x.ks_stat) <= 1e-9, x.part
+            assert abs(r.metrics["psi"] - x.psi) <= 1e-9, x.part
+            passes.add(ok)
+        assert passes == {True, False}, d
+
+
+@pytest.mark.parametrize("bounds", [{}, {"lo": 0.0, "hi": 60.0}], ids=["unbounded", "bounded"])
+def test_drift_missing_baseline_is_named(spark, bounds):
+    """A drift baseline partition with no non-NULL value raises the named
+    MissingBaselineError, naming the partition."""
+    from jsonschema_validator_spark.operators.drift import MissingBaselineError
+
+    df = _partition_df(spark)
+    for part in ("nope", "d4"):
+        suite = _suite_rows([{"check": "drift", "value": "length(text)", "baseline": part, **bounds}])
+        with pytest.raises(MissingBaselineError, match=repr(part)):
+            suite.verdicts(df)
 
 
 def test_spec_level_format_assertion(spark):

@@ -82,3 +82,28 @@ def test_knn_label_agreement_flags_planted_mislabels(spark):
     out = {r["label"]: r for r in knn_label_agreement(df, "vec_id", "embedding", "label", k=5).collect()}
     assert out[0]["mean_agreement"] > 0.9 and out[0]["n_suspect"] == 0
     assert out[1]["n_suspect"] == 3  # exactly the planted mislabels
+
+
+def test_knn_label_agreement_null_labels_stay_null(spark):
+    """A nullable int label column reaches pandas as float64 with NaN for
+    NULL: a NULL-label query point gets NULL agreement (not 0.0), and
+    NULL-label neighbors are left out of the other points' mean. A
+    group without any agreement has NULL suspects, as SQL's SUM gives."""
+    from jsonschema_validator_spark.operators.similarity import knn_label_agreement
+
+    rows = [(i, [10.0 + i * 0.01, 0.0], 0) for i in range(6)]
+    rows += [(i, [10.0 + i * 0.01, 0.0], None) for i in range(6, 8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
+    out = {r["label"]: r for r in knn_label_agreement(df, "vec_id", "embedding", "label", k=7).collect()}
+    assert (out[0]["n_points"], out[0]["mean_agreement"], out[0]["n_suspect"]) == (6, 1.0, 0)
+    assert (out[None]["n_points"], out[None]["mean_agreement"], out[None]["n_suspect"]) == (2, None, None)
+
+
+def test_knn_label_agreement_one_row_corpus(spark):
+    """A one-row corpus has no neighbor (k clamps to 0): its agreement is
+    NULL rather than an executor error."""
+    from jsonschema_validator_spark.operators.similarity import knn_label_agreement
+
+    df = spark.createDataFrame([(1, [1.0, 0.0], 3)], "vec_id long, embedding array<double>, label int")
+    out = knn_label_agreement(df, "vec_id", "embedding", "label", k=5).collect()
+    assert [(r["label"], r["n_points"], r["mean_agreement"], r["n_suspect"]) for r in out] == [(3, 1, None, None)]
