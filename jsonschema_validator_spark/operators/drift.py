@@ -31,7 +31,9 @@ def bucketize(value: Column, lo: float, hi: float, buckets: int) -> Column:
     return F.when(raw.isNotNull(), clamped).cast("int")
 
 
-def value_bounds(df: DataFrame, items: list[tuple[Column, float | None, float | None]]) -> list[tuple[float, float]]:
+def value_bounds(
+    df: DataFrame, items: list[tuple[Column, float | None, float | None]]
+) -> list[tuple[float, float]]:
     """Resolve the (lo, hi) bucket-grid bounds of each (value, lo, hi):
     a missing bound is the value's min or max over df, taken for every
     item in ONE aggregate job (none runs when every bound is given). An
@@ -65,8 +67,15 @@ def value_histogram(
     """(partition, bucket, n) with the SAME bucket grid for every
     partition (shared bucketing is what makes KS/PSI comparable)."""
     value = F.col(value) if isinstance(value, str) else value
-    [(lo, hi)] = value_bounds(df, [(value, lo, hi)])
-    b = bucketize(value, lo, hi, buckets)
+    if lo is None or hi is None:
+        row = df.agg(
+            F.min(value.cast("double")).alias("lo"), F.max(value.cast("double")).alias("hi")
+        ).first()
+        lo = row["lo"] if lo is None else lo
+        hi = row["hi"] if hi is None else hi
+        if lo is None:  # all-null column
+            lo, hi = 0.0, 1.0
+    b = bucketize(value, float(lo), float(hi), buckets)
     return (
         df.select(F.col(partition_col).alias("part"), b.alias("bucket"))
         .filter(F.col("bucket").isNotNull())

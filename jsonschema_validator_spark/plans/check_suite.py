@@ -359,10 +359,8 @@ class CheckSuite:
         checks: the suite's drift/stats/volume/freshness checks."""
         part = self.partition_by
         drifts = [d for d in checks if d["check"] == "drift"]
-        bounds = tuple(
-            drift_ops.value_bounds(
-                df, [(F.expr(_drift_value(d)), d.get("lo"), d.get("hi")) for d in drifts]
-            )
+        bounds = drift_ops.value_bounds(
+            df, [(F.expr(_drift_value(d)), d.get("lo"), d.get("hi")) for d in drifts]
         )
         grids = [(int(d.get("buckets", 20)), lo, hi) for d, (lo, hi) in zip(drifts, bounds)]
         stats_of = {
@@ -374,17 +372,14 @@ class CheckSuite:
         ts_columns = list(dict.fromkeys(d["ts"] for d in checks if d["check"] == "freshness"))
 
         # Column construction is driver-serial py4j chatter (~100s of
-        # round trips); memoize by schema, checks and drift bounds —
-        # compile-once / run-many
-        memo_key = ("passA", df.schema.json(), len(flags), repr(checks), bounds)
+        # round trips); memoize by schema — compile-once / run-many. The
+        # bucket columns depend on the drift bounds, which may come from
+        # the data, so they are built per call and never memoized.
+        memo_key = ("passA", df.schema.json())
         cached = self._expr_memo.get(memo_key)
         if cached is None:
             sel_cols = [F.col(part)]
             sel_cols += [(~c).cast("long").alias(f"f{i}") for i, (_, c) in enumerate(flags)]
-            sel_cols += [
-                drift_ops.bucketize(F.expr(_drift_value(d)), lo, hi, b).alias(f"__b{k}")
-                for k, (d, (b, lo, hi)) in enumerate(zip(drifts, grids))
-            ]
             sel_cols += [F.col(c).alias(f"__ts{j}") for j, c in enumerate(ts_columns)]
             sel_cols += [F.col(c) for c in stats_columns]
 
@@ -407,9 +402,13 @@ class CheckSuite:
             cached = (sel_cols, aggs, day_aggs)
             self._expr_memo[memo_key] = cached
         sel_cols, aggs, day_aggs = cached
+        bucket_cols = [
+            drift_ops.bucketize(F.expr(_drift_value(d)), lo, hi, b).alias(f"__b{k}")
+            for k, (d, (b, lo, hi)) in enumerate(zip(drifts, grids))
+        ]
 
         wide_rows = (
-            df.select(*sel_cols).groupBy(part).agg(*aggs).groupBy(part).agg(*day_aggs).collect()
+            df.select(*sel_cols, *bucket_cols).groupBy(part).agg(*aggs).groupBy(part).agg(*day_aggs).collect()
         )
 
         # ---- driver-side shaping (tiny) ----------------------------------

@@ -254,7 +254,10 @@ def test_every_dataset_check_kind_executes(spark):
     }
     assert set(config) == DATASET_CHECKS, set(config) ^ DATASET_CHECKS
 
-    for dataset in [[d] for d in config.values()] + [list(config.values())]:
+    # the combined suite also holds a one-column unique, which runs as its
+    # own row-count job beside the two passes
+    combined = [*config.values(), {"check": "unique", "columns": ["conv_id"]}]
+    for dataset in [[d] for d in config.values()] + [combined]:
         suite = CheckSuite(
             {
                 "name": "k",
@@ -297,7 +300,9 @@ def test_partition_checks_in_any_number_and_shape(spark):
     reference (ks_stat, psi, rows_checked, pass) to 1e-9."""
     from collections import Counter
 
-    from jsonschema_validator_spark.operators.drift import ks_critical_value, ks_psi
+    import math
+
+    from jsonschema_validator_spark.operators.drift import ks_psi
 
     df = _partition_df(spark)
     unbounded = {"check": "drift", "value": "length(text)", "buckets": 10, "min_rows": 0}
@@ -327,6 +332,19 @@ def test_partition_checks_in_any_number_and_shape(spark):
     for r in got:
         assert shaped(r) == want[(r.day, r.check)], (r.day, r.check)
 
+    # the one-column unique: every row whose conv_id occurs twice or more
+    # is a duplicate, in verdicts and in violations
+    keys = df.select("day", "conv_id", "turn_idx").collect()
+    seen = Counter(r.conv_id for r in keys)
+    dup_rows = {(r.conv_id, r.turn_idx) for r in keys if seen[r.conv_id] > 1}
+    dup_days = Counter(r.day for r in keys if seen[r.conv_id] > 1)
+    unique_verdicts = {r.day: r.violation_count for r in got if r.check == "unique(conv_id)"}
+    assert unique_verdicts == {day: dup_days[day] for day in ("d1", "d2", "d3", "d4")}
+    viol = _suite_rows(checks).violations(df).filter(F.col("keyword") == "unique").collect()
+    assert len(viol) == len(dup_rows) == 120
+    assert {(r.conv_id, r.turn_idx) for r in viol} == dup_rows
+    assert {(r.column, r.message) for r in viol} == {("conv_id", "duplicate key")}
+
     by_key = {(r.day, r.check): r for r in got}
     assert ("d4", "drift(length(text))") not in by_key  # no non-NULL value
     assert by_key[("d4", "volume")].rows_checked == 3
@@ -337,12 +355,39 @@ def test_partition_checks_in_any_number_and_shape(spark):
         passes = set()
         for x in ref:
             r = by_key[(x.part, f"drift({d['value']})")]
-            ok = x.ks_stat <= ks_critical_value(max(x.n_rows, 1), max(x.n_base, 1)) and x.psi <= 0.2
+            # two-sample KS critical value at alpha = 0.01
+            n, m = max(x.n_rows, 1), max(x.n_base, 1)
+            crit = math.sqrt(-0.5 * math.log(0.005)) * math.sqrt((n + m) / (n * m))
+            ok = x.ks_stat <= crit and x.psi <= 0.2
             assert r.rows_checked == x.n_rows and r["pass"] == ok, x.part
             assert abs(r.metrics["ks_stat"] - x.ks_stat) <= 1e-9, x.part
             assert abs(r.metrics["psi"] - x.psi) <= 1e-9, x.part
             passes.add(ok)
         assert passes == {True, False}, d
+
+
+def test_unbounded_drift_memo_does_not_grow(spark):
+    """Pass A memoizes its Columns by input schema only: drift bounds taken
+    from the data change from frame to frame (stream micro-batches, runner
+    sub-ranges), so they must neither add memo entries nor be reused from
+    an earlier frame."""
+    df = _partition_df(spark)
+    longer = df.withColumn("text", F.concat("text", F.lit("y" * 30)))
+    dataset = [{"check": "drift", "value": "length(text)", "buckets": 10, "min_rows": 0}]
+
+    def rows(suite, frame):
+        return sorted(
+            (r.day, r.rows_checked, tuple(sorted(r.metrics.items())))
+            for r in suite.verdicts(frame).collect()
+        )
+
+    suite = _suite_rows(dataset)
+    rows(suite, df)
+    n_memo = len(suite._expr_memo)
+    assert rows(suite, longer) == rows(_suite_rows(dataset), longer)
+    assert len(suite._expr_memo) == n_memo
+    rows(suite, df.filter(F.col("day") != "d3"))
+    assert len(suite._expr_memo) == n_memo
 
 
 @pytest.mark.parametrize("bounds", [{}, {"lo": 0.0, "hi": 60.0}], ids=["unbounded", "bounded"])
