@@ -71,6 +71,26 @@ def _write_stream_files(writes):
         os.utime(final, (base + i, base + i))
 
 
+def _stage_stream_events(spark, sf_dir, prefix):
+    """A fresh temp dir holding ``incoming/events.parquet`` (a hardlink,
+    or a copy across filesystems): the file stream source reads a
+    DIRECTORY, as a production landing zone is one. Returns (out dir,
+    source dir, the file's schema)."""
+    import os
+    import shutil
+    import tempfile
+
+    out = tempfile.mkdtemp(prefix=prefix)
+    src_dir = os.path.join(out, "incoming")
+    os.makedirs(src_dir)
+    src_file = f"{sf_dir}/events.parquet"
+    try:
+        os.link(src_file, os.path.join(src_dir, "events.parquet"))
+    except OSError:
+        shutil.copy(src_file, os.path.join(src_dir, "events.parquet"))
+    return out, src_dir, spark.read.parquet(src_file).schema
+
+
 # ---------------------------------------------------------------------------
 # flagship: fused keyword-verdict pass over events (CheckSuite)
 # ---------------------------------------------------------------------------
@@ -2675,31 +2695,15 @@ def q_streaming_verdicts_events(spark, sf_dir):
     must reproduce the one-shot batch verdicts exactly (verdict counts
     are additive across micro-batches), so the oracle is the same SQL as
     keyword_verdicts_events."""
-    import os
-    import shutil
-    import tempfile
-
     from jsonschema_validator_spark.streaming.validate import stream_validate
 
-    out = tempfile.mkdtemp(prefix="stream_verdicts_")
-    # the file stream source requires a DIRECTORY (in production the
-    # landing zone is one); stage the single test file via hardlink
-    src_dir = os.path.join(out, "incoming")
-    os.makedirs(src_dir)
-    src_file = f"{sf_dir}/events.parquet"
-    try:
-        os.link(src_file, os.path.join(src_dir, "events.parquet"))
-    except OSError:
-        shutil.copy(src_file, os.path.join(src_dir, "events.parquet"))
-    schema = spark.read.parquet(src_file).schema
-    suite = _events_suite()
+    out, src_dir, schema = _stage_stream_events(spark, sf_dir, "stream_verdicts_")
     q = stream_validate(
         spark,
         src_dir,
         schema,
-        suite,
+        _events_suite(),
         out,
-        trigger_available_now=True,
         transform=lambda df: df.withColumn("day", _day("ts")),
     )
     q.awaitTermination()
@@ -4500,32 +4504,28 @@ GROUP BY 1, 2 ORDER BY part_a, part_b
 
 def q_streaming_volume_anomaly_events(spark, sf_dir):
     """Streaming ingest path of the volume screen: per-batch ADDITIVE
-    day counts land via foreachBatch (stream_counts — same
+    day counts land via foreachBatch (stream_partials — the same
     batch_id-partitioned exactly-once sink as the verdicts stream, no
     unbounded streaming state), then the median/MAD screen
     (volume_anomaly_from_counts) runs over the summed sink. The oracle
     is the BATCH volume-anomaly SQL — stream and batch must agree
     exactly."""
-    import os
-    import shutil
-    import tempfile
-
     from jsonschema_validator_spark.operators.anomaly import (
         volume_anomaly_from_counts,
     )
-    from jsonschema_validator_spark.streaming.validate import stream_counts
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
-    out = tempfile.mkdtemp(prefix="stream_volume_")
-    src_dir = os.path.join(out, "incoming")
-    os.makedirs(src_dir)
-    src_file = f"{sf_dir}/events.parquet"
-    try:
-        os.link(src_file, os.path.join(src_dir, "events.parquet"))
-    except OSError:
-        shutil.copy(src_file, os.path.join(src_dir, "events.parquet"))
-    schema = spark.read.parquet(src_file).schema
-    q = stream_counts(
-        spark, src_dir, schema, out, part_expr=lambda df: _day("ts")
+    out, src_dir, schema = _stage_stream_events(spark, sf_dir, "stream_volume_")
+    q = stream_partials(
+        spark,
+        src_dir,
+        schema,
+        out,
+        lambda df: {
+            "counts": df.groupBy(_day("ts").alias("part")).agg(
+                F.count(F.lit(1)).alias("n")
+            )
+        },
     )
     q.awaitTermination()
     sink = spark.read.parquet(f"{out}/counts").select("part", "n")
@@ -6456,7 +6456,7 @@ FROM cross_b
 
 def q_streaming_pass_rate_events(spark, sf_dir):
     """Streaming twin of the Wilson SLA screen (streaming/validate.
-    stream_pass_rate + operators/stats.pass_rate_wilson_from_counts):
+    stream_partials + operators/stats.pass_rate_wilson_from_counts):
     micro-batches append additive (day, n, passed) partials through the
     exactly-once sink; merging the sink and applying the Wilson algebra
     must reproduce the one-shot batch verdict exactly — the pager
@@ -6468,7 +6468,7 @@ def q_streaming_pass_rate_events(spark, sf_dir):
     from jsonschema_validator_spark.operators.stats import (
         pass_rate_wilson_from_counts,
     )
-    from jsonschema_validator_spark.streaming.validate import stream_pass_rate
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "value")
     root = tempfile.mkdtemp(prefix="stream_passrate_")
@@ -6476,13 +6476,18 @@ def q_streaming_pass_rate_events(spark, sf_dir):
     ev.repartition(3).write.parquet(src_dir)
     schema = spark.read.parquet(src_dir).schema
     out_dir = f"{root}/out"
-    q = stream_pass_rate(
+    ok = F.col("value").isNotNull() & (F.col("value") <= 120)
+    q = stream_partials(
         spark,
         src_dir,
         schema,
         out_dir,
-        lambda df: F.col("value").isNotNull() & (F.col("value") <= 120),
-        lambda df: _day(F.col("ts")),
+        lambda df: {
+            "pass_partials": df.groupBy(_day(F.col("ts")).alias("part")).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(ok.cast("long")).alias("passed"),
+            )
+        },
         max_files_per_trigger=1,
     )
     q.awaitTermination()
@@ -6525,7 +6530,7 @@ FROM ci ORDER BY part
 
 def q_streaming_stats_events(spark, sf_dir):
     """Streaming incremental column stats (streaming/validate.py
-    stream_stat_partials): micro-batches append per-day stat PARTIALS
+    stream_partials): micro-batches append per-day stat PARTIALS
     through the batch_id-partitioned exactly-once sink; merging the
     sink with stats_merge_aggs must reproduce the one-shot scan —
     partials are commutative, so batch boundaries are irrelevant by
@@ -6535,8 +6540,11 @@ def q_streaming_stats_events(spark, sf_dir):
     incremental_stats_events)."""
     import tempfile
 
-    from jsonschema_validator_spark.operators.stats import stats_merge_aggs
-    from jsonschema_validator_spark.streaming.validate import stream_stat_partials
+    from jsonschema_validator_spark.operators.stats import (
+        stats_merge_aggs,
+        stats_partial_aggs,
+    )
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
     root = tempfile.mkdtemp(prefix="stream_stats_")
@@ -6544,13 +6552,16 @@ def q_streaming_stats_events(spark, sf_dir):
     ev.repartition(3).write.parquet(src_dir)
     schema = spark.read.parquet(src_dir).schema
     out_dir = f"{root}/out"
-    q = stream_stat_partials(
+    q = stream_partials(
         spark,
         src_dir,
         schema,
         out_dir,
-        lambda df: _day(F.col("ts")),
-        ["user_id", "value"],
+        lambda df: {
+            "stat_partials": df.groupBy(_day(F.col("ts")).alias("part")).agg(
+                *stats_partial_aggs(df.schema, ["user_id", "value"])
+            )
+        },
     )
     q.awaitTermination()
     parts = spark.read.parquet(f"{out_dir}/stat_partials")
@@ -6739,7 +6750,7 @@ FROM v GROUP BY user_id ORDER BY user_id
 
 def q_streaming_schema_coverage_events(spark, sf_dir):
     """Streaming twin of conversation_schema_coverage_events
-    (streaming/validate.py stream_validity_counts): the compiled
+    (streaming/validate.py stream_partials): the compiled
     keyword predicate runs per micro-batch (compile once, reuse every
     batch), appending additive per-conversation (n_turns, n_valid)
     partials through the exactly-once sink; summing the sink reproduces
@@ -6749,7 +6760,8 @@ def q_streaming_schema_coverage_events(spark, sf_dir):
     ordered-state contract)."""
     import tempfile
 
-    from jsonschema_validator_spark.streaming.validate import stream_validity_counts
+    from jsonschema_validator_spark.api import Schema
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
     ev = _t(spark, sf_dir, "events").select("user_id", "props")
     root = tempfile.mkdtemp(prefix="stream_cov_")
@@ -6757,18 +6769,28 @@ def q_streaming_schema_coverage_events(spark, sf_dir):
     ev.repartition(2).write.parquet(src_dir)
     schema = spark.read.parquet(src_dir).schema
     out_dir = f"{root}/out"
-    q = stream_validity_counts(
-        spark,
-        src_dir,
-        schema,
-        out_dir,
+    s = Schema.create(
         {
             "type": "object",
             "required": ["k"],
             "properties": {"k": {"type": "integer", "minimum": 0, "maximum": 80}},
         },
-        json_col="props",
-        group="user_id",
+        spark,
+        draft="draft7",
+    )
+    q = stream_partials(
+        spark,
+        src_dir,
+        schema,
+        out_dir,
+        lambda df: {
+            "validity_counts": s.with_valid(df, "props", out_col="__ok")
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_turns"),
+                F.sum(F.col("__ok").cast("long")).alias("n_valid"),
+            )
+        },
         max_files_per_trigger=1,
     )
     q.awaitTermination()
@@ -9900,42 +9922,30 @@ FROM c WHERE residual IS NOT NULL ORDER BY event_type, day
 
 def q_streaming_drift_events(spark, sf_dir):
     """Streaming ingest path of the KS/PSI drift screen (streaming/
-    validate.stream_histogram_counts): per-batch ADDITIVE (day, bucket)
-    histogram partials land through the batch_id-partitioned
-    exactly-once sink — no unbounded streaming state — and
+    validate.stream_partials over drift.value_histogram): per-batch
+    ADDITIVE (day, bucket) histogram partials land through the
+    batch_id-partitioned exactly-once sink — no unbounded streaming
+    state — and
     drift.ks_psi_from_histogram over the summed sink must equal the
     one-shot batch KS/PSI exactly: the oracle IS the batch drift SQL
     (shared with drift_events_value)."""
-    import os
-    import shutil
-    import tempfile
-
     from jsonschema_validator_spark.operators.drift import (
         ks_psi_from_histogram,
+        value_histogram,
     )
-    from jsonschema_validator_spark.streaming.validate import (
-        stream_histogram_counts,
-    )
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
-    out = tempfile.mkdtemp(prefix="stream_drift_")
-    src_dir = os.path.join(out, "incoming")
-    os.makedirs(src_dir)
-    src_file = f"{sf_dir}/events.parquet"
-    try:
-        os.link(src_file, os.path.join(src_dir, "events.parquet"))
-    except OSError:
-        shutil.copy(src_file, os.path.join(src_dir, "events.parquet"))
-    schema = spark.read.parquet(src_file).schema
-    q = stream_histogram_counts(
+    out, src_dir, schema = _stage_stream_events(spark, sf_dir, "stream_drift_")
+    q = stream_partials(
         spark,
         src_dir,
         schema,
         out,
-        part_expr=lambda df: _day("ts"),
-        value_expr=lambda df: F.col("value"),
-        buckets=20,
-        lo=0.0,
-        hi=500.0,
+        lambda df: {
+            "hist": value_histogram(
+                df.withColumn("day", _day("ts")), "value", "day", 20, 0.0, 500.0
+            )
+        },
     )
     q.awaitTermination()
     sink = (
@@ -12442,8 +12452,9 @@ FROM a ORDER BY source
 
 def q_streaming_mmd_embeddings(spark, sf_dir):
     """Streaming ingest path of the polynomial-kernel MMD
-    (streaming/validate.stream_moment_partials): micro-batches append
-    additive (s, i, j, v) embedding-moment partials — the same Arrow
+    (streaming/validate.stream_partials over similarity.moment_partials):
+    micro-batches append additive (s, i, j, v) embedding-moment
+    partials — the same Arrow
     outer-product kernel as the batch path — through the batch_id-
     partitioned exactly-once sink; assembling the summed sink with
     mmd_from_partials must reproduce the one-shot batch MMD exactly,
@@ -12453,10 +12464,9 @@ def q_streaming_mmd_embeddings(spark, sf_dir):
 
     from jsonschema_validator_spark.operators.similarity import (
         mmd_from_partials,
+        moment_partials,
     )
-    from jsonschema_validator_spark.streaming.validate import (
-        stream_moment_partials,
-    )
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
     emb = _t(spark, sf_dir, "embeddings")
     root = tempfile.mkdtemp(prefix="stream_mmd_")
@@ -12464,15 +12474,17 @@ def q_streaming_mmd_embeddings(spark, sf_dir):
     emb.repartition(3).write.parquet(src_dir)
     schema = spark.read.parquet(src_dir).schema
     out_dir = f"{root}/out"
-    q = stream_moment_partials(
+    sample = F.when(F.col("label") < 5, "a").otherwise("b")
+    q = stream_partials(
         spark,
         src_dir,
         schema,
         out_dir,
-        "embedding",
-        lambda df: F.when(F.col("label") < 5, "a").otherwise("b"),
-        "a",
-        "b",
+        lambda df: {
+            "moment_partials": moment_partials(
+                df.withColumn("__sample", sample), "embedding", "__sample", "a", "b"
+            )
+        },
         max_files_per_trigger=1,
     )
     q.awaitTermination()
@@ -14432,8 +14444,8 @@ FROM g ORDER BY event_type
 
 def q_streaming_jb_events(spark, sf_dir):
     """Streaming Jarque-Bera twin (streaming/validate.py
-    stream_power_sums): micro-batches append additive per-group
-    (n, s1..s4) power-sum partials through the batch_id-partitioned
+    stream_partials over normality.power_sums): micro-batches append
+    additive per-group (n, s1..s4) power-sum partials through the batch_id-partitioned
     exactly-once sink; assembling the sink with
     normality.jb_from_power_sums must reproduce the one-shot batch
     screen — partials are commutative, so batch boundaries are
@@ -14445,10 +14457,9 @@ def q_streaming_jb_events(spark, sf_dir):
 
     from jsonschema_validator_spark.operators.normality import (
         jb_from_power_sums,
+        power_sums,
     )
-    from jsonschema_validator_spark.streaming.validate import (
-        stream_power_sums,
-    )
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
     root = tempfile.mkdtemp(prefix="stream_jb_")
@@ -14456,8 +14467,12 @@ def q_streaming_jb_events(spark, sf_dir):
     ev.repartition(3).write.parquet(src_dir)
     schema = spark.read.parquet(src_dir).schema
     out_dir = f"{root}/out"
-    q = stream_power_sums(
-        spark, src_dir, schema, out_dir, "event_type", "value"
+    q = stream_partials(
+        spark,
+        src_dir,
+        schema,
+        out_dir,
+        lambda df: {"power_sums": power_sums(df, "event_type", "value")},
     )
     q.awaitTermination()
     parts = spark.read.parquet(f"{out_dir}/power_sums")

@@ -86,7 +86,7 @@ def volume_anomaly(
 def volume_anomaly_from_counts(counts_df: DataFrame, k: float = 3.0) -> DataFrame:
     """The median/MAD screen over an ALREADY-aggregated (part, n)
     relation — the entry point when the counts were maintained
-    elsewhere (the streaming ingest path: ``stream_counts`` appends
+    elsewhere (the streaming ingest path: ``stream_partials`` appends
     per-batch additive counts, a batch read sums them per part, this
     screens the result). Same output contract as ``volume_anomaly``."""
     rows = counts_df.groupBy("part").agg(

@@ -105,7 +105,9 @@ def ks_psi(
     return ks_psi_from_histogram(hist, buckets, baseline_partition, eps)
 
 
-def _pin_dense_histogram(hist: DataFrame, buckets: int) -> DataFrame:
+def _pin_dense_histogram(
+    hist: DataFrame, buckets: int, baseline_partition: str | None = None
+) -> DataFrame:
     """Materialize the (part, bucket, n) histogram once as a DENSE local
     relation (every part x every bucket, n>=0). The histogram fans out
     into THREE downstream branches (the parts grid, the densify join,
@@ -120,7 +122,9 @@ def _pin_dense_histogram(hist: DataFrame, buckets: int) -> DataFrame:
     fill over P x B) also deletes the crossJoin(parts, range(buckets))
     grid + two left joins the lazy plan needed, so the downstream plan
     is local-relation -> window -> agg only. NOTE: this makes the drift
-    operators EAGER — construction triggers the histogram job."""
+    operators EAGER — construction triggers the histogram job. Raises
+    MissingBaselineError when ``baseline_partition`` is given and holds
+    no counted value."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     spark = hist.sparkSession
@@ -129,6 +133,8 @@ def _pin_dense_histogram(hist: DataFrame, buckets: int) -> DataFrame:
         key = (part, int(bucket))
         counts[key] = counts.get(key, 0) + int(n)
     parts = sorted({p for (p, _) in counts}, key=lambda p: (p is None, str(p)))
+    if baseline_partition is not None and baseline_partition not in parts:
+        raise MissingBaselineError(baseline_partition)
     rows = [(p, b, counts.get((p, b), 0)) for p in parts for b in range(buckets)]
     schema = StructType(
         [
@@ -147,8 +153,10 @@ def ks_psi_from_histogram(
     eps: float = 1e-6,
 ) -> DataFrame:
     """KS + PSI from a pre-computed (part, bucket, n) histogram, such as
-    the summed per-batch histogram sink of streaming/validate.py."""
-    dense = _pin_dense_histogram(hist, buckets)
+    a ``value_histogram`` sink of streaming/validate.stream_partials
+    summed over its batches. Raises MissingBaselineError when
+    baseline_partition has no counted value."""
+    dense = _pin_dense_histogram(hist, buckets, baseline_partition)
 
     # baseline distribution per bucket (dense already covers the grid)
     if baseline_partition is None:

@@ -32,8 +32,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonschema_validator_spark.plans.check_suite import CheckSuite
-from jsonschema_validator_spark.sources.tables import current_snapshot_id, read_table
+from jsonschema_validator_spark.plans.check_suite import VERDICT_ROW_SCHEMA, CheckSuite
+from jsonschema_validator_spark.sources.tables import (
+    current_snapshot_id,
+    overwrite_partitions,
+    read_table,
+)
 
 
 @dataclass
@@ -128,8 +132,6 @@ class CheckpointedRunner:
         """Process pending partitions in batches; each batch writes its
         verdicts/violations partitions then commits manifest lines."""
         part = self.suite.partition_by
-        spark = df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         pending = self.pending_partitions(df)
         skipped = sorted(self.done_partitions())
         if not pending:
@@ -139,38 +141,33 @@ class CheckpointedRunner:
 
         for batch in batches:
             sub = df.filter(F.col(part).isin(batch))
-            verdicts = self.suite.verdicts(sub)
-            violations = self.suite.violations(sub)
-            (
-                verdicts.withColumnRenamed("day", part)
-                if part != "day"
-                else verdicts
-            ).write.mode("overwrite").partitionBy("day").parquet(
-                os.path.join(self.out, "verdicts")
+            # verdict and violation rows name the partition `day` whatever
+            # the suite's partition column is called. The verdict rows are
+            # collected once: the sink writes them and the manifest
+            # metrics come from them, so no check runs a second time.
+            verdict_rows = self.suite.verdicts(sub).collect()
+            overwrite_partitions(
+                df.sparkSession.createDataFrame(verdict_rows, schema=VERDICT_ROW_SCHEMA),
+                os.path.join(self.out, "verdicts"),
+                "day",
             )
-            violations.write.mode("overwrite").partitionBy("day").parquet(
-                os.path.join(self.out, "violations")
+            overwrite_partitions(
+                self.suite.violations(sub), os.path.join(self.out, "violations"), "day"
             )
-            # lineage metrics per partition from the (tiny) verdicts frame
-            stats = (
-                verdicts.groupBy("day")
-                .agg(
-                    F.max("rows_checked").alias("rows_checked"),
-                    F.sum("violation_count").alias("violation_count"),
-                    F.sum((~F.col("pass")).cast("int")).alias("n_checks_failed"),
-                )
-                .collect()
-            )
-            by_day = {r["day"]: r for r in stats}
+            zero = dict.fromkeys(("rows_checked", "violation_count", "n_checks_failed"), 0)
+            by_day: dict = {}
+            for r in verdict_rows:
+                m = by_day.setdefault(r["day"], dict(zero))
+                m["rows_checked"] = max(m["rows_checked"], r["rows_checked"] or 0)
+                m["violation_count"] += r["violation_count"] or 0
+                m["n_checks_failed"] += r["pass"] is False
             self._commit_manifest(
                 [
                     {
                         "partition": p,
                         "spec_hash": self.suite.spec_hash,
                         "status": "done",
-                        "rows_checked": int(by_day[p]["rows_checked"]) if p in by_day else 0,
-                        "violation_count": int(by_day[p]["violation_count"]) if p in by_day else 0,
-                        "n_checks_failed": int(by_day[p]["n_checks_failed"]) if p in by_day else 0,
+                        **by_day.get(p, zero),
                         "snapshot_id": snapshot_id,
                     }
                     for p in batch

@@ -98,6 +98,21 @@ def write_table(
     w.parquet(ref)
 
 
+def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Write ``df`` as parquet partitioned by ``partition_col``,
+    replacing only the partitions ``df`` holds (dynamic overwrite, set
+    on this write alone — the session's conf is left as it is). A
+    replayed write of the same partitions rewrites them instead of
+    appending a second copy: the idempotent sink of the streaming
+    partial sinks (by batch_id) and the checkpointed runner (by day)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -1,6 +1,6 @@
 from jsonschema_validator_spark.streaming.validate import (  # noqa: F401
+    stream_partials,
     stream_validate,
-    stream_counts,
     streaming_enum_rate,
     streaming_dedup,
 )

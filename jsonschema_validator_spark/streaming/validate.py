@@ -9,11 +9,15 @@ exactly-once sink semantics.
 
 Design choices (idiomatic Structured Streaming, SURVEY.md §2.5 row):
 
-- ``stream_validate``: readStream (file source) -> ``foreachBatch``
-  that reuses the COMPILED batch CheckSuite per micro-batch. foreachBatch
-  is the right tool because the suite's dataset checks (uniqueness,
-  ordering) are full-relation operators per batch, not incremental
-  row-maps; the streaming checkpoint makes batch replay idempotent.
+- ``stream_partials``: the one exactly-once sink. readStream (file
+  source) -> ``foreachBatch`` that writes the caller's per-batch frames
+  (additive partials: counts, stats partials, histograms, moment and
+  power sums) partitioned by batch_id with a dynamic overwrite, so a
+  replayed batch rewrites its own partition.
+- ``stream_validate``: ``stream_partials`` over the COMPILED batch
+  CheckSuite per micro-batch. foreachBatch is the right tool because the
+  suite's dataset checks (uniqueness, ordering) are full-relation
+  operators per batch, not incremental row-maps.
 - ``streaming_enum_rate``: a genuinely incremental check — per-window
   enum-violation rates via watermarked windowed aggregation (late data
   handled by the watermark, not by reprocessing).
@@ -28,6 +32,58 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jsonschema_validator_spark.plans.check_suite import CheckSuite
+from jsonschema_validator_spark.sources.tables import overwrite_partitions
+
+
+def stream_partials(
+    spark: SparkSession,
+    input_path: str,
+    schema,
+    output_dir: str,
+    partials,
+    max_files_per_trigger: int | None = None,
+):
+    """The one streaming sink: read ``input_path`` as a parquet file
+    stream and, for every non-empty micro-batch, write each frame of
+    ``partials(batch_df)`` — a dict {sink subdir: DataFrame} — under
+    ``output_dir/<subdir>`` with a ``batch_id`` column. Returns the
+    StreamingQuery (trigger availableNow; the caller awaits it).
+
+    Exactly-once: foreachBatch re-runs a batch if the driver dies
+    between the sink write and the checkpoint commit; partitioning each
+    sink by batch_id with a dynamic overwrite makes the retry rewrite
+    ITS OWN partition instead of appending a duplicate copy. The
+    streaming checkpoint (offsets + commit log) lives under
+    ``output_dir/_checkpoint``, so a killed query resumes at the failed
+    micro-batch.
+
+    Additive partials (counts, stats partials with HLL sketches,
+    histogram counts, moment and power sums) make the sink the state:
+    summing or merging it reproduces the one-shot batch result at any
+    point of the stream, with no unbounded streaming state.
+    ``max_files_per_trigger`` caps the files per micro-batch (unset:
+    everything available in one batch)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        for subdir, frame in partials(batch_df).items():
+            overwrite_partitions(
+                frame.withColumn("batch_id", F.lit(batch_id)),
+                f"{output_dir}/{subdir}",
+                "batch_id",
+            )
+
+    return (
+        reader.parquet(input_path)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", f"{output_dir}/_checkpoint")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_validate(
@@ -36,52 +92,24 @@ def stream_validate(
     schema,
     suite: CheckSuite,
     output_dir: str,
-    trigger_available_now: bool = True,
     transform=None,
 ):
     """Validate transcript files as they arrive: every micro-batch runs
     the compiled suite and appends verdicts + violations parquet under
-    ``output_dir``. Returns the StreamingQuery (caller awaits it).
+    ``output_dir`` through ``stream_partials``. ``transform`` is a
+    per-batch projection (e.g. derive the partition column from the
+    event timestamp) applied before the suite runs. Returns the
+    StreamingQuery (caller awaits it)."""
 
-    The streaming checkpoint (offsets + sink commit log) lives under
-    ``output_dir/_checkpoint`` — a killed query resumes at the failed
-    micro-batch, the streaming analog of the batch manifest resume."""
-    src = spark.readStream.schema(schema).parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partials(batch_df: DataFrame) -> dict:
         if transform is not None:
-            # per-batch projection (e.g. derive the partition column from
-            # the event timestamp) before the compiled suite runs
             batch_df = transform(batch_df)
-        # idempotent under replay: foreachBatch re-runs a batch if the
-        # driver dies between the sink write and the checkpoint commit;
-        # partitioning the sink by batch_id and dynamically overwriting
-        # makes the retry rewrite ITS OWN partition instead of appending
-        # a duplicate copy (exactly-once sink semantics)
-        verdicts = suite.verdicts(batch_df).withColumn("batch_id", F.lit(batch_id))
-        (
-            verdicts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/verdicts")
-        )
-        violations = suite.violations(batch_df).withColumn("batch_id", F.lit(batch_id))
-        (
-            violations.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/violations")
-        )
+        return {
+            "verdicts": suite.verdicts(batch_df),
+            "violations": suite.violations(batch_df),
+        }
 
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return stream_partials(spark, input_path, schema, output_dir, partials)
 
 
 def streaming_enum_rate(
@@ -123,407 +151,3 @@ def streaming_dedup(
     return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         keys + [ts_col]
     )
-
-
-def stream_counts(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    output_dir: str,
-    part_expr,
-    trigger_available_now: bool = True,
-):
-    """Per-partition row counts maintained incrementally over a file
-    stream: every micro-batch appends its own (part, n, batch_id) rows;
-    counts are ADDITIVE across batches, so summing the sink per part
-    reproduces the one-shot batch counts exactly — the same additive
-    exactly-once pattern as stream_validate's verdicts (partition the
-    sink by batch_id, dynamic overwrite makes replay idempotent).
-    Feeds anomaly.volume_anomaly_from_counts: the streaming ingest path
-    for the volume screen without any unbounded streaming state (the
-    screen's median/MAD math is a batch read over the tiny sink, not a
-    stateful operator). Returns the StreamingQuery.
-
-    ``part_expr``: callable df -> Column deriving the partition (e.g.
-    ``lambda df: F.date_format("ts", "yyyy-MM-dd")``).
-    """
-
-    src = spark.readStream.schema(schema).parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts = (
-            batch_df.groupBy(part_expr(batch_df).alias("part"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            counts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/counts")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_stat_partials(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    output_dir: str,
-    part_expr,
-    columns: list[str],
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming incremental column stats: every micro-batch appends its
-    own per-partition STAT PARTIALS (operators/stats.stats_partial_aggs
-    — null/row counts, min/max/sums, Datasketches HLL sketches) keyed
-    by (part, batch_id). Every partial is ADDITIVE/mergeable, so
-    merging the sink with stats_merge_aggs reproduces the one-shot
-    batch stats over everything streamed so far — at ANY point, not
-    just stream end: the metrics side of "runs resume mid-table"
-    (north rule) in streaming form, with zero unbounded streaming state
-    (the sink is the state, and it is idempotent under replay via the
-    batch_id-partitioned dynamic overwrite, same as stream_validate).
-
-    Merge with:
-        parts = spark.read.parquet(f"{output_dir}/stat_partials")
-        parts.groupBy(...).agg(*stats_merge_aggs(schema, columns))
-
-    Returns the StreamingQuery.
-    """
-    from jsonschema_validator_spark.operators.stats import stats_partial_aggs
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partials = (
-            batch_df.groupBy(part_expr(batch_df).alias("part"))
-            .agg(*stats_partial_aggs(batch_df.schema, columns))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            partials.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/stat_partials")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_validity_counts(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    output_dir: str,
-    schema_doc: dict,
-    json_col: str,
-    group: str,
-    draft: str = "draft7",
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming per-group VALIDITY counts under the compiled keyword
-    engine: each micro-batch runs the api.Schema predicate (compiled
-    ONCE, reused every batch — the same compile-once contract as
-    stream_validate) and appends additive (group, n_turns, n_valid,
-    batch_id) partials through the exactly-once sink. Summing the sink
-    per group reproduces the one-shot batch coverage rollup exactly —
-    incremental keyword validation metrics that resume with the stream.
-    Returns the StreamingQuery.
-    """
-    from jsonschema_validator_spark.api import Schema
-
-    s = Schema.create(schema_doc, spark, draft=draft)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts = (
-            s.with_valid(batch_df, json_col, out_col="__ok")
-            .groupBy(group)
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.sum(F.col("__ok").cast("long")).alias("n_valid"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            counts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/validity_counts")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_pass_rate(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    output_dir: str,
-    ok_expr,
-    part_expr,
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming twin of the Wilson pass-rate SLA screen: each
-    micro-batch appends additive (part, n, passed, batch_id) partials
-    through the batch_id-partitioned exactly-once sink; summing the
-    sink per part and applying
-    operators/stats.pass_rate_wilson_from_counts reproduces the
-    one-shot batch verdict EXACTLY at any point in the stream — the
-    pager decision ("breach / at_risk / met") stays correct mid-ingest
-    because both the counts and the interval algebra are pure
-    functions of the additive sums. Zero unbounded streaming state:
-    the sink is the state, idempotent under replay (same contract as
-    stream_validate / stream_stat_partials).
-
-    ``ok_expr``/``part_expr`` are callables DataFrame -> Column so the
-    predicate compiles once against each micro-batch's plan. Returns
-    the StreamingQuery.
-    """
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts = (
-            batch_df.groupBy(part_expr(batch_df).alias("part"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(ok_expr(batch_df).cast("long")).alias("passed"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            counts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/pass_partials")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_histogram_counts(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    output_dir: str,
-    part_expr,
-    value_expr,
-    buckets: int = 20,
-    lo: float = 0.0,
-    hi: float = 1.0,
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Per-(partition, bucket) histogram counts maintained incrementally
-    over a file stream — the streaming ingest path of the KS/PSI drift
-    screen. Every micro-batch appends its own (part, bucket, n,
-    batch_id) rows on the SHARED bucket grid (same bucketize as the
-    batch operator — shared bucketing is what makes the distributions
-    comparable); counts are ADDITIVE, so summing the sink per
-    (part, bucket) reproduces the one-shot batch histogram exactly and
-    ``drift.ks_psi_from_histogram`` over the summed sink equals the
-    batch KS/PSI to the bit. Same exactly-once pattern as
-    stream_counts: the sink partitions by batch_id and dynamic
-    overwrite makes replay idempotent; no unbounded streaming state
-    (the drift math is a batch read over the O(parts x buckets) sink).
-    Returns the StreamingQuery.
-
-    ``part_expr``/``value_expr``: callables df -> Column.
-    """
-    from jsonschema_validator_spark.operators.drift import bucketize
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist = (
-            batch_df.select(
-                part_expr(batch_df).alias("part"),
-                bucketize(value_expr(batch_df), lo, hi, buckets).alias("bucket"),
-            )
-            .filter(F.col("bucket").isNotNull())
-            .groupBy("part", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            hist.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/hist")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_moment_partials(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    output_dir: str,
-    vec_col: str,
-    sample_expr,
-    a,
-    b,
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming twin of similarity.moment_partials: every micro-batch
-    appends its additive (s, i, j, v) embedding-moment partials —
-    outer-product, mean-vector and count rows from the same Arrow
-    kernel as the batch path — keyed by batch_id through the
-    exactly-once dynamic-overwrite sink. Because the partials are
-    commutative sums, assembling the sink with
-    similarity.mmd_from_partials reproduces the one-shot batch MMD
-    over everything streamed so far — at ANY point, not just stream
-    end, with zero unbounded streaming state (the sink IS the state,
-    idempotent under micro-batch replay).
-
-    ``sample_expr`` maps a batch DataFrame to the two-sample label
-    Column (e.g. a label threshold or an ingest-generation tag).
-    Returns the StreamingQuery.
-    """
-    from jsonschema_validator_spark.operators.similarity import (
-        moment_partials,
-    )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        parts = moment_partials(
-            batch_df.withColumn("__sample", sample_expr(batch_df)),
-            vec_col,
-            "__sample",
-            a,
-            b,
-        ).withColumn("batch_id", F.lit(batch_id))
-        (
-            parts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/moment_partials")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_power_sums(
-    spark: SparkSession,
-    input_path: str,
-    schema,
-    output_dir: str,
-    group: str,
-    value: str,
-    trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming twin of normality.power_sums: every micro-batch
-    appends its additive per-group (g, n, s1..s4) power-sum partials
-    keyed by batch_id through the exactly-once dynamic-overwrite sink.
-    Because the partials are commutative sums, assembling the sink
-    with normality.jb_from_power_sums reproduces the one-shot batch
-    Jarque-Bera over everything streamed so far — at ANY point, not
-    just stream end, with zero unbounded streaming state (the sink IS
-    the state, idempotent under micro-batch replay). Same design as
-    stream_moment_partials / stream_stat_partials; distribution-SHAPE
-    monitoring joins the mean/null-rate and MMD families as an
-    incrementally-maintained check.
-
-    Returns the StreamingQuery (caller awaits it).
-    """
-    from jsonschema_validator_spark.operators.normality import power_sums
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        parts = power_sums(batch_df, group, value).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            parts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{output_dir}/power_sums")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{output_dir}/_checkpoint")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -393,14 +393,17 @@ def test_unbounded_drift_memo_does_not_grow(spark):
 @pytest.mark.parametrize("bounds", [{}, {"lo": 0.0, "hi": 60.0}], ids=["unbounded", "bounded"])
 def test_drift_missing_baseline_is_named(spark, bounds):
     """A drift baseline partition with no non-NULL value raises the named
-    MissingBaselineError, naming the partition."""
-    from jsonschema_validator_spark.operators.drift import MissingBaselineError
+    MissingBaselineError, naming the partition, from the suite and from
+    the distributed drift.ks_psi alike."""
+    from jsonschema_validator_spark.operators.drift import MissingBaselineError, ks_psi
 
     df = _partition_df(spark)
     for part in ("nope", "d4"):
         suite = _suite_rows([{"check": "drift", "value": "length(text)", "baseline": part, **bounds}])
         with pytest.raises(MissingBaselineError, match=repr(part)):
             suite.verdicts(df)
+        with pytest.raises(MissingBaselineError, match=repr(part)):
+            ks_psi(df, F.length("text"), "day", baseline_partition=part, **bounds).collect()
 
 
 def test_spec_level_format_assertion(spark):

@@ -322,21 +322,15 @@ def test_stream_histogram_counts_additive_across_batches(spark, tmp_path):
     schema = spark.read.parquet(str(d)).schema
 
     # maxFilesPerTrigger=1 forces two micro-batches
-    from jsonschema_validator_spark.operators.drift import bucketize
-    from jsonschema_validator_spark.streaming.validate import (
-        stream_histogram_counts,
-    )
+    from jsonschema_validator_spark.operators.drift import bucketize, value_histogram
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
-    q = stream_histogram_counts(
+    q = stream_partials(
         spark,
         str(d),
         schema,
         out,
-        part_expr=lambda df: F.col("part"),
-        value_expr=lambda df: F.col("v"),
-        buckets=5,
-        lo=0.0,
-        hi=50.0,
+        lambda df: {"hist": value_histogram(df, "v", "part", 5, 0.0, 50.0)},
         max_files_per_trigger=1,
     )
     q.awaitTermination()

@@ -149,3 +149,46 @@ def test_pinned_snapshot_refuses_different_ref(spark, df, tmp_path):
     assert runner.pinned_snapshot(spark, f"snapdir:{root_a}") == 1
     with pytest.raises(ValueError, match="pins spec"):
         runner.pinned_snapshot(spark, f"snapdir:{root_b}")
+
+
+def _verdict_rows(frame):
+    return sorted(
+        (
+            str(r["day"]),
+            r["check"],
+            r["pass"],
+            r["violation_count"],
+            r["rows_checked"],
+            tuple(sorted((r["metrics"] or {}).items())),
+        )
+        for r in frame.collect()
+    )
+
+
+def test_partition_column_not_named_day(spark, df, tmp_path):
+    """A suite partitioned by a column other than `day` runs: verdict and
+    violation rows name the partition `day` whatever the suite's
+    partition column is called, and the sink holds the whole-table
+    verdicts and violations."""
+    suite = CheckSuite({**transcripts_spec(), "partition_by": "d"}).build()
+    dfd = df.withColumnRenamed("day", "d")
+    out = str(tmp_path / "out_d")
+    report = CheckpointedRunner(suite, out).run(dfd)
+    assert len(report.processed) == 15
+    got = spark.read.parquet(os.path.join(out, "verdicts"))
+    assert _verdict_rows(got) == _verdict_rows(suite.verdicts(dfd))
+    got_viol = spark.read.parquet(os.path.join(out, "violations")).count()
+    assert got_viol == suite.violations(dfd).count()
+
+
+def test_run_leaves_session_conf_alone(spark, df, tmp_path):
+    """The runner's dynamic partition overwrite is an option of its own
+    writes: the session's partitionOverwriteMode reads the same before
+    and after a run, so a later plain overwrite elsewhere still replaces
+    the whole table."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    # start from the default, whatever ran earlier in this session
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    CheckpointedRunner(CheckSuite(transcripts_spec()).build(), str(tmp_path / "out_conf")).run(df)
+    assert spark.conf.get(key) == before

@@ -182,23 +182,20 @@ def test_foreachbatch_replay_idempotent(spark, tmp_path):
     suite = CheckSuite(transcripts_spec()).build()
     out = str(tmp_path / "out")
 
-    q = stream_validate(spark, src, schema, suite, out, trigger_available_now=True)
+    q = stream_validate(spark, src, schema, suite, out)
     q.awaitTermination(300)
     first = spark.read.parquet(f"{out}/verdicts").count()
     assert first > 0
 
-    # simulate the replay: re-run batch 0's foreachBatch body directly
-    # (same batch_id), as Spark would after an uncommitted batch
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    verdicts = suite.verdicts(spark.read.parquet(src))
+    # simulate the replay: re-write batch 0 (same batch_id) through the
+    # sink's writer, as Spark would after an uncommitted batch
     from pyspark.sql import functions as F2
 
-    (
-        verdicts.withColumn("batch_id", F2.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{out}/verdicts")
+    from jsonschema_validator_spark.sources.tables import overwrite_partitions
+
+    verdicts = suite.verdicts(spark.read.parquet(src))
+    overwrite_partitions(
+        verdicts.withColumn("batch_id", F2.lit(0)), f"{out}/verdicts", "batch_id"
     )
     assert spark.read.parquet(f"{out}/verdicts").count() == first
 
@@ -414,7 +411,7 @@ def test_stream_counts_additive_across_batches(spark, tmp_path):
         volume_anomaly,
         volume_anomaly_from_counts,
     )
-    from jsonschema_validator_spark.streaming import stream_counts
+    from jsonschema_validator_spark.streaming import stream_partials
 
     d = tmp_path / "in"; d.mkdir()
     # day A rows split ACROSS the two files -> only additivity makes
@@ -431,17 +428,17 @@ def test_stream_counts_additive_across_batches(spark, tmp_path):
 
     from pyspark.sql import DataFrame
 
+    from jsonschema_validator_spark.sources.tables import overwrite_partitions
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        (
+        overwrite_partitions(
             batch_df.groupBy(F.col("day").alias("part"))
             .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out}/counts")
+            .withColumn("batch_id", F.lit(batch_id)),
+            f"{out}/counts",
+            "batch_id",
         )
 
     q = (
@@ -467,7 +464,13 @@ def test_stream_counts_additive_across_batches(spark, tmp_path):
 
     # the packaged helper produces the same sink shape in one call
     out2 = str(tmp_path / "out2")
-    q2 = stream_counts(spark, str(d), schema, out2, part_expr=lambda df: F.col("day"))
+    q2 = stream_partials(
+        spark,
+        str(d),
+        schema,
+        out2,
+        lambda df: {"counts": df.groupBy(F.col("day").alias("part")).agg(F.count(F.lit(1)).alias("n"))},
+    )
     q2.awaitTermination()
     s2 = spark.read.parquet(f"{out2}/counts").groupBy("part").agg(F.sum("n").alias("n"))
     assert {r["part"]: r["n"] for r in s2.collect()} == {"A": 5, "B": 4, "C": 20}
@@ -589,8 +592,8 @@ def test_stream_stat_partials_additive_across_batches(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from jsonschema_validator_spark.operators.stats import stats_merge_aggs
-    from jsonschema_validator_spark.streaming.validate import stream_stat_partials
+    from jsonschema_validator_spark.operators.stats import stats_merge_aggs, stats_partial_aggs
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
     base = dt.datetime(2024, 7, 1, 0, 0, 0)
 
@@ -612,10 +615,13 @@ def test_stream_stat_partials_additive_across_batches(spark, tmp_path):
 
     out = str(tmp_path / "out")
     schema = spark.read.parquet(src).schema
-    q = stream_stat_partials(
+    q = stream_partials(
         spark, src, schema, out,
-        lambda df: F.date_format("ts", "yyyy-MM-dd"),
-        ["value"],
+        lambda df: {
+            "stat_partials": df.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("part")).agg(
+                *stats_partial_aggs(df.schema, ["value"])
+            )
+        },
         max_files_per_trigger=1,
     )
     q.awaitTermination(120)
@@ -745,7 +751,7 @@ def test_stream_pass_rate_merge_equals_batch_verdict(spark, tmp_path):
         pass_rate_wilson,
         pass_rate_wilson_from_counts,
     )
-    from jsonschema_validator_spark.streaming.validate import stream_pass_rate
+    from jsonschema_validator_spark.streaming.validate import stream_partials
 
     base = dt.datetime(2024, 7, 1, 0, 0, 0)
 
@@ -769,13 +775,17 @@ def test_stream_pass_rate_merge_equals_batch_verdict(spark, tmp_path):
 
     schema = spark.read.parquet(str(src)).schema
     out = str(tmp_path / "out")
-    q = stream_pass_rate(
+    q = stream_partials(
         spark,
         str(src),
         schema,
         out,
-        lambda df: F.col("v") <= 10,
-        lambda df: F.date_format("ts", "yyyy-MM-dd"),
+        lambda df: {
+            "pass_partials": df.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("part")).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("v") <= 10).cast("long")).alias("passed"),
+            )
+        },
         max_files_per_trigger=1,
     )
     q.awaitTermination()
