@@ -13,6 +13,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jsonschema_validator_spark.sources.tables import local_frame
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
@@ -198,7 +200,8 @@ def q_resumable_runner_events(spark, sf_dir):
         )
         for day, c in sorted(counts.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "day string, rows_checked long, violation_count long, "
         "n_checks_failed long, n_commits long, phase int",
@@ -2746,8 +2749,8 @@ def q_streaming_completeness_events(spark, sf_dir):
         ).cast("int").alias("turn_idx"),
         F.col("ts"),
     )
-    sentinel = spark.createDataFrame(
-        [("__sentinel__", 0)], "conv_id string, turn_idx int"
+    sentinel = local_frame(
+        spark, [("__sentinel__", 0)], "conv_id string, turn_idx int"
     ).withColumn("ts", F.lit("2100-01-01 00:00:00").cast("timestamp"))
 
     root = tempfile.mkdtemp(prefix="stream_complete_")
@@ -6131,8 +6134,8 @@ def q_streaming_loops_events(spark, sf_dir):
     # far-future ts advances the watermark in a final batch so idle
     # timeouts flush the open tail runs.
     cut = turns.approxQuantile("turn_idx", [0.5], 0.0)[0]
-    sentinel = spark.createDataFrame(
-        [("zz-sentinel", 0, 0)], "conv_id string, turn_idx long, h long"
+    sentinel = local_frame(
+        spark, [("zz-sentinel", 0, 0)], "conv_id string, turn_idx long, h long"
     ).select(
         "conv_id", "turn_idx", "h",
         F.to_timestamp(F.lit("2100-01-01 00:00:00")).alias("ts"),

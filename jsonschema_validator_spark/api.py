@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .errors import SchemaError
 from .functions.accessors import VariantAccessor, _vtag
 from .functions.keywords import Scope, compile_schema, pred_of
+from .sources.tables import local_frame
 
 
 class _BoundVariantAccessor(VariantAccessor):
@@ -231,7 +232,7 @@ class Schema:
 
     # -- single-document surface (reference parity) ----------------------
     def _row_df(self, value) -> DataFrame:
-        return self.spark.createDataFrame([(json.dumps(value),)], "j string")
+        return local_frame(self.spark, [(json.dumps(value),)], "j string")
 
     def _bind(self, df: DataFrame, json_col: str):
         props = self.raw.get("properties", {}) if isinstance(self.raw, dict) else {}

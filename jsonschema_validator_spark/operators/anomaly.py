@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.tables import local_frame
+
 
 def _median(xs: list[float]) -> float:
     """Interpolating median — matches DuckDB/ANSI MEDIAN on numerics."""
@@ -108,7 +110,7 @@ def volume_anomaly_from_counts(counts_df: DataFrame, k: float = 3.0) -> DataFram
             StructField("is_anomaly", BooleanType(), False),
         ]
     )
-    return counts_df.sparkSession.createDataFrame(out, schema)
+    return local_frame(counts_df.sparkSession, out, schema)
 
 
 def cardinality_drift(
@@ -170,7 +172,7 @@ def cardinality_drift(
             StructField("ok", BooleanType(), False),
         ]
     )
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)
 
 
 def robust_outliers(

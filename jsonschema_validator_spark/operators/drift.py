@@ -20,6 +20,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def bucketize(value: Column, lo: float, hi: float, buckets: int) -> Column:
     """Clamped equal-width bucket index in [0, buckets-1]; NULL for NULL."""
@@ -143,7 +145,7 @@ def _pin_dense_histogram(
             StructField("n", LongType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def ks_psi_from_histogram(

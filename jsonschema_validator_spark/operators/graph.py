@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
 from .fixpoint import fixpoint
 
 
@@ -69,7 +70,7 @@ def pagerank(
     )
     n_nodes = nodes.count()
     if n_nodes == 0:
-        return edges.sparkSession.createDataFrame([], "node string, rank double")
+        return local_frame(edges.sparkSession, [], "node string, rank double")
     base = (1.0 - damping) / n_nodes
 
     def step(pr: DataFrame, row) -> DataFrame:

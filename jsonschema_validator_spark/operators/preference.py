@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def bradley_terry(
     pairs: DataFrame,
@@ -103,6 +105,7 @@ def bradley_terry(
     rows = [
         (i, wins[i], n_games[i], round(pi[i], 6)) for i in items
     ]
-    return pairs.sparkSession.createDataFrame(
+    return local_frame(
+        pairs.sparkSession,
         rows, "item string, wins long, n_games long, rating double"
     )

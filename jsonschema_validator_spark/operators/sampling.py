@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 DOMAIN = 1_000_000
 
 
@@ -87,7 +89,8 @@ def stratified_hash_sample(df: DataFrame, key_col: str, strata_col: str, rates: 
     rate are dropped. The rate table is a broadcast join — no shuffle of
     the data side; the filter stays a pure function of (key, stratum)."""
     spark = df.sparkSession
-    rate_df = spark.createDataFrame(
+    rate_df = local_frame(
+        spark,
         [(k, int(v * DOMAIN)) for k, v in sorted(rates.items())],
         f"{strata_col} string, __threshold int",
     )
@@ -215,7 +218,8 @@ def token_budget_rates(
         F.sum(tok.cast("long")).alias("sum_tokens"),
     )
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        spark,
         [(k, float(v)) for k, v in sorted(weights.items())],
         f"{strata_col} string, weight double",
     )

@@ -18,6 +18,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<double> columns in Column algebra.
@@ -356,8 +358,8 @@ def ivf_topk(
         qn = qv / max(np.linalg.norm(qv), 1e-12)
         cells = np.argsort(-(C @ qn))[: min(n_probe, n_centroids)]
         probes += [(r[0], list(map(float, qv)), int(c)) for c in cells]
-    probe_df = df.sparkSession.createDataFrame(
-        probes, schema=f"query_id {id_type}, qe array<double>, cell int"
+    probe_df = local_frame(
+        df.sparkSession, probes, f"query_id {id_type}, qe array<double>, cell int"
     )
 
     sims = (
@@ -949,7 +951,8 @@ def gram_spectrum(
         "collapsed boolean"
     )
     if n_vecs == 0 or trace <= 0.0:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n_vecs, n_bad, dim, round(trace, 6), None, None, None, None)],
             schema,
         )
@@ -959,7 +962,8 @@ def gram_spectrum(
         prev, v = v, m @ v
     lam = float(np.sqrt(float(v @ v) / float(prev @ prev)))
     share = lam / trace
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_vecs,

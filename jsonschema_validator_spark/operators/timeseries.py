@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def _daily(df: DataFrame, group: str, ts: str, value) -> DataFrame:
     day = F.date_format(F.date_trunc("day", F.col(ts)), "yyyy-MM-dd")
@@ -1024,7 +1026,8 @@ def haar_energy(
     ).collect()[0]
     rows.append(("approx", ra["n"], float(ra["e"])))
     spark = df.sparkSession
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(c, int(k), e) for c, k, e in rows],
         "component string, n_coeffs long, energy double",
     )

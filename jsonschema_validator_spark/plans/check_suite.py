@@ -58,6 +58,7 @@ from jsonschema_validator_spark.operators import drift as drift_ops
 from jsonschema_validator_spark.operators import integrity as ri_ops
 from jsonschema_validator_spark.operators import stats as stats_ops
 from jsonschema_validator_spark.operators import uniqueness as uniq_ops
+from jsonschema_validator_spark.sources.tables import local_frame
 
 VIOLATION_SCHEMA = "conv_id string, turn_idx int, column string, keyword string, message string, path string, day string"
 VERDICT_ROW_SCHEMA = T.StructType(
@@ -166,7 +167,10 @@ def _drift_rows(hist: list[tuple], buckets: int, d: dict) -> list[tuple]:
     min_rows = d.get("min_rows", 200)
     label = f"drift({_drift_value(d)})"
     out = []
-    stats = drift_ops.ks_psi_local(hist, buckets, d.get("baseline"))
+    # partitions arrive in their string form, so the baseline is compared
+    # in that form too
+    baseline = d.get("baseline")
+    stats = drift_ops.ks_psi_local(hist, buckets, None if baseline is None else str(baseline))
     for day, (n_rows, n_base, ks, psi) in stats.items():
         crit = (
             ks_t
@@ -302,6 +306,11 @@ class CheckSuite:
         Only `referential` (a parent-table join) and `unique` on other
         than two columns run their own row-count jobs.
 
+        The pass A and pass B rows come back as one local relation
+        (``sources.tables.local_frame``): a LocalTableScan, so collecting
+        them runs no job and starts no Python worker. ``day`` is the
+        partition value cast to string (a DATE reads 'yyyy-MM-dd').
+
         refs: name -> DataFrame for cross-table checks (the
         `referential` dataset check's parent side); a parent not found
         in refs is treated as a table reference for sources.read_table
@@ -332,9 +341,7 @@ class CheckSuite:
             with ThreadPoolExecutor(len(tasks)) as ex:
                 for rows in ex.map(lambda t: t(), tasks):
                     local_rows.extend(rows)
-            out.append(
-                df.sparkSession.createDataFrame(local_rows, schema=VERDICT_ROW_SCHEMA)
-            )
+            out.append(local_frame(df.sparkSession, local_rows, VERDICT_ROW_SCHEMA))
         out += [self._dataset_verdicts(df, d, refs) for d in dataset if _standalone(d)]
         if not out:
             raise UninitialisedPlanError("empty check suite")
@@ -378,7 +385,7 @@ class CheckSuite:
         memo_key = ("passA", df.schema.json())
         cached = self._expr_memo.get(memo_key)
         if cached is None:
-            sel_cols = [F.col(part)]
+            sel_cols = [F.col(part).cast("string").alias(part)]
             sel_cols += [(~c).cast("long").alias(f"f{i}") for i, (_, c) in enumerate(flags)]
             sel_cols += [F.col(c).alias(f"__ts{j}") for j, c in enumerate(ts_columns)]
             sel_cols += [F.col(c) for c in stats_columns]
@@ -526,7 +533,7 @@ class CheckSuite:
             ordering_any = ordering_any | cond
 
         perrow = df.select(part, g, o, *monotone).select(
-            F.col(part),
+            F.col(part).cast("string").alias(part),
             dup.cast("long").alias("__dup"),
             ordering_any.cast("long").alias("__ord"),
             rootless.cast("long").alias("__root"),
@@ -601,7 +608,7 @@ class CheckSuite:
         if not out:
             # a suite of only partition-level checks (drift/stats/volume/
             # freshness) has no per-row violations — empty, not an error
-            return df.sparkSession.createDataFrame([], schema=VIOLATION_SCHEMA)
+            return local_frame(df.sparkSession, [], VIOLATION_SCHEMA)
         res = out[0]
         for o in out[1:]:
             res = res.unionByName(o)
@@ -718,7 +725,7 @@ class CheckSuite:
             totals.join(agg, part, "left")
             .fillna(0, subset=["violation_count"])
             .select(
-                F.col(part).alias("day"),
+                F.col(part).cast("string").alias("day"),
                 F.lit(label).alias("check"),
                 (F.col("violation_count") == 0).alias("pass"),
                 "violation_count",

@@ -14,6 +14,8 @@ line exists with the CURRENT spec hash — changing the check spec
 invalidates prior lineage (the spec hash is the compile-memoization key
 analog, /root/reference/src/types/scope_builder.rs:43-54, made
 content-addressed instead of uuid-addressed).
+`partition` is the partition value cast to string, the form verdict
+rows carry as `day`.
 
 Resume = anti-join pending partitions against the manifest (driver-side:
 the partition list is small — O(days), never O(rows)) and process only
@@ -35,6 +37,7 @@ from pyspark.sql import functions as F
 from jsonschema_validator_spark.plans.check_suite import VERDICT_ROW_SCHEMA, CheckSuite
 from jsonschema_validator_spark.sources.tables import (
     current_snapshot_id,
+    local_frame,
     overwrite_partitions,
     read_table,
 )
@@ -121,7 +124,9 @@ class CheckpointedRunner:
 
     # -- run ----------------------------------------------------------------
     def pending_partitions(self, df: DataFrame) -> list[str]:
-        part = self.suite.partition_by
+        """The partition values (in the string form verdict rows and the
+        manifest carry) that have no done manifest line."""
+        part = F.col(self.suite.partition_by).cast("string")
         allp = [r[0] for r in df.select(part).distinct().collect()]
         done = self.done_partitions()
         return sorted(p for p in allp if p not in done)
@@ -131,7 +136,7 @@ class CheckpointedRunner:
     ) -> RunReport:
         """Process pending partitions in batches; each batch writes its
         verdicts/violations partitions then commits manifest lines."""
-        part = self.suite.partition_by
+        part = F.col(self.suite.partition_by).cast("string")
         pending = self.pending_partitions(df)
         skipped = sorted(self.done_partitions())
         if not pending:
@@ -140,14 +145,14 @@ class CheckpointedRunner:
         batches = [pending[i : i + batch_size] for i in range(0, len(pending), batch_size)]
 
         for batch in batches:
-            sub = df.filter(F.col(part).isin(batch))
+            sub = df.filter(part.isin(batch))
             # verdict and violation rows name the partition `day` whatever
             # the suite's partition column is called. The verdict rows are
             # collected once: the sink writes them and the manifest
             # metrics come from them, so no check runs a second time.
             verdict_rows = self.suite.verdicts(sub).collect()
             overwrite_partitions(
-                df.sparkSession.createDataFrame(verdict_rows, schema=VERDICT_ROW_SCHEMA),
+                local_frame(df.sparkSession, verdict_rows, VERDICT_ROW_SCHEMA),
                 os.path.join(self.out, "verdicts"),
                 "day",
             )

@@ -30,6 +30,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def current_snapshot_id(spark: SparkSession, ref: str) -> int | None:
@@ -111,6 +112,26 @@ def overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
         .partitionBy(partition_col)
         .parquet(path)
     )
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema``'s field
+    order; ``schema`` a StructType or a DDL string), handed to Spark as
+    an Arrow table. Spark plans it as a LocalTableScan: no pickled RDD,
+    so no Python worker ever starts for it, and ``collect()`` runs no
+    job. The list form of ``createDataFrame`` instead reserializes the
+    rows through a Python-worker task per core on every action."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def write_bucketed(

@@ -192,3 +192,20 @@ def test_run_leaves_session_conf_alone(spark, df, tmp_path):
     before = spark.conf.get(key)
     CheckpointedRunner(CheckSuite(transcripts_spec()).build(), str(tmp_path / "out_conf")).run(df)
     assert spark.conf.get(key) == before
+
+
+def test_date_partition_commits_manifest(spark, df, tmp_path):
+    """A DATE partition column: verdict rows carry its 'yyyy-MM-dd'
+    string (the same rows as the string-partitioned table), the manifest
+    records that string, and a second run skips every partition."""
+    suite = CheckSuite({**transcripts_spec(), "partition_by": "d"}).build()
+    dfd = df.withColumn("d", F.to_date("day")).drop("day")
+    assert _verdict_rows(suite.verdicts(dfd)) == _verdict_rows(
+        CheckSuite(transcripts_spec()).build().verdicts(df)
+    )
+    runner = CheckpointedRunner(suite, str(tmp_path / "out_date"))
+    report = runner.run(dfd)
+    assert len(report.processed) == 15
+    assert runner.done_partitions() == set(report.processed)
+    again = runner.run(dfd)
+    assert again.processed == [] and again.skipped == report.processed
