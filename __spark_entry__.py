@@ -1017,10 +1017,10 @@ FROM agg ORDER BY day
 def q_drift_matrix_events(spark, sf_dir):
     """ALL-PAIRS drift (operators/drift.py drift_matrix): KS + PSI for
     every unordered partition pair, here event_type x event_type (10
-    pairs). One histogram scan; the pairwise stage runs entirely on the
-    aggregated (partitions x buckets) relation, so the quadratic factor
-    never touches input rows. Same sample-size-aware KS decision rule
-    as drift_events_value."""
+    pairs). One histogram scan; the pairs are computed in numpy over the
+    collected (partitions x buckets) count matrix, so the quadratic
+    factor never touches input rows. Same sample-size-aware KS decision
+    rule as drift_events_value."""
     import math
 
     from jsonschema_validator_spark.operators.drift import drift_matrix
@@ -9516,8 +9516,8 @@ def q_jsd_events(spark, sf_dir):
     (operators/drift.jensen_shannon): each type's value distribution vs
     all other types pooled, on a shared 25-bucket [0, 500) grid —
     symmetric, bounded in [0,1] bit, and robust to empty buckets where
-    PSI explodes. One histogram shuffle; divergence is Column algebra
-    over the densified grid."""
+    PSI explodes. One histogram shuffle; the divergence is numpy over
+    the collected dense (type x bucket) count matrix."""
     from jsonschema_validator_spark.operators.drift import jensen_shannon
 
     ev = _t(spark, sf_dir, "events")
@@ -10915,8 +10915,9 @@ def q_histogram_distances_events(spark, sf_dir):
     drift.histogram_distances) between click and purchase value
     densities on a shared 20-bin equal-width grid from the pooled
     min/max: the bounded [0,1] "how far" dial next to the "is it
-    drift" tests. One scalar range reduce, one groupBy to 20 bins,
-    one reduce. Oracle replays the identical binning."""
+    drift" tests. One min/max job, one groupBy(group, bin) histogram
+    job, then numpy over the two collected count rows. Oracle replays
+    the identical binning."""
     from jsonschema_validator_spark.operators.drift import histogram_distances
 
     return histogram_distances(

@@ -11,7 +11,8 @@ resulting series is O(partitions) rows — bounded and tiny at any input
 size (365 rows for a year of days at 10^12 turns) — so it is pinned at
 the driver and the order-sensitive math (median, MAD, lag) is computed
 in exact plain arithmetic there, the same bounded-merge pattern as
-drift._pin_dense_histogram and the fused pass A/B merges in
+the binned drift statistics (drift._dense_histogram) and the fused
+pass A/B merges in
 plans/check_suite.py. This deliberately avoids the
 single-partition global window a lazy lag()-over-days plan would need
 (Window.orderBy without partitionBy funnels every row through one

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .stats import wilson_bounds
+
 
 def cochran_armitage(
     df: DataFrame,
@@ -206,10 +208,8 @@ def wilson_intervals(
     outcome: str,
     z: float = 1.96,
 ) -> DataFrame:
-    """Wilson score interval for a per-group 0/1 rate:
-
-        center = (p + z^2/2n) / (1 + z^2/n)
-        half   = z * sqrt( p(1-p)/n + z^2/4n^2 ) / (1 + z^2/n)
+    """Wilson score interval for a per-group 0/1 rate
+    (``stats.wilson_bounds``).
 
     The normal-approximation interval p +- z sqrt(pq/n) degenerates
     exactly where validation rates live — near 0 and 1 it produces
@@ -236,12 +236,7 @@ def wilson_intervals(
     )
     n = F.col("n")
     p = F.col("x") / n
-    z2 = z * z
-    denom = 1.0 + z2 / n
-    center = (p + z2 / (2 * n)) / denom
-    half = (
-        z * F.sqrt(p * (1 - p) / n + z2 / (4 * n * n)) / denom
-    )
+    lo, hi = wilson_bounds(n, F.col("x"), z)
     nlo = p - z * F.sqrt(p * (1 - p) / n)
     nhi = p + z * F.sqrt(p * (1 - p) / n)
     return agg.select(
@@ -249,8 +244,8 @@ def wilson_intervals(
         n.cast("long").alias("n"),
         F.col("x").cast("long").alias("successes"),
         F.round(p, 6).alias("rate"),
-        F.round(center - half, 6).alias("wilson_lo"),
-        F.round(center + half, 6).alias("wilson_hi"),
+        F.round(lo, 6).alias("wilson_lo"),
+        F.round(hi, 6).alias("wilson_hi"),
         F.round(nlo, 6).alias("normal_lo"),
         F.round(nhi, 6).alias("normal_hi"),
     )

@@ -1,12 +1,17 @@
 """Distribution-drift checks between partitions: KS statistic and PSI
-over a shared bucket grid (SURVEY.md §2.4 KS/PSI rows).
+over a shared bucket grid (SURVEY.md §2.4 KS/PSI rows), the all-pairs
+KS/PSI matrix, Jensen-Shannon and the histogram distances, beside the
+unbinned screens (Wasserstein-1, energy, CvM/AD, Mann-Whitney, the
+one-sample KS contract).
 
-Design: one groupBy(partition, bucket).count() histogram pass, then the
-statistics are computed *distributed* in Column algebra over the tiny
-histogram relation (partitions x buckets rows): PSI is an aggregate of
-per-bucket terms, KS is the sup of |ECDF difference| via a cumulative-sum
-window over buckets. No driver-side loop, no pandas — scale-independent
-(the histogram is O(partitions*buckets) regardless of input rows).
+Binned design: ``value_histogram`` builds every histogram in one
+groupBy(partition, bucket).count() job. The histogram is
+O(partitions x buckets) rows whatever the input size, so it is
+collected to the driver and densified once (``_dense_histogram``), and
+each statistic is a few numpy lines over that count matrix. The result
+comes back as a local relation (``sources.tables.local_frame``), so the
+binned entry points are EAGER: calling one runs the histogram job, plus
+one min/max job first when a grid bound is missing.
 
 The KS statistic here is the discrete ECDF sup-difference on the shared
 grid — deterministic and oracle-checkable in ANSI SQL (the exact same
@@ -17,10 +22,15 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 
 from ..sources.tables import local_frame
+
+# PSI floors each bucket share at EPS, so an empty bucket keeps log(p/q) finite
+EPS = 1e-6
 
 
 def bucketize(value: Column, lo: float, hi: float, buckets: int) -> Column:
@@ -66,196 +76,16 @@ def value_histogram(
     lo: float | None = None,
     hi: float | None = None,
 ) -> DataFrame:
-    """(partition, bucket, n) with the SAME bucket grid for every
-    partition (shared bucketing is what makes KS/PSI comparable)."""
+    """(part, bucket, n) with the SAME bucket grid for every partition
+    (shared bucketing is what makes KS/PSI comparable); NULL values are
+    left out. A missing bound comes from ``value_bounds``."""
     value = F.col(value) if isinstance(value, str) else value
-    if lo is None or hi is None:
-        row = df.agg(
-            F.min(value.cast("double")).alias("lo"), F.max(value.cast("double")).alias("hi")
-        ).first()
-        lo = row["lo"] if lo is None else lo
-        hi = row["hi"] if hi is None else hi
-        if lo is None:  # all-null column
-            lo, hi = 0.0, 1.0
-    b = bucketize(value, float(lo), float(hi), buckets)
+    ((lo, hi),) = value_bounds(df, [(value, lo, hi)])
     return (
-        df.select(F.col(partition_col).alias("part"), b.alias("bucket"))
+        df.select(F.col(partition_col).alias("part"), bucketize(value, lo, hi, buckets).alias("bucket"))
         .filter(F.col("bucket").isNotNull())
         .groupBy("part", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def ks_psi(
-    df: DataFrame,
-    value: Column | str,
-    partition_col: str,
-    buckets: int = 20,
-    baseline_partition: str | None = None,
-    lo: float | None = None,
-    hi: float | None = None,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """Per-partition drift vs a baseline distribution.
-
-    baseline_partition=None compares each partition against the GLOBAL
-    distribution (all partitions pooled); otherwise against the named
-    partition. Returns (part, n_rows, n_base, ks_stat, psi) — n_base is
-    the baseline sample size, which the sample-size-aware KS decision
-    rule (``ks_critical_value``) needs."""
-    hist = value_histogram(df, value, partition_col, buckets, lo, hi)
-    return ks_psi_from_histogram(hist, buckets, baseline_partition, eps)
-
-
-def _pin_dense_histogram(
-    hist: DataFrame, buckets: int, baseline_partition: str | None = None
-) -> DataFrame:
-    """Materialize the (part, bucket, n) histogram once as a DENSE local
-    relation (every part x every bucket, n>=0). The histogram fans out
-    into THREE downstream branches (the parts grid, the densify join,
-    the baseline aggregate); left inlined, Catalyst re-derives it per
-    branch — including re-SCANNING the raw input (measured: 6 parquet
-    scans in the final plan of ks_psi over a parquet source; exchange
-    reuse did not collapse them). The relation is O(partitions x
-    buckets) by construction — bounded and tiny at any input size — so
-    pinning it on the driver guarantees exactly ONE scan of the input
-    however many branches read it (the same bounded-merge pattern as the
-    fused pass A/B in plans/check_suite.py). Densifying here (a dict
-    fill over P x B) also deletes the crossJoin(parts, range(buckets))
-    grid + two left joins the lazy plan needed, so the downstream plan
-    is local-relation -> window -> agg only. NOTE: this makes the drift
-    operators EAGER — construction triggers the histogram job. Raises
-    MissingBaselineError when ``baseline_partition`` is given and holds
-    no counted value."""
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    spark = hist.sparkSession
-    counts: dict = {}
-    for part, bucket, n in hist.collect():
-        key = (part, int(bucket))
-        counts[key] = counts.get(key, 0) + int(n)
-    parts = sorted({p for (p, _) in counts}, key=lambda p: (p is None, str(p)))
-    if baseline_partition is not None and baseline_partition not in parts:
-        raise MissingBaselineError(baseline_partition)
-    rows = [(p, b, counts.get((p, b), 0)) for p in parts for b in range(buckets)]
-    schema = StructType(
-        [
-            hist.schema["part"],
-            StructField("bucket", IntegerType(), False),
-            StructField("n", LongType(), False),
-        ]
-    )
-    return local_frame(spark, rows, schema)
-
-
-def ks_psi_from_histogram(
-    hist: DataFrame,
-    buckets: int,
-    baseline_partition: str | None = None,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """KS + PSI from a pre-computed (part, bucket, n) histogram, such as
-    a ``value_histogram`` sink of streaming/validate.stream_partials
-    summed over its batches. Raises MissingBaselineError when
-    baseline_partition has no counted value."""
-    dense = _pin_dense_histogram(hist, buckets, baseline_partition)
-
-    # baseline distribution per bucket (dense already covers the grid)
-    if baseline_partition is None:
-        base = dense.groupBy("bucket").agg(F.sum("n").alias("qn"))
-    else:
-        base = (
-            dense.filter(F.col("part") == baseline_partition)
-            .groupBy("bucket")
-            .agg(F.sum("n").alias("qn"))
-        )
-    dense = dense.join(F.broadcast(base), "bucket", "left").fillna(0, subset=["qn"])
-
-    w_part = Window.partitionBy("part")
-    w_cum = Window.partitionBy("part").orderBy("bucket")
-    p_tot = F.sum("n").over(w_part)
-    q_tot = F.sum("qn").over(w_part)  # same for all parts; computed locally
-    p = F.col("n") / p_tot
-    q = F.col("qn") / q_tot
-    p_s = F.greatest(p, F.lit(eps))
-    q_s = F.greatest(q, F.lit(eps))
-    scored = dense.select(
-        "part",
-        "bucket",
-        "n",
-        "qn",
-        p.alias("p"),
-        q.alias("q"),
-        ((p_s - q_s) * F.log(p_s / q_s)).alias("psi_term"),
-        F.abs(F.sum(p).over(w_cum) - F.sum(q).over(w_cum)).alias("ecdf_diff"),
-    )
-    return scored.groupBy("part").agg(
-        F.sum("n").cast("long").alias("n_rows"),
-        F.sum("qn").cast("long").alias("n_base"),
-        F.max("ecdf_diff").alias("ks_stat"),
-        F.sum("psi_term").alias("psi"),
-    )
-
-
-def drift_matrix(
-    df: DataFrame,
-    value: Column | str,
-    partition_col: str,
-    buckets: int = 20,
-    lo: float | None = None,
-    hi: float | None = None,
-    eps: float = 1e-6,
-    hist: DataFrame | None = None,
-) -> DataFrame:
-    """ALL-PAIRS drift matrix: KS + PSI for every unordered partition
-    pair (part_a < part_b), not just partition-vs-baseline — the check
-    that finds a day whose distribution quietly diverged from every
-    OTHER day, which baseline-pooled comparison dilutes.
-
-    Scale shape: the input is scanned ONCE (the same
-    ``value_histogram`` pass ``ks_psi`` uses, or a caller-supplied
-    histogram from the fused suite); everything pairwise happens on the
-    aggregated (partitions x buckets) relation, so the quadratic factor
-    is P^2*B rows — independent of input size. At 10^12 turns with
-    P=365 days and B=20 that is ~2.7M tiny rows, a trivially
-    broadcastable self-join.
-
-    Returns (part_a, part_b, n_a, n_b, ks_stat, psi) with psi computed
-    symmetrically-smoothed the same way as ``ks_psi_from_histogram``
-    (PSI is directional a->b: p=part_a, q=part_b)."""
-    if hist is None:
-        hist = value_histogram(df, value, partition_col, buckets, lo, hi)
-    dense = _pin_dense_histogram(hist, buckets)
-
-    a = dense.select(
-        F.col("part").alias("part_a"), "bucket", F.col("n").alias("na")
-    )
-    b = dense.select(
-        F.col("part").alias("part_b"), "bucket", F.col("n").alias("nb")
-    )
-    # the histogram side is tiny post-aggregation: broadcast one side so
-    # the pair join never shuffles the (already small) relation twice
-    pairs = a.join(F.broadcast(b), "bucket").where(F.col("part_a") < F.col("part_b"))
-
-    w_pair = Window.partitionBy("part_a", "part_b")
-    w_cum = Window.partitionBy("part_a", "part_b").orderBy("bucket")
-    p = F.col("na") / F.sum("na").over(w_pair)
-    q = F.col("nb") / F.sum("nb").over(w_pair)
-    p_s = F.greatest(p, F.lit(eps))
-    q_s = F.greatest(q, F.lit(eps))
-    scored = pairs.select(
-        "part_a",
-        "part_b",
-        "na",
-        "nb",
-        ((p_s - q_s) * F.log(p_s / q_s)).alias("psi_term"),
-        F.abs(F.sum(p).over(w_cum) - F.sum(q).over(w_cum)).alias("ecdf_diff"),
-    )
-    return scored.groupBy("part_a", "part_b").agg(
-        F.sum("na").cast("long").alias("n_a"),
-        F.sum("nb").cast("long").alias("n_b"),
-        F.max("ecdf_diff").alias("ks_stat"),
-        F.sum("psi_term").alias("psi"),
     )
 
 
@@ -270,44 +100,130 @@ class MissingBaselineError(ValueError):
         )
 
 
-def ks_psi_local(
-    hist_rows,
-    buckets: int,
-    baseline_partition: str | None = None,
-    eps: float = 1e-6,
-) -> dict:
-    """Driver-side KS/PSI over a collected (part, bucket, n) histogram —
-    identical math to ks_psi_from_histogram, in numpy. Used by the fused
-    CheckSuite plan: the histogram is O(partitions x buckets) (tiny even
-    at 10^12 input turns), so shipping it to the driver and skipping a
-    dozen micro-stages is strictly cheaper than the distributed version.
-    Returns {part: (n_rows, n_base, ks_stat, psi)}. Raises
-    MissingBaselineError when baseline_partition has no counted value."""
-    import numpy as np
-
-    parts = sorted({r[0] for r in hist_rows})
+def _dense_histogram(hist_rows, buckets: int) -> tuple[list, np.ndarray]:
+    """(parts, counts) of collected (part, bucket, n) rows: the distinct
+    partitions ordered by their string form with NULL last, and the
+    (parts x buckets) float matrix of their counts, 0 for an empty
+    bucket."""
+    parts = sorted({r[0] for r in hist_rows}, key=lambda p: (p is None, str(p)))
     idx = {p: i for i, p in enumerate(parts)}
-    if baseline_partition is not None and baseline_partition not in idx:
-        raise MissingBaselineError(baseline_partition)
-    m = np.zeros((len(parts), buckets), dtype=np.float64)
+    counts = np.zeros((len(parts), buckets))
     for p, b, n in hist_rows:
-        m[idx[p], int(b)] += n
-    totals = m.sum(axis=1)
-    q_counts = (
-        m.sum(axis=0) if baseline_partition is None else m[idx[baseline_partition]]
+        counts[idx[p], int(b)] += n
+    return parts, counts
+
+
+def _ks_psi(p_counts: np.ndarray, q_counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """KS statistic and PSI of each row of ``p_counts`` against the
+    matching row of ``q_counts`` (or against its one row). Each row is
+    normalized by its total; PSI floors each share at EPS."""
+    p = p_counts / np.maximum(p_counts.sum(-1, keepdims=True), 1.0)
+    q = q_counts / np.maximum(q_counts.sum(-1, keepdims=True), 1.0)
+    ps, qs = np.maximum(p, EPS), np.maximum(q, EPS)
+    ks = np.abs(np.cumsum(p, -1) - np.cumsum(q, -1)).max(-1)
+    return ks, ((ps - qs) * np.log(ps / qs)).sum(-1)
+
+
+def _local(hist: DataFrame, rows: list, keys: list[str], ddl: str) -> DataFrame:
+    """A local frame of ``rows``: one column per name in ``keys``, typed
+    as the histogram's ``part`` column, then the ``ddl`` columns."""
+    part = hist.schema["part"]
+    fields = [StructField(k, part.dataType, part.nullable) for k in keys]
+    return local_frame(hist.sparkSession, rows, StructType(fields + DataType.fromDDL(ddl).fields))
+
+
+def ks_psi_local(hist_rows, buckets: int, baseline_partition: str | None = None) -> dict:
+    """KS and PSI of every partition of a collected (part, bucket, n)
+    histogram against a baseline: the GLOBAL distribution (all
+    partitions pooled) when ``baseline_partition`` is None, else the
+    named partition. Returns {part: (n_rows, n_base, ks_stat, psi)};
+    n_base is the baseline sample size, which the sample-size-aware KS
+    decision rule (``ks_critical_value``) needs. Raises
+    MissingBaselineError when ``baseline_partition`` has no counted
+    value."""
+    parts, counts = _dense_histogram(hist_rows, buckets)
+    if baseline_partition is not None and baseline_partition not in parts:
+        raise MissingBaselineError(baseline_partition)
+    q = counts.sum(0) if baseline_partition is None else counts[parts.index(baseline_partition)]
+    ks, psi = _ks_psi(counts, q)
+    n_base = int(q.sum())
+    return {
+        p: (int(n), n_base, float(k), float(s))
+        for p, n, k, s in zip(parts, counts.sum(1), ks, psi)
+    }
+
+
+def ks_psi_from_histogram(
+    hist: DataFrame, buckets: int, baseline_partition: str | None = None
+) -> DataFrame:
+    """``ks_psi_local`` over a (part, bucket, n) histogram frame, such
+    as a ``value_histogram`` sink of streaming/validate.stream_partials
+    summed over its batches. EAGER: collects the histogram. Returns
+    (part, n_rows, n_base, ks_stat, psi); raises MissingBaselineError
+    when ``baseline_partition`` has no counted value."""
+    stats = ks_psi_local(hist.collect(), buckets, baseline_partition)
+    return _local(
+        hist,
+        [(p, *s) for p, s in stats.items()],
+        ["part"],
+        "n_rows bigint, n_base bigint, ks_stat double, psi double",
     )
-    n_base = int(q_counts.sum())
-    q = q_counts / max(q_counts.sum(), 1.0)
-    out = {}
-    for p in parts:
-        row = m[idx[p]]
-        tot = totals[idx[p]]
-        pr = row / max(tot, 1.0)
-        ps, qs = np.maximum(pr, eps), np.maximum(q, eps)
-        psi = float(np.sum((ps - qs) * np.log(ps / qs)))
-        ks = float(np.max(np.abs(np.cumsum(pr) - np.cumsum(q))))
-        out[p] = (int(tot), n_base, ks, psi)
-    return out
+
+
+def ks_psi(
+    df: DataFrame,
+    value: Column | str,
+    partition_col: str,
+    buckets: int = 20,
+    baseline_partition: str | None = None,
+    lo: float | None = None,
+    hi: float | None = None,
+) -> DataFrame:
+    """Per-partition drift vs a baseline distribution: ``value_histogram``
+    then ``ks_psi_from_histogram``. EAGER. Returns (part, n_rows,
+    n_base, ks_stat, psi)."""
+    hist = value_histogram(df, value, partition_col, buckets, lo, hi)
+    return ks_psi_from_histogram(hist, buckets, baseline_partition)
+
+
+def drift_matrix(
+    df: DataFrame,
+    value: Column | str,
+    partition_col: str,
+    buckets: int = 20,
+    lo: float | None = None,
+    hi: float | None = None,
+) -> DataFrame:
+    """ALL-PAIRS drift matrix: KS + PSI for every unordered partition
+    pair (part_a < part_b; a NULL partition is in no pair), not just
+    partition-vs-baseline — the check that finds a day whose
+    distribution quietly diverged from every OTHER day, which
+    baseline-pooled comparison dilutes.
+
+    The input is scanned ONCE (``value_histogram``); the pairs are
+    computed in numpy over the collected (partitions x buckets) matrix,
+    so the quadratic factor is P^2*B floats, independent of input size.
+    EAGER. Returns (part_a, part_b, n_a, n_b, ks_stat, psi); PSI is
+    directional a->b (p=part_a, q=part_b), so each pair equals
+    ``ks_psi`` of part_a against baseline part_b."""
+    hist = value_histogram(df, value, partition_col, buckets, lo, hi)
+    parts, counts = _dense_histogram(hist.collect(), buckets)
+    pairs = [
+        (i, j)
+        for i, a in enumerate(parts)
+        for j, b in enumerate(parts)
+        if a is not None and b is not None and a < b
+    ]
+    ia, ib = [i for i, _ in pairs], [j for _, j in pairs]
+    ks, psi = _ks_psi(counts[ia], counts[ib])
+    n = counts.sum(1)
+    rows = [
+        (parts[i], parts[j], int(n[i]), int(n[j]), float(k), float(s))
+        for i, j, k, s in zip(ia, ib, ks, psi)
+    ]
+    return _local(
+        hist, rows, ["part_a", "part_b"], "n_a bigint, n_b bigint, ks_stat double, psi double"
+    )
 
 
 def ks_critical_value(n: int, m: int, alpha: float = 0.01) -> float:
@@ -453,47 +369,29 @@ def jensen_shannon(
     symmetric and bounded in [0, 1] bit (unlike PSI, which explodes on
     empty buckets, and KS, which only sees the worst single gap).
 
-    ONE groupBy(part, bucket).count() histogram pass; the divergence is
-    Column algebra over the densified (part x bucket) grid (distinct
-    parts cross-join the fixed bucket ids — bounded, both tiny — so
-    zero-count buckets contribute their q*log2(q/m) mass instead of
-    silently vanishing). 0*log(0/x) terms are 0 by convention (handled
-    with when-guards, not NaN arithmetic). Returns per part:
-    n, jsd_bits, flag.
-    """
-    spark = df.sparkSession
-    counts = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(
-            F.col(part_col).alias("__p"),
-            bucketize(F.col(value_col).cast("double"), lo, hi, buckets).alias("__b"),
-        )
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    grid = counts.select("__p").distinct().crossJoin(
-        spark.range(buckets).select(F.col("id").cast("int").alias("__b"))
-    )
-    dense = grid.join(counts, ["__p", "__b"], "left").select(
-        "__p", "__b", F.coalesce("__c", F.lit(0)).alias("__c")
-    )
-    wp = Window.partitionBy("__p")
-    wb = Window.partitionBy("__b")
-    wall = Window.partitionBy()
-    dense = (
-        dense.withColumn("__np", F.sum("__c").over(wp))
-        .withColumn("__nb", F.sum("__c").over(wb))
-        .withColumn("__n", F.sum("__c").over(wall))
-    )
-    p = F.col("__c") / F.col("__np")
-    q = (F.col("__nb") - F.col("__c")) / (F.col("__n") - F.col("__np"))
-    m = (p + q) / 2
-    lg2 = F.log(F.lit(2.0))
-    term = F.when(p > 0, p * F.log(p / m) / lg2 / 2).otherwise(F.lit(0.0)) + F.when(
-        q > 0, q * F.log(q / m) / lg2 / 2
-    ).otherwise(F.lit(0.0))
+    One ``value_histogram`` job; the divergence is numpy over the dense
+    (part x bucket) matrix, so zero-count buckets contribute their
+    q*log2(q/m) mass; 0*log(0/x) terms are 0 by convention. EAGER.
+    Returns per part: n, jsd_bits (rounded to 6), flag. A lone
+    partition has no rest to compare with: its jsd_bits and flag are
+    NULL."""
+    hist = value_histogram(df, value_col, part_col, buckets, lo, hi)
+    parts, c = _dense_histogram(hist.collect(), buckets)
+    n_p = c.sum(1, keepdims=True)
+    rest = c.sum() - n_p
+    with np.errstate(divide="ignore", invalid="ignore"):
+        p = c / n_p
+        q = (c.sum(0) - c) / rest
+        m = (p + q) / 2
+        lg2 = np.log(2.0)
+        jsd = sum(np.where(x > 0, x * np.log(x / m) / lg2 / 2, 0.0) for x in (p, q)).sum(1)
+    rows = [
+        (part, int(n), float(j) if r > 0 else None)
+        for part, n, r, j in zip(parts, n_p[:, 0], rest[:, 0], jsd)
+    ]
     return (
-        dense.groupBy(F.col("__p").alias(part_col))
-        .agg(F.max("__np").alias("n"), F.round(F.sum(term), 6).alias("jsd_bits"))
+        _local(hist, rows, [part_col], "n bigint, jsd double")
+        .select(part_col, "n", F.round("jsd", 6).alias("jsd_bits"))
         .withColumn("flag", F.col("jsd_bits") > threshold)
     )
 
@@ -856,71 +754,35 @@ def histogram_distances(
         H   = sqrt(1 - BC)                 (0 = identical)
         TVD = 0.5 * sum_k |p_k - q_k|      (0 = identical)
 
-    The shared grid comes from the POOLED min/max (one scalar reduce,
-    broadcast back); values land in bin floor((v-lo)/w) clamped to
-    [0, n_bins-1], so both sides are binned identically and the
-    distances are comparable across runs. One groupBy to O(n_bins)
-    rows, one reduce. Returns one row: (n_a, n_b, n_bins, hellinger,
-    tvd, bhattacharyya), floats rounded to 6; empty sides yield NULLs.
-    """
+    The shared grid spans the two groups' POOLED min/max (one
+    ``value_bounds`` job), so both sides are binned identically; one
+    ``value_histogram`` job by group, then numpy over the two count
+    rows. EAGER. Returns one row: (n_a, n_b, n_bins, hellinger, tvd,
+    bhattacharyya), floats rounded to 6. With one side empty the three
+    distances are NULL; with both empty n_a and n_b are NULL too."""
     vcol = F.col(value) if isinstance(value, str) else value
-    base = df.filter(
-        vcol.isNotNull() & F.col(group_col).isin(group_a, group_b)
+    pair = df.filter(F.col(group_col).isin(group_a, group_b)).select(
+        vcol.cast("double").alias("v"), (F.col(group_col) == group_a).alias("is_a")
+    )
+    hist = value_histogram(pair, "v", "is_a", n_bins)
+    parts, c = _dense_histogram(hist.collect(), n_bins)
+    a, b = (c[parts.index(s)] if s in parts else np.zeros(n_bins) for s in (True, False))
+    n, m = a.sum(), b.sum()
+    sizes = (int(n), int(m)) if parts else (None, None)
+    dist = (None, None, None)
+    if n > 0 and m > 0:
+        bc = float(np.sqrt(a * b).sum() / np.sqrt(n * m))
+        dist = (math.sqrt(1.0 - min(bc, 1.0)), float(0.5 * np.abs(a / n - b / m).sum()), bc)
+    return _local(
+        hist,
+        [(*sizes, n_bins, *dist)],
+        [],
+        "n_a bigint, n_b bigint, n_bins int not null, h double, tv double, bc double",
     ).select(
-        vcol.cast("double").alias("v"),
-        (F.col(group_col) == group_a).alias("is_a"),
-    )
-    rng = base.agg(
-        F.min("v").alias("lo"), F.max("v").alias("hi")
-    )
-    width = (F.col("hi") - F.col("lo")) / float(n_bins)
-    binned = base.crossJoin(F.broadcast(rng)).select(
-        F.when(
-            F.col("hi") > F.col("lo"),
-            F.least(
-                F.floor((F.col("v") - F.col("lo")) / width),
-                F.lit(n_bins - 1),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .alias("bin"),
-        "is_a",
-    )
-    per_bin = binned.groupBy("bin").agg(
-        F.sum(F.col("is_a").cast("long")).alias("a"),
-        F.sum((~F.col("is_a")).cast("long")).alias("b"),
-    )
-    n = F.col("n_a").cast("double")
-    m = F.col("n_b").cast("double")
-    bc = F.col("__sab") / F.sqrt(n * m)
-    agg2 = per_bin.agg(
-        F.sum("a").alias("n_a"),
-        F.sum("b").alias("n_b"),
-        F.sum(
-            F.sqrt(F.col("a").cast("double") * F.col("b").cast("double"))
-        ).alias("__sab"),
-    )
-    tv = per_bin.crossJoin(F.broadcast(agg2.select(
-        F.col("n_a").alias("__tn"), F.col("n_b").alias("__tm")
-    ))).agg(
-        F.sum(
-            F.abs(
-                F.col("a").cast("double") / F.col("__tn")
-                - F.col("b").cast("double") / F.col("__tm")
-            )
-        ).alias("__tvd2")
-    )
-    out = agg2.crossJoin(F.broadcast(tv))
-    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    return out.select(
         "n_a",
         "n_b",
-        F.lit(n_bins).cast("int").alias("n_bins"),
-        F.when(
-            ok, F.round(F.sqrt(1.0 - F.least(bc, F.lit(1.0))), 6)
-        ).alias("hellinger"),
-        F.when(ok, F.round(0.5 * F.col("__tvd2"), 6)).alias("tvd"),
-        F.when(ok, F.round(bc, 6)).alias("bhattacharyya"),
+        "n_bins",
+        *[F.round(x, 6).alias(y) for x, y in (("h", "hellinger"), ("tv", "tvd"), ("bc", "bhattacharyya"))],
     )
 
 

@@ -889,6 +889,21 @@ def anova_f(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
     )
 
 
+def wilson_bounds(n: Column, x: Column, z: float) -> tuple[Column, Column]:
+    """Wilson score interval (lo, hi) of ``x`` successes in ``n`` trials
+    at normal quantile ``z``, with p = x/n:
+
+        (p + z^2/2n -+ z sqrt((p(1-p) + z^2/4n) / n)) / (1 + z^2/n)
+    """
+    n = n.cast("double")
+    p = x / n
+    z2 = z * z
+    center = p + z2 / (2 * n)
+    half = z * F.sqrt((p * (1 - p) + z2 / (4 * n)) / n)
+    denom = 1.0 + z2 / n
+    return (center - half) / denom, (center + half) / denom
+
+
 def pass_rate_wilson(
     df: DataFrame,
     ok: Column,
@@ -931,19 +946,12 @@ def pass_rate_wilson_from_counts(
     agg = counts_df.groupBy("part").agg(
         F.sum("n").alias("n"), F.sum("passed").alias("passed")
     )
-    n = F.col("n").cast("double")
-    p = F.col("passed") / n
-    z2 = z * z
-    denom = 1.0 + z2 / n
-    center = p + z2 / (2 * n)
-    half = z * F.sqrt((p * (1 - p) + z2 / (4 * n)) / n)
-    lo = (center - half) / denom
-    hi = (center + half) / denom
+    lo, hi = wilson_bounds(F.col("n"), F.col("passed"), z)
     return agg.select(
         "part",
         "n",
         "passed",
-        F.round(p, 6).alias("rate"),
+        F.round(F.col("passed") / F.col("n").cast("double"), 6).alias("rate"),
         F.round(lo, 6).alias("wilson_lo"),
         F.round(hi, 6).alias("wilson_hi"),
         F.when(hi < sla, F.lit("breach"))

@@ -702,9 +702,16 @@ class CheckSuite:
         return self.verdicts(df), self.violations(df)
 
     # -- dataset checks -----------------------------------------------------
-    def _dangling_rows(self, df: DataFrame, d: dict, refs: dict | None) -> DataFrame:
-        """Rows of df whose `referential` key has no row in the parent."""
+    def _standalone_rows(self, df: DataFrame, d: dict, refs: dict | None) -> DataFrame:
+        """The violating rows of df for a standalone (``_standalone``)
+        check, read by its verdict and its violations alike: rows whose
+        `referential` key has no row in the parent, or rows whose
+        `unique` key occurs more than once. A key with a NULL column is
+        never a duplicate (SQL UNIQUE: only a certain key can repeat)."""
         cols = d["columns"]
+        if d["check"] == "unique":
+            # attribute duplicate keys to rows via a semi join back
+            return df.join(uniq_ops.duplicate_keys(df, cols).select(*cols), cols, "left_semi")
         pcols = d.get("parent_columns", cols)
         parent = d.get("parent")
         if refs and parent in refs:
@@ -716,9 +723,11 @@ class CheckSuite:
         parent_df = parent_df.select(*[F.col(pc).alias(c) for pc, c in zip(pcols, cols)])
         return ri_ops.orphans(df, parent_df, cols)
 
-    def _row_count_verdicts(self, df: DataFrame, rows: DataFrame, label: str) -> DataFrame:
-        """Verdict rows counting the violating rows of df per partition."""
+    def _dataset_verdicts(self, df: DataFrame, d: dict, refs: dict | None = None) -> DataFrame:
+        """Verdict rows counting a standalone check's violating rows of df
+        per partition."""
         part = self.partition_by
+        rows = self._standalone_rows(df, d, refs)
         agg = rows.groupBy(part).agg(F.count(F.lit(1)).alias("violation_count"))
         totals = df.groupBy(part).agg(F.count(F.lit(1)).alias("rows_checked"))
         return (
@@ -726,7 +735,7 @@ class CheckSuite:
             .fillna(0, subset=["violation_count"])
             .select(
                 F.col(part).cast("string").alias("day"),
-                F.lit(label).alias("check"),
+                F.lit(f"{d['check']}({','.join(d['columns'])})").alias("check"),
                 (F.col("violation_count") == 0).alias("pass"),
                 "violation_count",
                 "rows_checked",
@@ -734,34 +743,17 @@ class CheckSuite:
             )
         )
 
-    def _dataset_verdicts(self, df: DataFrame, d: dict, refs: dict | None = None) -> DataFrame:
-        """The row-count verdict job of a standalone (``_standalone``)
-        check: referential, or unique on other than two columns."""
-        if d["check"] == "referential":
-            rows = self._dangling_rows(df, d, refs)
-            return self._row_count_verdicts(df, rows, f"referential({','.join(d['columns'])})")
-
-        cols = d["columns"]
-        # attribute duplicate keys to partitions via a semi join back
-        dups = uniq_ops.duplicate_keys(df, cols)
-        dup_rows = df.join(dups.select(*cols), cols, "left_semi")
-        return self._row_count_verdicts(df, dup_rows, f"unique({','.join(cols)})")
-
     def _dataset_violations(self, df: DataFrame, d: dict, refs: dict | None = None) -> DataFrame:
-        part = self.partition_by
         k1, k2 = self.keys
-
-        def shape(rows: DataFrame, keyword: str, message: str) -> DataFrame:
-            return rows.select(
-                F.col(k1).alias("conv_id"),
-                F.col(k2).cast("int").alias("turn_idx"),
-                F.lit(",".join(d["columns"])).alias("column"),
-                F.lit(keyword).alias("keyword"),
-                F.lit(message).alias("message"),
-                F.lit("#").alias("path"),
-                F.col(part).alias("day"),
-            )
-
-        if d["check"] == "referential":
-            return shape(self._dangling_rows(df, d, refs), "referential", "dangling reference")
-        return shape(uniq_ops.duplicate_rows(df, d["columns"]), "unique", "duplicate key")
+        keyword, message = (
+            ("unique", "duplicate key") if d["check"] == "unique" else ("referential", "dangling reference")
+        )
+        return self._standalone_rows(df, d, refs).select(
+            F.col(k1).alias("conv_id"),
+            F.col(k2).cast("int").alias("turn_idx"),
+            F.lit(",".join(d["columns"])).alias("column"),
+            F.lit(keyword).alias("keyword"),
+            F.lit(message).alias("message"),
+            F.lit("#").alias("path"),
+            F.col(self.partition_by).alias("day"),
+        )

@@ -296,13 +296,16 @@ def test_partition_checks_in_any_number_and_shape(spark):
     """Drift without bounds, drift against a baseline partition, two drift
     checks with different buckets, and repeated stats/volume/freshness
     checks all run in one suite: each check's rows equal its single-check
-    suite's, and both drift shapes equal the distributed drift.ks_psi
-    reference (ks_stat, psi, rows_checked, pass) to 1e-9."""
+    suite's, and both drift shapes equal KS/PSI computed here in numpy
+    over the drift.value_histogram histogram (ks_stat, psi, rows_checked,
+    pass) to 1e-9."""
     from collections import Counter
 
     import math
 
-    from jsonschema_validator_spark.operators.drift import ks_psi
+    import numpy as np
+
+    from jsonschema_validator_spark.operators.drift import value_histogram
 
     df = _partition_df(spark)
     unbounded = {"check": "drift", "value": "length(text)", "buckets": 10, "min_rows": 0}
@@ -350,20 +353,61 @@ def test_partition_checks_in_any_number_and_shape(spark):
     assert by_key[("d4", "volume")].rows_checked == 3
     assert by_key[("d1", "drift(length(text))")].rows_checked == 40  # non-NULL only
     for d in (unbounded, baseline):
-        ref = ks_psi(df, F.expr(d["value"]), "day", d["buckets"], baseline_partition=d.get("baseline")).collect()
-        assert len(ref) == sum(1 for k in by_key if k[1] == f"drift({d['value']})")
+        counts = {}
+        for x in value_histogram(df, F.expr(d["value"]), "day", d["buckets"]).collect():
+            counts.setdefault(x.part, np.zeros(d["buckets"]))[x.bucket] += x.n
+        assert len(counts) == sum(1 for k in by_key if k[1] == f"drift({d['value']})")
+        base = sum(counts.values()) if d.get("baseline") is None else counts[d["baseline"]]
+        q = base / base.sum()
         passes = set()
-        for x in ref:
-            r = by_key[(x.part, f"drift({d['value']})")]
+        for part, c in counts.items():
+            r = by_key[(part, f"drift({d['value']})")]
+            p = c / c.sum()
+            ks = np.abs(np.cumsum(p) - np.cumsum(q)).max()
+            ps, qs = np.maximum(p, 1e-6), np.maximum(q, 1e-6)
+            psi = ((ps - qs) * np.log(ps / qs)).sum()
             # two-sample KS critical value at alpha = 0.01
-            n, m = max(x.n_rows, 1), max(x.n_base, 1)
+            n, m = c.sum(), base.sum()
             crit = math.sqrt(-0.5 * math.log(0.005)) * math.sqrt((n + m) / (n * m))
-            ok = x.ks_stat <= crit and x.psi <= 0.2
-            assert r.rows_checked == x.n_rows and r["pass"] == ok, x.part
-            assert abs(r.metrics["ks_stat"] - x.ks_stat) <= 1e-9, x.part
-            assert abs(r.metrics["psi"] - x.psi) <= 1e-9, x.part
+            ok = ks <= crit and psi <= 0.2
+            assert r.rows_checked == n and r["pass"] == ok, part
+            assert abs(r.metrics["ks_stat"] - ks) <= 1e-9, part
+            assert abs(r.metrics["psi"] - psi) <= 1e-9, part
             passes.add(ok)
         assert passes == {True, False}, d
+
+
+def test_drift_null_partition_is_its_own_partition(spark):
+    """A NULL partition value is one partition in drift, as in the other
+    partition-level checks: the suite emits a day=None drift row equal
+    to drift.ks_psi's part=None row."""
+    from jsonschema_validator_spark.operators.drift import ks_psi
+
+    df = spark.createDataFrame(
+        [("d1", "c1", 0, "ab"), (None, "c2", 0, "abcdefgh")],
+        "day string, conv_id string, turn_idx int, text string",
+    )
+    got = {r.day: r for r in _suite_rows([{"check": "drift", "value": "length(text)", "buckets": 4}]).verdicts(df).collect()}
+    ref = {x.part: x for x in ks_psi(df, F.length("text"), "day", 4).collect()}
+    assert set(got) == set(ref) == {"d1", None}
+    for day, x in ref.items():
+        assert got[day].rows_checked == x.n_rows == 1
+        assert (got[day].metrics["ks_stat"], got[day].metrics["psi"]) == (x.ks_stat, x.psi)
+
+
+def test_standalone_unique_null_key_is_never_a_duplicate(spark):
+    """A one-column unique check counts the same rows in its verdict and
+    its violations: two rows with a NULL key are not duplicates (SQL
+    UNIQUE), two rows with key c1 are."""
+    df = spark.createDataFrame(
+        [("d1", None, 0), ("d1", None, 1), ("d1", "c1", 0), ("d2", "c1", 1), ("d2", "c2", 0)],
+        "day string, conv_id string, turn_idx int",
+    )
+    suite = _suite_rows([{"check": "unique", "columns": ["conv_id"]}])
+    verdicts = {r.day: r.violation_count for r in suite.verdicts(df).collect()}
+    viol = suite.violations(df).collect()
+    assert verdicts == {"d1": 1, "d2": 1}
+    assert sorted((r.day, r.conv_id, r.turn_idx) for r in viol) == [("d1", "c1", 0), ("d2", "c1", 1)]
 
 
 def test_unbounded_drift_memo_does_not_grow(spark):

@@ -230,8 +230,8 @@ def test_conversation_fingerprint_plan_shapes(spark):
 def test_profile_and_drift_matrix_plan_shapes(spark):
     """json_key_profile shuffles only the slim (key, tag, long, int)
     projection — the variant payload stays map-side; drift_matrix scans
-    the input exactly ONCE (the histogram pass) and its pairwise stage
-    broadcasts the aggregated side rather than shuffling it again."""
+    the input exactly ONCE (the histogram job) and computes the pairs on
+    the driver, so the frame it returns reads only a local relation."""
     from jsonschema_validator_spark.operators.drift import drift_matrix
     from jsonschema_validator_spark.operators.profile import json_key_profile
 
@@ -245,16 +245,14 @@ def test_profile_and_drift_matrix_plan_shapes(spark):
     rs = re.search(r"ReadSchema: ([^\n]*)", p)
     assert rs and "value" not in rs.group(1) and "user_id" not in rs.group(1), p
 
-    # the histogram is pinned once (bounded P x B driver materialization,
-    # see drift._pin_histogram): the returned pairwise plan reads the
-    # LOCAL relation — zero re-scans of the raw input, however many
-    # branches consume the histogram
+    # the P x B histogram is collected and the pairs computed in numpy
+    # (drift._dense_histogram): the returned plan is the local relation
+    # alone — no re-scan of the raw input and no shuffle
     p = plan_of(
         drift_matrix(ev, F.col("value"), "event_type", buckets=10, lo=0.0, hi=500.0)
     )
-    assert "Scan parquet" not in p, p
-    assert "BroadcastExchange" in p, p
-    assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p, p
+    assert "LocalTableScan" in p, p
+    assert "Scan parquet" not in p and "Exchange" not in p, p
 
     from jsonschema_validator_spark.operators.drift import ks_psi
 

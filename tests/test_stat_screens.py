@@ -1,7 +1,8 @@
 """Hand-computed oracles for the round-4 statistical screens:
 chi_squared / spearman_rho / anova_f (operators/stats.py) and
-mann_whitney_u / jensen_shannon (operators/drift.py). Every expected
-value below is worked by hand in the comment next to it."""
+mann_whitney_u / jensen_shannon / histogram_distances
+(operators/drift.py). Every expected value below is worked by hand in
+the comment next to it."""
 
 from __future__ import annotations
 
@@ -9,7 +10,17 @@ import math
 
 import pytest
 
-from jsonschema_validator_spark.operators.drift import jensen_shannon, mann_whitney_u
+from pyspark.sql.types import DataType
+
+from jsonschema_validator_spark.operators.drift import (
+    drift_matrix,
+    histogram_distances,
+    jensen_shannon,
+    ks_psi,
+    ks_psi_from_histogram,
+    mann_whitney_u,
+    value_histogram,
+)
 from jsonschema_validator_spark.operators.stats import anova_f, chi_squared, spearman_rho
 
 
@@ -134,6 +145,61 @@ def test_jsd_leave_one_out_pools_the_rest(spark):
     )
     assert out["p1"]["jsd_bits"] == pytest.approx(expected_p1, abs=1e-6)
     assert out["p3"]["jsd_bits"] == 1.0
+
+
+def test_jsd_lone_partition_has_no_rest(spark):
+    # the leave-one-out rest of the only partition is empty: jsd_bits
+    # and flag are NULL (DuckDB's division gives NULL too)
+    df = spark.createDataFrame([("p1", 1.0), ("p1", 19.0)], "p string, v double")
+    (r,) = jensen_shannon(df, "v", "p", 0.0, 20.0, 2).collect()
+    assert (r["p"], r["n"], r["jsd_bits"], r["flag"]) == ("p1", 2, None, None)
+
+
+def test_histogram_distances_hand_computed_and_empty_sides(spark):
+    # pooled grid [0, 10] in 2 bins of width 5 (10 clamps into bin 1):
+    # a = 0, 1 | 6, 10 -> (2, 2); b = 6, 7, 8, 10 -> (0, 4). Group c
+    # and the NULL value are left out. BC = (0 + sqrt(2*4)) / sqrt(4*4)
+    # = sqrt(.5); H = sqrt(1 - sqrt(.5)); TVD = .5 * (.5 + .5) = .5
+    rows = [("a", v) for v in (0.0, 1.0, 6.0, 10.0)] + [("b", v) for v in (6.0, 7.0, 8.0, 10.0)]
+    df = spark.createDataFrame(rows + [("c", 50.0), ("a", None)], "g string, v double")
+    (r,) = histogram_distances(df, "v", "g", "a", "b", n_bins=2).collect()
+    assert (r["n_a"], r["n_b"], r["n_bins"]) == (4, 4, 2)
+    assert r["bhattacharyya"] == round(math.sqrt(0.5), 6)
+    assert r["hellinger"] == round(math.sqrt(1 - math.sqrt(0.5)), 6)
+    assert r["tvd"] == 0.5
+    # one empty side: its size is 0 and every distance NULL; both empty:
+    # the sizes are NULL too
+    assert tuple(histogram_distances(df, "v", "g", "a", "nope", n_bins=2).first()) == (
+        4, 0, 2, None, None, None,
+    )
+    assert tuple(histogram_distances(df, "v", "g", "x", "y", n_bins=2).first()) == (
+        None, None, 2, None, None, None,
+    )
+
+
+def test_binned_drift_schemas(spark):
+    # the five binned entry points keep the column names, types and
+    # nullability of the Spark plans they used to return
+    df = spark.createDataFrame(
+        [("a", 1.0, "click"), ("a", 3.0, "purchase"), ("b", 2.0, "click")],
+        "day string, v double, g string",
+    )
+    ks = "part string, n_rows bigint, n_base bigint, ks_stat double, psi double"
+    cases = [
+        (ks_psi(df, "v", "day", 5, lo=0.0, hi=5.0), ks),
+        (ks_psi_from_histogram(value_histogram(df, "v", "day", 5, 0.0, 5.0), 5), ks),
+        (
+            drift_matrix(df, "v", "day", 5, 0.0, 5.0),
+            "part_a string, part_b string, n_a bigint, n_b bigint, ks_stat double, psi double",
+        ),
+        (jensen_shannon(df, "v", "day", 0.0, 5.0, 5), "day string, n bigint, jsd_bits double, flag boolean"),
+        (
+            histogram_distances(df, "v", "g", "click", "purchase", 5),
+            "n_a bigint, n_b bigint, n_bins int not null, hellinger double, tvd double, bhattacharyya double",
+        ),
+    ]
+    for got, ddl in cases:
+        assert got.schema == DataType.fromDDL(ddl), ddl
 
 
 def test_pass_rate_wilson_hand_computed(spark):
