@@ -1,4 +1,4 @@
-"""Keyword -> Column predicate compilers (draft4 / draft6 / draft7).
+"""Keyword -> Column predicate compilers (draft4 through draft2020-12).
 
 The reference implements each keyword as a struct with
 ``compile(scope_builder, schema) -> Option<Self>`` and
@@ -6,6 +6,14 @@ The reference implements each keyword as a struct with
 registered per draft (/root/reference/src/keywords/mod.rs:44-62). Here a
 keyword compiles to a *pure function* ``JsonAccessor -> Column`` producing a
 boolean pass predicate — evaluated once per column, vectorized, JVM-side.
+
+Each keyword family has ONE compiler for every draft, and every compiler
+returns a list of ``CheckExpr``; ``_KEYWORD_COMPILERS`` is the one ordered
+table ``compile_schema`` walks. A draft only decides which keyword names
+play which role (array-form ``items`` + ``additionalItems`` up to 2019-09,
+``prefixItems`` + ``items`` in 2020-12; ``dependencies`` vs
+``dependentRequired``/``dependentSchemas``; which of ``$ref``,
+``$recursiveRef``, ``$dynamicRef`` apply, see ``Scope.ref_sites``).
 
 Semantics contracts (SURVEY.md §1.3):
 - conjunction: all keywords of a schema must pass (schema.rs:76-78);
@@ -19,12 +27,15 @@ Semantics contracts (SURVEY.md §1.3):
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import math
+import operator
 import re
-from dataclasses import dataclass, field
-from typing import Callable, Optional
+from dataclasses import dataclass, field, replace
+from typing import Callable
+from urllib.parse import unquote, urldefrag, urljoin, urlsplit, urlunsplit
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,8 +51,6 @@ from jsonschema_validator_spark.functions.accessors import (
     JsonAccessor,
     TypedAccessor,
 )
-
-
 
 
 Factory = Callable[[JsonAccessor], Column]
@@ -118,8 +127,6 @@ def full_uri(base: str, ref: str) -> str:
     only applies relative resolution for whitelisted schemes, so
     non-standard bases (memory://, s3://, ...) are temporarily rewritten
     to http for the join and swapped back."""
-    from urllib.parse import urljoin, urlsplit, urlunsplit
-
     if not base:
         return ref
     if not ref:
@@ -226,8 +233,6 @@ class Scope:
         next to ``$ref`` is honored there (siblings apply in 2019-09+).
 
         Returns the document root's effective base URI."""
-        from urllib.parse import urldefrag
-
         idkw = self.id_keyword
         modern = self.modern
         SCHEMA_KEYS = (
@@ -319,8 +324,6 @@ class Scope:
         the base URI in force AT the target node (document URI plus any
         ``$id`` declarations crossed by the fragment pointer walk) — the
         base the node's own relative $refs must resolve against."""
-        from urllib.parse import urldefrag
-
         if self._root_base is None:
             self._root_base = (
                 self.index_document(self.root, self.base_uri or "")
@@ -369,8 +372,6 @@ class Scope:
         # (RFC 3986 fragment encoding), then ~-unescaped (RFC 6901):
         # '#/definitions/percent%25field' -> token 'percent%field'.
         # $id declarations crossed by the walk re-base the target.
-        from urllib.parse import unquote
-
         idkw = self.id_keyword
 
         def bump(b: str, n) -> str:
@@ -399,6 +400,27 @@ class Scope:
                 eff = bump(eff, node)
         return resolved, node, eff
 
+    @contextlib.contextmanager
+    def based(self, base: str):
+        """Resolve against ``base`` inside the block."""
+        saved = self.base_uri
+        self.base_uri = base
+        try:
+            yield
+        finally:
+            self.base_uri = saved
+
+    @contextlib.contextmanager
+    def entered(self, base: str):
+        """Compile inside the resource at ``base``: rebased, and that
+        resource pushed onto the dynamic scope for the block."""
+        self.dynamic_path.append(urldefrag(base)[0] if base else "")
+        try:
+            with self.based(base):
+                yield
+        finally:
+            self.dynamic_path.pop()
+
     def resolve_ref(self, ref: str, path: str) -> list[CheckExpr]:
         """Compile-time $ref inlining with memoization
         (scope_builder.rs:43-54) and bounded recursion for cyclic schemas
@@ -418,89 +440,54 @@ class Scope:
             # bounded unrolling: beyond max depth, vacuously pass
             return []
         self._stack.append(key)
-        saved_base = self.base_uri
-        self.base_uri = eff_base
-        from urllib.parse import urldefrag
-
-        res = urldefrag(eff_base)[0] if eff_base else ""
-        self.dynamic_path.append(res)
         try:
-            checks = compile_schema(node, self, path=path)
+            with self.entered(eff_base):
+                checks = compile_schema(node, self, path=path)
         finally:
-            self.base_uri = saved_base
             self._stack.pop()
-            self.dynamic_path.pop()
         if depth == 0 and key not in self._stack and not self.has_dynamic:
             self._memo[key] = checks
         return checks
 
-    # -- dynamic references (compile-time dynamic scope) ----------------
-    def lookup_node(self, ref: str, path: str) -> tuple:
-        """Resolve ``ref`` to ``(node, effective_base)`` without
-        compiling — used by the unevaluated* annotation finders."""
-        _, node, eff = self._lookup(ref, path)
-        return node, eff
+    # -- reference keywords (compile-time dynamic scope) ----------------
+    def ref_sites(self, schema: dict, path: str):
+        """Yield ``(base, ref)`` for each reference keyword this draft
+        applies at ``schema``, in keyword order — the one place a draft
+        picks its reference keywords, read by the compile path and the
+        unevaluated* finders alike:
 
-    def recursive_base(self) -> str:
-        """The resource URI a ``$recursiveRef: "#"`` lands on from the
-        current compile site (2019-09 dynamic-scope rule)."""
-        from urllib.parse import urldefrag
+        - ``$ref``, against the current base (every draft);
+        - draft2019-09 ``$recursiveRef: "#"``: the current resource root;
+          if that root declares ``$recursiveAnchor: true``, the OUTERMOST
+          resource in the dynamic scope whose root also declares it;
+        - draft2020-12 ``$dynamicRef``: as ``$ref``, unless the resolved
+          fragment is a ``$dynamicAnchor`` of its own resource (the
+          "bookending" requirement); then the OUTERMOST dynamic-scope
+          resource defining that anchor wins.
 
-        cur = urldefrag(self.base_uri or "")[0]
-        if cur in self.recursive_roots:
-            for r in self.dynamic_path:  # outermost first
-                if r in self.recursive_roots:
-                    return r
-        return cur
-
-    def dynamic_base(self, ref: str, path: str):
-        """For a ``$dynamicRef``: returns ``(resource_uri, anchor)`` when
-        the dynamic-scope override applies, else None (plain $ref)."""
-        from urllib.parse import urldefrag
-
-        resolved = full_uri(self.base_uri or "", ref)
-        uri, frag = urldefrag(resolved)
-        if frag and not frag.startswith("/") and (uri, frag) in self.dynamic_anchors:
-            for r in self.dynamic_path:  # outermost first
-                if (r, frag) in self.dynamic_anchors:
-                    return r, frag
-        return None
-
-    def resolve_recursive_ref(self, ref: str, path: str) -> list[CheckExpr]:
-        """draft2019-09 ``$recursiveRef: "#"``: resolves to the current
-        resource root; if that root declares ``$recursiveAnchor: true``,
-        re-resolves to the OUTERMOST resource in the dynamic scope whose
-        root also declares it. The dynamic scope is the compile-time
-        resource stack (refs are inlined, so it is statically known)."""
-        from urllib.parse import urldefrag
-
-        if ref != "#":
-            raise MalformedSchemaError(path, "$recursiveRef", "must be '#'")
-        target = self.recursive_base()
-        saved = self.base_uri
-        self.base_uri = target
-        try:
-            return self.resolve_ref("#", path)
-        finally:
-            self.base_uri = saved
-
-    def resolve_dynamic_ref(self, ref: str, path: str) -> list[CheckExpr]:
-        """draft2020-12 ``$dynamicRef``: behaves as ``$ref`` unless the
-        initially-resolved fragment is a ``$dynamicAnchor`` in its own
-        resource (the "bookending" requirement), in which case the
-        OUTERMOST dynamic-scope resource defining that anchor wins."""
-        from urllib.parse import urldefrag
-
-        hit = self.dynamic_base(ref, path)
-        if hit is not None:
-            r, frag = hit
-            saved = self.base_uri
-            self.base_uri = r
-            try:
-                return self.resolve_ref("#" + frag, path)
-            finally:
-                self.base_uri = saved
-        return self.resolve_ref(ref, path)
+        The dynamic scope is the compile-time resource stack (refs are
+        inlined, so it is statically known). Lazy: a site is computed
+        only after the previous one was resolved, which may index more
+        documents."""
+        ref = schema.get("$ref")
+        if isinstance(ref, str):
+            yield self.base_uri, ref
+        if self.draft == "draft2019-09" and isinstance(schema.get("$recursiveRef"), str):
+            if schema["$recursiveRef"] != "#":
+                raise MalformedSchemaError(path, "$recursiveRef", "must be '#'")
+            target = urldefrag(self.base_uri or "")[0]
+            if target in self.recursive_roots:  # outermost first
+                target = next((r for r in self.dynamic_path if r in self.recursive_roots), target)
+            yield target, "#"
+        if self.draft == "draft2020-12" and isinstance(schema.get("$dynamicRef"), str):
+            ref = schema["$dynamicRef"]
+            uri, frag = urldefrag(full_uri(self.base_uri or "", ref))
+            if frag and not frag.startswith("/") and (uri, frag) in self.dynamic_anchors:
+                for r in self.dynamic_path:  # outermost first
+                    if (r, frag) in self.dynamic_anchors:
+                        yield r, "#" + frag
+                        return
+            yield self.base_uri, ref
 
 
 # ---------------------------------------------------------------------------
@@ -550,12 +537,24 @@ def eq_literal(acc: JsonAccessor, value) -> Column:
 # ---------------------------------------------------------------------------
 # Keyword handlers
 # ---------------------------------------------------------------------------
-# Each handler: (schema, scope, path) -> Optional[Factory]; absent keyword
-# compiles to nothing (the Ok(None) pattern, type_.rs:52-57). `applies`
-# wraps type-gated vacuous truth, folding to a constant when the accessor's
-# type is statically known.
+# Each handler: (schema, scope, path) -> list[CheckExpr]; an absent keyword
+# compiles to [] (the Ok(None) pattern, type_.rs:52-57). `_applies` wraps
+# type-gated vacuous truth, folding to a constant when the accessor's type
+# is statically known.
 
 VALID_TYPES = {"null", "boolean", "integer", "number", "string", "array", "object"}
+
+_MESSAGES = {
+    "type": "Invalid Type",  # exact message, /root/reference/src/keywords/type_.rs:106
+    "enum": "value not in enum",
+    "const": "value != const",
+    "required": "required property missing",
+    "pattern": "string does not match pattern",
+}
+
+
+def _check(keyword: str, path: str, factory: Factory) -> CheckExpr:
+    return CheckExpr(keyword, path, _MESSAGES.get(keyword, f"{keyword} violated"), factory)
 
 
 def _applies(acc: JsonAccessor, tags: set[str], inner: Column) -> Column:
@@ -566,7 +565,7 @@ def _applies(acc: JsonAccessor, tags: set[str], inner: Column) -> Column:
     return F.when(acc.has_type(tags), inner).otherwise(F.lit(True))
 
 
-def _compile_type(schema, scope, path) -> Optional[Factory]:
+def _compile_type(schema, scope, path) -> list[CheckExpr]:
     """`type` membership (type_.rs:47-114) with corpus semantics
     number ⊇ integer (SURVEY.md §1.4, NOT the reference's exact match).
 
@@ -577,7 +576,7 @@ def _compile_type(schema, scope, path) -> Optional[Factory]:
     lexical form is gone before any predicate runs."""
     spec = schema.get("type")
     if spec is None:
-        return None
+        return []
     if isinstance(spec, str):
         tags = [spec]
     elif isinstance(spec, list):
@@ -595,20 +594,20 @@ def _compile_type(schema, scope, path) -> Optional[Factory]:
     if unknown:
         raise MalformedSchemaError(path, "type", f"unknown primitive types: {unknown}")
     tagset = frozenset(tags)
-    return lambda acc: acc.has_type(tagset)
+    return [_check("type", path, lambda acc: acc.has_type(tagset))]
 
 
-def _compile_enum(schema, scope, path) -> Optional[Factory]:
+def _compile_enum(schema, scope, path) -> list[CheckExpr]:
     values = schema.get("enum")
     if values is None:
-        return None
+        return []
     if not isinstance(values, list) or not values:
         raise MalformedSchemaError(path, "enum", "enum must be a non-empty array")
     # fast path: all-string enums use a single isin (broadcast-hash in
     # codegen; SURVEY.md §2.3 row `enum`); non-strings coalesce to fail
     if all(isinstance(v, str) for v in values):
         vals = list(values)
-        return lambda acc: F.coalesce(acc.as_string().isin(vals), F.lit(False))
+        return [_check("enum", path, lambda acc: F.coalesce(acc.as_string().isin(vals), F.lit(False)))]
 
     def fac(acc: JsonAccessor) -> Column:
         out = eq_literal(acc, values[0])
@@ -616,26 +615,26 @@ def _compile_enum(schema, scope, path) -> Optional[Factory]:
             out = out | eq_literal(acc, v)
         return out
 
-    return fac
+    return [_check("enum", path, fac)]
 
 
-def _compile_const(schema, scope, path) -> Optional[Factory]:
+def _compile_const(schema, scope, path) -> list[CheckExpr]:
     if scope.draft == "draft4" or "const" not in schema:
-        return None
+        return []
     value = schema["const"]
-    return lambda acc: eq_literal(acc, value)
+    return [_check("const", path, lambda acc: eq_literal(acc, value))]
 
 
-def _compile_required(schema, scope, path) -> Optional[Factory]:
+def _compile_required(schema, scope, path) -> list[CheckExpr]:
     names = schema.get("required")
     if names is None:
-        return None
+        return []
     if not isinstance(names, list) or not all(isinstance(n, str) for n in names):
         raise MalformedSchemaError(path, "required", "required must be an array of strings")
     if scope.draft == "draft4" and not names:
         raise MalformedSchemaError(path, "required", "draft4 requires a non-empty array")
     if not names:
-        return None
+        return []
 
     def fac(acc: JsonAccessor) -> Column:
         inner = acc.has_field(names[0])
@@ -643,13 +642,13 @@ def _compile_required(schema, scope, path) -> Optional[Factory]:
             inner = inner & acc.has_field(n)
         return _applies(acc, {"object"}, inner)
 
-    return fac
+    return [_check("required", path, fac)]
 
 
-def _compile_pattern(schema, scope, path) -> Optional[Factory]:
+def _compile_pattern(schema, scope, path) -> list[CheckExpr]:
     pat = schema.get("pattern")
     if pat is None:
-        return None
+        return []
     if not isinstance(pat, str):
         raise MalformedSchemaError(path, "pattern", "pattern must be a string")
     try:
@@ -659,9 +658,13 @@ def _compile_pattern(schema, scope, path) -> Optional[Factory]:
     # ECMA-262 vs Java dialect: unanchored search either way (rlike);
     # common classes (\d \w \s, anchors, quantifiers) agree — documented
     # contract (SURVEY.md §7 hard parts)
-    return lambda acc: _applies(
-        acc, {"string"}, F.coalesce(acc.as_string().rlike(pat), F.lit(False))
-    )
+    return [
+        _check(
+            "pattern",
+            path,
+            lambda acc: _applies(acc, {"string"}, F.coalesce(acc.as_string().rlike(pat), F.lit(False))),
+        )
+    ]
 
 
 def _num(schema, path, kw):
@@ -673,10 +676,10 @@ def _num(schema, path, kw):
     return float(v)
 
 
-def _compile_bounds(schema, scope, path) -> list[tuple[str, Factory]]:
+def _compile_bounds(schema, scope, path) -> list[CheckExpr]:
     """minimum/maximum with draft4 boolean exclusive* modifiers or
     draft6+ numeric exclusive* keywords."""
-    out: list[tuple[str, Factory]] = []
+    out: list[CheckExpr] = []
 
     def bound(kw, cmp):
         limit = _num(schema, path, kw)
@@ -689,8 +692,9 @@ def _compile_bounds(schema, scope, path) -> list[tuple[str, Factory]]:
         if limit is not None:
             strict = excl is True
             out.append(
-                (
+                _check(
                     kw,
+                    path,
                     lambda acc, lo=limit, s=strict, c=cmp: _applies(
                         acc, {"number"}, c(acc.as_double(), F.lit(lo), s)
                     ),
@@ -705,8 +709,9 @@ def _compile_bounds(schema, scope, path) -> list[tuple[str, Factory]]:
                 )
             lim = float(excl)
             out.append(
-                (
+                _check(
                     "exclusive" + kw[0].upper() + kw[1:],
+                    path,
                     lambda acc, lo=lim, c=cmp: _applies(
                         acc, {"number"}, c(acc.as_double(), F.lit(lo), True)
                     ),
@@ -718,7 +723,7 @@ def _compile_bounds(schema, scope, path) -> list[tuple[str, Factory]]:
     return out
 
 
-def _compile_multiple_of(schema, scope, path) -> Optional[Factory]:
+def _compile_multiple_of(schema, scope, path) -> list[CheckExpr]:
     """Exact divisibility, not epsilon tolerance (the round-1
     |q - round(q)| < 1e-9 check both accepted near-misses and rejected
     true multiples once the quotient's ulp exceeded the epsilon, e.g.
@@ -739,7 +744,7 @@ def _compile_multiple_of(schema, scope, path) -> Optional[Factory]:
 
     k = _num(schema, path, "multipleOf")
     if k is None:
-        return None
+        return []
     if k <= 0:
         raise MalformedSchemaError(path, "multipleOf", "must be > 0")
     kd = _dec.Decimal(str(k))
@@ -757,78 +762,45 @@ def _compile_multiple_of(schema, scope, path) -> Optional[Factory]:
             ok = ok_fmod
         return _applies(acc, {"number"}, F.coalesce(ok, F.lit(False)))
 
-    return fac
+    return [_check("multipleOf", path, fac)]
 
 
-def _compile_length(schema, scope, path) -> list[tuple[str, Factory]]:
+# count bounds: (min keyword, max keyword, instance type, size of the
+# instance); one row each for strings, arrays and objects
+_COUNT_BOUNDS = (
+    ("minLength", "maxLength", "string", lambda acc: F.length(acc.as_string())),
+    ("minItems", "maxItems", "array", lambda acc: F.size(acc.as_array())),
+    ("minProperties", "maxProperties", "object", lambda acc: F.size(F.map_keys(acc.as_object()))),
+)
+
+
+def _compile_count_bounds(schema, scope, path) -> list[CheckExpr]:
+    """minLength/maxLength, minItems/maxItems, minProperties/
+    maxProperties: a non-negative integer bound on the instance's size."""
     out = []
-    for kw, cmp in (("minLength", "ge"), ("maxLength", "le")):
-        n = schema.get(kw)
-        if n is None:
-            continue
-        if isinstance(n, bool) or not isinstance(n, int) or n < 0:
-            raise MalformedSchemaError(path, kw, "must be a non-negative integer")
-        out.append(
-            (
-                kw,
-                lambda acc, n=n, c=cmp: _applies(
-                    acc,
-                    {"string"},
-                    (F.length(acc.as_string()) >= n) if c == "ge" else (F.length(acc.as_string()) <= n),
-                ),
+    for min_kw, max_kw, tag, size in _COUNT_BOUNDS:
+        for kw in (min_kw, max_kw):
+            n = schema.get(kw)
+            if n is None:
+                continue
+            if isinstance(n, bool) or not isinstance(n, int) or n < 0:
+                raise MalformedSchemaError(path, kw, "must be a non-negative integer")
+            out.append(
+                _check(
+                    kw,
+                    path,
+                    lambda acc, n=n, is_min=kw == min_kw, tag=tag, size=size: _applies(
+                        acc, {tag}, (size(acc) >= n) if is_min else (size(acc) <= n)
+                    ),
+                )
             )
-        )
     return out
 
 
-def _compile_items_bounds(schema, scope, path) -> list[tuple[str, Factory]]:
-    out = []
-    for kw, is_min in (("minItems", True), ("maxItems", False)):
-        n = schema.get(kw)
-        if n is None:
-            continue
-        if isinstance(n, bool) or not isinstance(n, int) or n < 0:
-            raise MalformedSchemaError(path, kw, "must be a non-negative integer")
-        out.append(
-            (
-                kw,
-                lambda acc, n=n, mn=is_min: _applies(
-                    acc,
-                    {"array"},
-                    (F.size(acc.as_array()) >= n) if mn else (F.size(acc.as_array()) <= n),
-                ),
-            )
-        )
-    return out
-
-
-def _compile_props_bounds(schema, scope, path) -> list[tuple[str, Factory]]:
-    out = []
-    for kw, is_min in (("minProperties", True), ("maxProperties", False)):
-        n = schema.get(kw)
-        if n is None:
-            continue
-        if isinstance(n, bool) or not isinstance(n, int) or n < 0:
-            raise MalformedSchemaError(path, kw, "must be a non-negative integer")
-        out.append(
-            (
-                kw,
-                lambda acc, n=n, mn=is_min: _applies(
-                    acc,
-                    {"object"},
-                    (F.size(F.map_keys(acc.as_object())) >= n)
-                    if mn
-                    else (F.size(F.map_keys(acc.as_object())) <= n),
-                ),
-            )
-        )
-    return out
-
-
-def _compile_unique_items(schema, scope, path) -> Optional[Factory]:
+def _compile_unique_items(schema, scope, path) -> list[CheckExpr]:
     v = schema.get("uniqueItems")
     if v is None or v is False:
-        return None
+        return []
     if v is not True:
         raise MalformedSchemaError(path, "uniqueItems", "must be a boolean")
 
@@ -837,7 +809,7 @@ def _compile_unique_items(schema, scope, path) -> Optional[Factory]:
         canon = F.transform(arr, lambda x: acc.element(x).canonical())
         return _applies(acc, {"array"}, F.size(canon) == F.size(F.array_distinct(canon)))
 
-    return fac
+    return [_check("uniqueItems", path, fac)]
 
 
 def _subpred(sub, scope, path) -> Factory:
@@ -870,25 +842,33 @@ def _subpred(sub, scope, path) -> Factory:
     return fac
 
 
-def _compile_items(schema, scope, path) -> list[tuple[str, Factory]]:
+def _compile_array_applicators(schema, scope, path) -> list[CheckExpr]:
+    """Positional prefix schemas plus one schema for the tail after them.
+    The draft only names the roles: up to 2019-09 an array-form ``items``
+    is the prefix and ``additionalItems`` the tail, while a schema-form
+    ``items`` is the tail over the whole array (``additionalItems`` is
+    then ignored); in 2020-12 ``prefixItems`` is the prefix and the
+    schema-only ``items`` the tail (``additionalItems`` is an ignored
+    unknown keyword). A ``false`` tail bounds the array's length."""
     if scope.draft == "draft2020-12":
-        return _compile_items_2020(schema, scope, path)
-    out = []
-    items = schema.get("items")
-    if isinstance(items, (dict, bool)):
-        p = _subpred(items, scope, f"{path}/items")
+        prefix_kw, prefix, tail_kw, tail = "prefixItems", schema.get("prefixItems"), "items", schema.get("items")
+        if prefix is not None and (not isinstance(prefix, list) or not prefix):
+            raise MalformedSchemaError(path, "prefixItems", "must be a non-empty array of schemas")
+        tail_error = "draft2020-12 items must be a single schema (use prefixItems)"
+    elif isinstance(schema.get("items"), list):
+        prefix_kw, prefix, tail_kw, tail = "items", schema["items"], "additionalItems", schema.get("additionalItems")
+        tail_error = None  # a non-schema additionalItems is ignored
+    else:
+        prefix_kw, prefix, tail_kw, tail = "items", None, "items", schema.get("items")
+        tail_error = "must be a schema or array of schemas"
 
-        def fac(acc: JsonAccessor, p=p) -> Column:
-            arr = acc.as_array()
-            return _applies(
-                acc, {"array"}, F.forall(arr, lambda x: F.coalesce(p(acc.element(x)), F.lit(True)))
-            )
+    out: list[CheckExpr] = []
+    n = 0
+    if prefix is not None:
+        preds = [_subpred(s, scope, f"{path}/{prefix_kw}/{i}") for i, s in enumerate(prefix)]
+        n = len(preds)
 
-        out.append(("items", fac))
-    elif isinstance(items, list):
-        preds = [_subpred(s, scope, f"{path}/items/{i}") for i, s in enumerate(items)]
-
-        def fac(acc: JsonAccessor, preds=preds) -> Column:
+        def pfac(acc: JsonAccessor, preds=preds) -> Column:
             arr = acc.as_array()
             inner = F.lit(True)
             for i, p in enumerate(preds):
@@ -899,92 +879,34 @@ def _compile_items(schema, scope, path) -> list[tuple[str, Factory]]:
                 ).otherwise(F.lit(True))
             return _applies(acc, {"array"}, inner)
 
-        out.append(("items", fac))
-        add = schema.get("additionalItems")
-        n = len(items)
-        if add is False:
-            out.append(
-                (
-                    "additionalItems",
-                    lambda acc, n=n: _applies(acc, {"array"}, F.size(acc.as_array()) <= n),
-                )
+        out.append(_check(prefix_kw, path, pfac))
+
+    if tail is False:
+        out.append(
+            _check(
+                tail_kw,
+                path,
+                lambda acc: _applies(
+                    acc, {"array"}, (F.size(acc.as_array()) <= n) if n else (F.size(acc.as_array()) == 0)
+                ),
             )
-        elif isinstance(add, (dict, bool)):
-            ap = _subpred(add, scope, f"{path}/additionalItems")
-
-            def afac(acc: JsonAccessor, ap=ap, n=n) -> Column:
-                rest = F.filter(acc.as_array(), lambda x, i: i >= n)
-                return _applies(
-                    acc,
-                    {"array"},
-                    F.forall(rest, lambda x: F.coalesce(ap(acc.element(x)), F.lit(True))),
-                )
-
-            out.append(("additionalItems", afac))
-    elif items is not None:
-        raise MalformedSchemaError(path, "items", "must be a schema or array of schemas")
-    return out
-
-
-def _compile_items_2020(schema, scope, path) -> list[tuple[str, Factory]]:
-    """draft2020-12 array applicators: ``prefixItems`` takes the old
-    positional-array-``items`` role; ``items`` is schema-only and applies
-    from ``len(prefixItems)`` onward (the old ``additionalItems`` role,
-    which is itself ignored as an unknown keyword)."""
-    out: list[tuple[str, Factory]] = []
-    prefix = schema.get("prefixItems")
-    n_prefix = 0
-    if prefix is not None:
-        if not isinstance(prefix, list) or not prefix:
-            raise MalformedSchemaError(path, "prefixItems", "must be a non-empty array of schemas")
-        preds = [_subpred(s, scope, f"{path}/prefixItems/{i}") for i, s in enumerate(prefix)]
-        n_prefix = len(preds)
-
-        def pfac(acc: JsonAccessor, preds=preds) -> Column:
-            arr = acc.as_array()
-            inner = F.lit(True)
-            for i, p in enumerate(preds):
-                el = acc.element(F.try_element_at(arr, F.lit(i + 1)))
-                inner = inner & F.when(
-                    F.size(arr) > i, F.coalesce(p(el), F.lit(True))
-                ).otherwise(F.lit(True))
-            return _applies(acc, {"array"}, inner)
-
-        out.append(("prefixItems", pfac))
-
-    items = schema.get("items")
-    if isinstance(items, (dict, bool)):
-        if items is False and n_prefix == 0:
-            out.append(("items", lambda acc: _applies(acc, {"array"}, F.size(acc.as_array()) == 0)))
-        elif items is False:
-            out.append(
-                (
-                    "items",
-                    lambda acc, n=n_prefix: _applies(acc, {"array"}, F.size(acc.as_array()) <= n),
-                )
-            )
-        else:
-            ip = _subpred(items, scope, f"{path}/items")
-
-            def ifac(acc: JsonAccessor, ip=ip, n=n_prefix) -> Column:
-                rest = (
-                    F.filter(acc.as_array(), lambda x, i: i >= n) if n else acc.as_array()
-                )
-                return _applies(
-                    acc,
-                    {"array"},
-                    F.forall(rest, lambda x: F.coalesce(ip(acc.element(x)), F.lit(True))),
-                )
-
-            out.append(("items", ifac))
-    elif items is not None:
-        raise MalformedSchemaError(
-            path, "items", "draft2020-12 items must be a single schema (use prefixItems)"
         )
+    elif isinstance(tail, (dict, bool)):
+        tp = _subpred(tail, scope, f"{path}/{tail_kw}")
+
+        def tfac(acc: JsonAccessor, tp=tp) -> Column:
+            rest = F.filter(acc.as_array(), lambda x, i: i >= n) if n else acc.as_array()
+            return _applies(
+                acc, {"array"}, F.forall(rest, lambda x: F.coalesce(tp(acc.element(x)), F.lit(True)))
+            )
+
+        out.append(_check(tail_kw, path, tfac))
+    elif tail is not None and tail_error:
+        raise MalformedSchemaError(path, "items", tail_error)
     return out
 
 
-def _compile_contains(schema, scope, path) -> list[tuple[str, Factory]]:
+def _compile_contains(schema, scope, path) -> list[CheckExpr]:
     if scope.draft == "draft4" or "contains" not in schema:
         return []
     p = _subpred(schema["contains"], scope, f"{path}/contains")
@@ -994,7 +916,7 @@ def _compile_contains(schema, scope, path) -> list[tuple[str, Factory]]:
             F.filter(acc.as_array(), lambda x: F.coalesce(p(acc.element(x)), F.lit(False)))
         )
 
-    out: list[tuple[str, Factory]] = []
+    out: list[CheckExpr] = []
     mn, mx = None, None
     if scope.modern:
         # minContains/maxContains (2019-09+) only take effect alongside
@@ -1010,13 +932,14 @@ def _compile_contains(schema, scope, path) -> list[tuple[str, Factory]]:
     if mn is not None:
         if mn > 0:
             out.append(
-                ("minContains", lambda acc, n=mn: _applies(acc, {"array"}, _count(acc) >= n))
+                _check("minContains", path, lambda acc, n=mn: _applies(acc, {"array"}, _count(acc) >= n))
             )
         # mn == 0: contains always satisfied (even on empty arrays)
     else:
         out.append(
-            (
+            _check(
                 "contains",
+                path,
                 lambda acc: _applies(
                     acc,
                     {"array"},
@@ -1025,7 +948,7 @@ def _compile_contains(schema, scope, path) -> list[tuple[str, Factory]]:
             )
         )
     if mx is not None:
-        out.append(("maxContains", lambda acc, n=mx: _applies(acc, {"array"}, _count(acc) <= n)))
+        out.append(_check("maxContains", path, lambda acc, n=mx: _applies(acc, {"array"}, _count(acc) <= n)))
     return out
 
 
@@ -1059,14 +982,14 @@ def _compile_properties(schema, scope, path) -> list[CheckExpr]:
                     return F.when(applies, child.gated(acc.get_field(name))).otherwise(F.lit(True))
                 return child.gated(acc.get_field(name)) if applies else F.lit(True)
 
-            lifted.append(CheckExpr(child.keyword, child.path, child.message, fac))
+            lifted.append(replace(child, factory=fac))
     return lifted
 
 
-def _compile_pattern_properties(schema, scope, path) -> Optional[Factory]:
+def _compile_pattern_properties(schema, scope, path) -> list[CheckExpr]:
     pp = schema.get("patternProperties")
     if pp is None:
-        return None
+        return []
     if not isinstance(pp, dict):
         raise MalformedSchemaError(path, "patternProperties", "must be an object")
     compiled = [
@@ -1084,13 +1007,13 @@ def _compile_pattern_properties(schema, scope, path) -> Optional[Factory]:
             )
         return _applies(acc, {"object"}, inner)
 
-    return fac
+    return [_check("patternProperties", path, fac)]
 
 
-def _compile_additional_properties(schema, scope, path) -> Optional[Factory]:
+def _compile_additional_properties(schema, scope, path) -> list[CheckExpr]:
     add = schema.get("additionalProperties")
     if add is None or add is True:
-        return None
+        return []
     known = list(schema.get("properties", {}) or {})
     pats = list(schema.get("patternProperties", {}) or {})
 
@@ -1105,21 +1028,25 @@ def _compile_additional_properties(schema, scope, path) -> Optional[Factory]:
 
         return F.map_filter(obj, is_extra)
 
-    if add is False:
-        return lambda acc: _applies(acc, {"object"}, F.size(F.map_keys(extras(acc))) == 0)
-    if isinstance(add, dict):
-        p = _subpred(add, scope, f"{path}/additionalProperties")
-        return lambda acc: _applies(
+    if add is not False and not isinstance(add, dict):
+        raise MalformedSchemaError(path, "additionalProperties", "must be a schema or boolean")
+    p = None if add is False else _subpred(add, scope, f"{path}/additionalProperties")
+
+    def fac(acc: JsonAccessor) -> Column:
+        if p is None:
+            return _applies(acc, {"object"}, F.size(F.map_keys(extras(acc))) == 0)
+        return _applies(
             acc,
             {"object"},
             F.forall(F.map_values(extras(acc)), lambda v: F.coalesce(p(acc.element(v)), F.lit(True))),
         )
-    raise MalformedSchemaError(path, "additionalProperties", "must be a schema or boolean")
+
+    return [_check("additionalProperties", path, fac)]
 
 
-def _compile_property_names(schema, scope, path) -> Optional[Factory]:
+def _compile_property_names(schema, scope, path) -> list[CheckExpr]:
     if scope.draft == "draft4" or "propertyNames" not in schema:
-        return None
+        return []
     p = _subpred(schema["propertyNames"], scope, f"{path}/propertyNames")
 
     def fac(acc: JsonAccessor) -> Column:
@@ -1132,90 +1059,63 @@ def _compile_property_names(schema, scope, path) -> Optional[Factory]:
             ),
         )
 
-    return fac
+    return [_check("propertyNames", path, fac)]
 
 
-def _compile_dependent(schema, scope, path) -> list[tuple[str, Factory]]:
-    """2019-09 split of ``dependencies``: ``dependentRequired`` (name ->
-    required-name list) and ``dependentSchemas`` (name -> schema)."""
-    if not scope.modern:
-        return []
-    out: list[tuple[str, Factory]] = []
-    dr = schema.get("dependentRequired")
-    if dr is not None:
-        if not isinstance(dr, dict) or not all(
-            isinstance(v, list) and all(isinstance(d, str) for d in v) for v in dr.values()
-        ):
-            raise MalformedSchemaError(path, "dependentRequired", "must map names to string arrays")
+# dependency keywords: keyword -> (takes name lists, takes schemas, error
+# for a malformed map). draft4-7 `dependencies` takes both; 2019-09 split
+# it into `dependentRequired` and `dependentSchemas`, and ignores it.
+_DEPENDENCY_KEYWORDS = {
+    "dependencies": (True, True, "must be an object"),
+    "dependentRequired": (True, False, "must map names to string arrays"),
+    "dependentSchemas": (False, True, "must map names to schemas"),
+}
 
-        def rfac(acc: JsonAccessor, dr=dr) -> Column:
+
+def _compile_dependencies(schema, scope, path) -> list[CheckExpr]:
+    """``dependencies`` / ``dependentRequired`` / ``dependentSchemas``:
+    each entry normalizes to ``(name, required names | subschema
+    predicate)``; when ``name`` is present, the names must all be present
+    or the subschema must hold."""
+    out: list[CheckExpr] = []
+    for kw in ("dependentRequired", "dependentSchemas") if scope.modern else ("dependencies",):
+        deps = schema.get(kw)
+        if deps is None:
+            continue
+        takes_names, takes_schemas, malformed = _DEPENDENCY_KEYWORDS[kw]
+        if not isinstance(deps, dict):
+            raise MalformedSchemaError(path, kw, malformed)
+        for name, dep in deps.items():
+            if isinstance(dep, list) and takes_names and all(isinstance(d, str) for d in dep):
+                continue
+            if isinstance(dep, (dict, bool)) and takes_schemas:
+                continue
+            if kw == "dependencies":  # draft4-7 name the entry
+                kind = "dependency list" if isinstance(dep, list) else "dependency"
+                malformed = f"bad {kind} for {name!r}"
+            raise MalformedSchemaError(path, kw, malformed)
+        compiled = [
+            (name, dep if isinstance(dep, list) else _subpred(dep, scope, f"{path}/{kw}/{name}"))
+            for name, dep in deps.items()
+        ]
+
+        def fac(acc: JsonAccessor, compiled=compiled) -> Column:
             inner = F.lit(True)
-            for name, needs in dr.items():
-                req = F.lit(True)
-                for d in needs:
-                    req = req & acc.has_field(d)
+            for name, dep in compiled:
+                if isinstance(dep, list):
+                    req = F.lit(True)
+                    for d in dep:
+                        req = req & acc.has_field(d)
+                else:
+                    req = F.coalesce(dep(acc), F.lit(True))
                 inner = inner & F.when(acc.has_field(name), req).otherwise(F.lit(True))
             return _applies(acc, {"object"}, inner)
 
-        out.append(("dependentRequired", rfac))
-    ds = schema.get("dependentSchemas")
-    if ds is not None:
-        if not isinstance(ds, dict) or not all(isinstance(v, (dict, bool)) for v in ds.values()):
-            raise MalformedSchemaError(path, "dependentSchemas", "must map names to schemas")
-        compiled = [
-            (name, _subpred(sub, scope, f"{path}/dependentSchemas/{name}"))
-            for name, sub in ds.items()
-        ]
-
-        def sfac(acc: JsonAccessor, compiled=compiled) -> Column:
-            inner = F.lit(True)
-            for name, p in compiled:
-                inner = inner & F.when(
-                    acc.has_field(name), F.coalesce(p(acc), F.lit(True))
-                ).otherwise(F.lit(True))
-            return _applies(acc, {"object"}, inner)
-
-        out.append(("dependentSchemas", sfac))
+        out.append(_check(kw, path, fac))
     return out
 
 
-def _compile_dependencies(schema, scope, path) -> Optional[Factory]:
-    if scope.modern:
-        # `dependencies` was split into dependent{Required,Schemas} in
-        # 2019-09 and is an ignored unknown keyword there
-        return None
-    deps = schema.get("dependencies")
-    if deps is None:
-        return None
-    if not isinstance(deps, dict):
-        raise MalformedSchemaError(path, "dependencies", "must be an object")
-    compiled: list[tuple[str, object]] = []
-    for name, dep in deps.items():
-        if isinstance(dep, list):
-            if not all(isinstance(d, str) for d in dep):
-                raise MalformedSchemaError(path, "dependencies", f"bad dependency list for {name!r}")
-            compiled.append((name, list(dep)))
-        elif isinstance(dep, (dict, bool)):
-            compiled.append((name, _subpred(dep, scope, f"{path}/dependencies/{name}")))
-        else:
-            raise MalformedSchemaError(path, "dependencies", f"bad dependency for {name!r}")
-
-    def fac(acc: JsonAccessor) -> Column:
-        inner = F.lit(True)
-        for name, dep in compiled:
-            if isinstance(dep, list):
-                req = F.lit(True)
-                for d in dep:
-                    req = req & acc.has_field(d)
-            else:
-                req = F.coalesce(dep(acc), F.lit(True))
-            inner = inner & F.when(acc.has_field(name), req).otherwise(F.lit(True))
-        return _applies(acc, {"object"}, inner)
-
-    return fac
-
-
-def _compile_combinators(schema, scope, path) -> list[tuple[str, Factory]]:
+def _compile_combinators(schema, scope, path) -> list[CheckExpr]:
     out = []
     for kw in ("allOf", "anyOf", "oneOf"):
         subs = schema.get(kw)
@@ -1224,35 +1124,23 @@ def _compile_combinators(schema, scope, path) -> list[tuple[str, Factory]]:
         if not isinstance(subs, list) or not subs:
             raise MalformedSchemaError(path, kw, "must be a non-empty array of schemas")
         preds = [_subpred(s, scope, f"{path}/{kw}/{i}") for i, s in enumerate(subs)]
-        if kw == "allOf":
-            out.append(
-                (
-                    kw,
-                    lambda acc, ps=preds: functools.reduce(
-                        lambda a, b: a & b, [F.coalesce(p(acc), F.lit(True)) for p in ps]
-                    ),
-                )
-            )
-        elif kw == "anyOf":
-            out.append(
-                (
-                    kw,
-                    lambda acc, ps=preds: functools.reduce(
-                        lambda a, b: a | b, [F.coalesce(p(acc), F.lit(True)) for p in ps]
-                    ),
-                )
-            )
-        else:  # oneOf: exactly one passes
-            def one_of(acc: JsonAccessor, ps=preds) -> Column:
+        if kw == "oneOf":  # exactly one passes
+            def fac(acc: JsonAccessor, ps=preds) -> Column:
                 total = F.lit(0)
                 for p in ps:
                     total = total + F.coalesce(p(acc), F.lit(True)).cast("int")
                 return total == 1
 
-            out.append((kw, one_of))
+        else:  # allOf: all pass; anyOf: at least one passes
+            op = operator.and_ if kw == "allOf" else operator.or_
+
+            def fac(acc: JsonAccessor, ps=preds, op=op) -> Column:
+                return functools.reduce(op, [F.coalesce(p(acc), F.lit(True)) for p in ps])
+
+        out.append(_check(kw, path, fac))
     if "not" in schema:
         p = _subpred(schema["not"], scope, f"{path}/not")
-        out.append(("not", lambda acc: ~F.coalesce(p(acc), F.lit(True))))
+        out.append(_check("not", path, lambda acc: ~F.coalesce(p(acc), F.lit(True))))
     if (scope.draft == "draft7" or scope.modern) and "if" in schema:
         pif = _subpred(schema["if"], scope, f"{path}/if")
         pthen = _subpred(schema["then"], scope, f"{path}/then") if "then" in schema else None
@@ -1263,7 +1151,7 @@ def _compile_combinators(schema, scope, path) -> list[tuple[str, Factory]]:
             e = F.coalesce(pelse(acc), F.lit(True)) if pelse else F.lit(True)
             return F.when(F.coalesce(pif(acc), F.lit(True)), t).otherwise(e)
 
-        out.append(("if", if_then_else))
+        out.append(_check("if", path, if_then_else))
     return out
 
 
@@ -1310,14 +1198,6 @@ class _Contrib:
         return out
 
 
-def _under_base(scope: Scope, eff_base: str):
-    """Context values for recursing the finder into a ref target that
-    lives under a different base URI / resource."""
-    from urllib.parse import urldefrag
-
-    return urldefrag(eff_base)[0] if eff_base else ""
-
-
 def _branch_valid(sub, scope, path):
     """Compile `sub` to a never-NULL validity Column fn — the
     `is_valid(descend(instance, sub))` gate of the library finders."""
@@ -1325,48 +1205,20 @@ def _branch_valid(sub, scope, path):
     return lambda acc: F.coalesce(p(acc), F.lit(True))
 
 
-def _ref_targets_for_finder(schema, scope, path):
-    """(node, effective_base) for each reference keyword the finder of
-    this draft follows: $ref always; $recursiveRef on 2019-09;
-    $dynamicRef on 2020-12 (matching legacy vs modern library code)."""
+def _ref_terms(schema, scope, path, depth, build) -> list:
+    """The finder `build` run on the target of each of this draft's
+    reference sites (``Scope.ref_sites``), inside the target's resource
+    (the same push/pop discipline as ``Scope.resolve_ref``). All targets
+    are looked up before any is recursed into."""
+    targets = []
+    for base, ref in scope.ref_sites(schema, path):
+        with scope.based(base):
+            targets.append(scope._lookup(ref, path)[1:])
     out = []
-    ref = schema.get("$ref")
-    if isinstance(ref, str):
-        out.append(scope.lookup_node(ref, path))
-    if scope.draft == "draft2019-09" and isinstance(schema.get("$recursiveRef"), str):
-        saved = scope.base_uri
-        scope.base_uri = scope.recursive_base()
-        try:
-            out.append(scope.lookup_node("#", path))
-        finally:
-            scope.base_uri = saved
-    if scope.draft == "draft2020-12" and isinstance(schema.get("$dynamicRef"), str):
-        dref = schema["$dynamicRef"]
-        hit = scope.dynamic_base(dref, path)
-        if hit is not None:
-            r, frag = hit
-            saved = scope.base_uri
-            scope.base_uri = r
-            try:
-                out.append(scope.lookup_node("#" + frag, path))
-            finally:
-                scope.base_uri = saved
-        else:
-            out.append(scope.lookup_node(dref, path))
+    for node, eff in targets:
+        with scope.entered(eff):
+            out.append(build(node, scope, path, depth + 1))
     return out
-
-
-def _recurse_finder(node, eff_base, scope, path, depth, build):
-    """Run `build(node, depth+1)` with scope temporarily rebased to the
-    ref target (same push/pop discipline as resolve_ref)."""
-    saved = scope.base_uri
-    scope.base_uri = eff_base
-    scope.dynamic_path.append(_under_base(scope, eff_base))
-    try:
-        return build(node, scope, path, depth + 1)
-    finally:
-        scope.base_uri = saved
-        scope.dynamic_path.pop()
 
 
 def _eval_props_fn(schema, scope: Scope, path: str, depth: int = 0):
@@ -1378,8 +1230,7 @@ def _eval_props_fn(schema, scope: Scope, path: str, depth: int = 0):
         return c.props
     legacy = scope.draft == "draft2019-09"
 
-    for node, eff in _ref_targets_for_finder(schema, scope, path):
-        sub = _recurse_finder(node, eff, scope, path, depth, _eval_props_fn)
+    for sub in _ref_terms(schema, scope, path, depth, _eval_props_fn):
         c.prop_terms.append(lambda acc, k, v, sub=sub: sub(acc, k, v))
 
     if legacy:
@@ -1454,8 +1305,7 @@ def _eval_items_fn(schema, scope: Scope, path: str, depth: int = 0):
         c.items_all = True
         return c.items
 
-    for node, eff in _ref_targets_for_finder(schema, scope, path):
-        sub = _recurse_finder(node, eff, scope, path, depth, _eval_items_fn)
+    for sub in _ref_terms(schema, scope, path, depth, _eval_items_fn):
         c.item_terms.append(lambda acc, x, i, sub=sub: sub(acc, x, i))
 
     if not legacy:
@@ -1509,13 +1359,13 @@ def _combinator_terms(schema, scope, path, depth, c, builder, slot):
         getattr(c, slot).append(ite)
 
 
-def _compile_unevaluated(schema, scope, path) -> list[tuple[str, Factory]]:
+def _compile_unevaluated(schema, scope, path) -> list[CheckExpr]:
     """unevaluatedProperties / unevaluatedItems (2019-09+): apply the
     subschema to every property/item NOT evaluated by the schema's other
     applicators (per the library's annotation-finder semantics)."""
     if not scope.modern:
         return []
-    out: list[tuple[str, Factory]] = []
+    out: list[CheckExpr] = []
 
     up = schema.get("unevaluatedProperties")
     if up is not None and up is not True:
@@ -1533,7 +1383,7 @@ def _compile_unevaluated(schema, scope, path) -> list[tuple[str, Factory]]:
             inner = F.forall(F.map_entries(acc.as_object()), entry_ok)
             return _applies(acc, {"object"}, inner)
 
-        out.append(("unevaluatedProperties", pfac))
+        out.append(_check("unevaluatedProperties", path, pfac))
 
     ui = schema.get("unevaluatedItems")
     if ui is not None and ui is not True:
@@ -1550,7 +1400,7 @@ def _compile_unevaluated(schema, scope, path) -> list[tuple[str, Factory]]:
             inner = F.size(F.filter(acc.as_array(), bad)) == 0
             return _applies(acc, {"array"}, inner)
 
-        out.append(("unevaluatedItems", ifac))
+        out.append(_check("unevaluatedItems", path, ifac))
     return out
 
 
@@ -1731,28 +1581,19 @@ def _regex_validity_probe(acc: JsonAccessor) -> Column:
     return F.pandas_udf(_f, "boolean")(acc.as_string())
 
 
-def _compile_format(schema, scope, path) -> Optional[Factory]:
+def _compile_format(schema, scope, path) -> list[CheckExpr]:
     fmt = schema.get("format")
     if fmt is None or not scope.validate_formats:
-        return None
+        return []
     probe = _FORMAT_PROBES.get(fmt)
     if probe is None:
-        return None  # unknown formats are annotations per spec
-    return lambda acc: _applies(acc, {"string"}, F.coalesce(probe(acc), F.lit(False)))
+        return []  # unknown formats are annotations per spec
+    return [_check("format", path, lambda acc: _applies(acc, {"string"}, F.coalesce(probe(acc), F.lit(False))))]
 
 
 # ---------------------------------------------------------------------------
 # Top-level schema compiler
 # ---------------------------------------------------------------------------
-
-_MESSAGES = {
-    "type": "Invalid Type",  # exact message, /root/reference/src/keywords/type_.rs:106
-    "enum": "value not in enum",
-    "const": "value != const",
-    "required": "required property missing",
-    "pattern": "string does not match pattern",
-}
-
 
 def compile_schema(
     schema, scope: Scope | None = None, path: str = "#", validate_formats: bool = False
@@ -1787,16 +1628,12 @@ def compile_schema(
     if scope.modern and "$vocabulary" in schema:
         _check_vocabulary(schema["$vocabulary"], scope, path)
 
-    from urllib.parse import urldefrag
-
-    # $ref: delegation (ref_.rs:55-61); siblings ignored per draft<=7
-    # (modern drafts compile $ref AS a keyword alongside its siblings —
-    # see _compile_object_schema); non-string $ref silently ignored
-    # (ref_.rs:35-40)
-    ref = schema.get("$ref")
-    if isinstance(ref, str) and not scope.modern:
-        resolved = scope.resolve_ref(ref, path)
-        return [CheckExpr(c.keyword, path, c.message, c.factory) for c in resolved]
+    # $ref: delegation (ref_.rs:55-61); siblings, $id included, ignored
+    # per draft<=7 (modern drafts compile $ref AS a keyword alongside its
+    # siblings — the first entry of _KEYWORD_COMPILERS); non-string $ref
+    # silently ignored (ref_.rs:35-40)
+    if isinstance(schema.get("$ref"), str) and not scope.modern:
+        return _compile_refs(schema, scope, path)
 
     # $id (draft4: id) establishes a new base URI for this schema's
     # subtree (RFC 3986 resolution against the enclosing base); a
@@ -1867,64 +1704,44 @@ def _check_vocabulary(decl, scope: Scope, path: str) -> None:
             raise UnsupportedVocabularyError(path, uri)
 
 
+def _compile_refs(schema, scope, path) -> list[CheckExpr]:
+    """Each reference site of ``Scope.ref_sites`` compiles its target in
+    place, the target's checks re-pathed to the referring schema. In
+    2019-09+ these are ordinary keywords conjoined with their siblings
+    (core §8.2.4)."""
+    out: list[CheckExpr] = []
+    for base, ref in scope.ref_sites(schema, path):
+        with scope.based(base):
+            out.extend(replace(c, path=path) for c in scope.resolve_ref(ref, path))
+    return out
+
+
+# registration order mirrors keywords/mod.rs:49-57 (Type, Properties, Ref
+# — here the reference keywords come first) then extends with the corpus
+# keyword set (SURVEY.md §2.3)
+_KEYWORD_COMPILERS = (
+    _compile_refs,
+    _compile_type,
+    _compile_properties,
+    _compile_enum,
+    _compile_const,
+    _compile_required,
+    _compile_pattern,
+    _compile_bounds,
+    _compile_multiple_of,
+    _compile_count_bounds,
+    _compile_unique_items,
+    _compile_array_applicators,
+    _compile_contains,
+    _compile_pattern_properties,
+    _compile_additional_properties,
+    _compile_property_names,
+    _compile_dependencies,
+    _compile_combinators,
+    _compile_unevaluated,
+    _compile_format,
+)
+
+
 def _compile_object_schema(schema: dict, scope: Scope, path: str) -> list[CheckExpr]:
-    checks: list[CheckExpr] = []
-
-    def add(keyword: str, fac: Optional[Factory]):
-        if fac is not None:
-            checks.append(
-                CheckExpr(keyword, path, _MESSAGES.get(keyword, f"{keyword} violated"), fac)
-            )
-
-    # modern drafts: $ref / $recursiveRef / $dynamicRef are ordinary
-    # keywords conjoined with their siblings (2019-09 core §8.2.4)
-    if scope.modern:
-        ref = schema.get("$ref")
-        if isinstance(ref, str):
-            for c in scope.resolve_ref(ref, path):
-                checks.append(CheckExpr(c.keyword, path, c.message, c.factory))
-        if scope.draft == "draft2019-09":
-            rref = schema.get("$recursiveRef")
-            if isinstance(rref, str):
-                for c in scope.resolve_recursive_ref(rref, path):
-                    checks.append(CheckExpr(c.keyword, path, c.message, c.factory))
-        else:
-            dref = schema.get("$dynamicRef")
-            if isinstance(dref, str):
-                for c in scope.resolve_dynamic_ref(dref, path):
-                    checks.append(CheckExpr(c.keyword, path, c.message, c.factory))
-
-    # registration order mirrors keywords/mod.rs:49-57 (Type, Properties,
-    # Ref) then extends with the corpus keyword set (SURVEY.md §2.3)
-    add("type", _compile_type(schema, scope, path))
-    checks.extend(_compile_properties(schema, scope, path))
-    add("enum", _compile_enum(schema, scope, path))
-    add("const", _compile_const(schema, scope, path))
-    add("required", _compile_required(schema, scope, path))
-    add("pattern", _compile_pattern(schema, scope, path))
-    for kw, fac in _compile_bounds(schema, scope, path):
-        add(kw, fac)
-    add("multipleOf", _compile_multiple_of(schema, scope, path))
-    for kw, fac in _compile_length(schema, scope, path):
-        add(kw, fac)
-    for kw, fac in _compile_items_bounds(schema, scope, path):
-        add(kw, fac)
-    for kw, fac in _compile_props_bounds(schema, scope, path):
-        add(kw, fac)
-    add("uniqueItems", _compile_unique_items(schema, scope, path))
-    for kw, fac in _compile_items(schema, scope, path):
-        add(kw, fac)
-    for kw, fac in _compile_contains(schema, scope, path):
-        add(kw, fac)
-    add("patternProperties", _compile_pattern_properties(schema, scope, path))
-    add("additionalProperties", _compile_additional_properties(schema, scope, path))
-    add("propertyNames", _compile_property_names(schema, scope, path))
-    add("dependencies", _compile_dependencies(schema, scope, path))
-    for kw, fac in _compile_dependent(schema, scope, path):
-        add(kw, fac)
-    for kw, fac in _compile_combinators(schema, scope, path):
-        add(kw, fac)
-    for kw, fac in _compile_unevaluated(schema, scope, path):
-        add(kw, fac)
-    add("format", _compile_format(schema, scope, path))
-    return checks
+    return [c for compile_keyword in _KEYWORD_COMPILERS for c in compile_keyword(schema, scope, path)]

@@ -36,15 +36,6 @@ def exact_dedup_summary(df: DataFrame, column: str) -> DataFrame:
     )
 
 
-def exact_duplicate_groups(df: DataFrame, id_col: str, column: str) -> DataFrame:
-    """(content_hash, n, ids) for content appearing more than once."""
-    return (
-        df.groupBy(F.xxhash64(F.col(column)).alias("content_hash"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def _word_tokens(text: Column) -> Column:
     """Distinct space-separated tokens (matches the SQL-oracle
     tokenization: string_split on a single space)."""

@@ -1,6 +1,6 @@
 """Offline evaluation screens — scoring a quality/classifier column
 against outcome labels: rank-based ROC-AUC (Mann-Whitney), calibration
-bins + expected calibration error, and two-proportion A/B z-tests.
+bins, and two-proportion A/B z-tests.
 These are the gates behind "did the new quality scorer actually rank
 good documents higher" and "did arm B convert better than arm A".
 
@@ -118,43 +118,6 @@ def calibration_bins(
         F.round("__ms", 6).alias("mean_score"),
         F.round("__pr", 6).alias("pos_rate"),
         F.round(F.col("__pr") - F.col("__ms"), 6).alias("gap"),
-    )
-
-
-def expected_calibration_error(
-    df: DataFrame,
-    score: str,
-    label: str,
-    n_bins: int = 10,
-    group: str | None = None,
-) -> DataFrame:
-    """ECE = sum_b (n_b / N) * |pos_rate_b - mean_score_b| over the
-    same bins as :func:`calibration_bins` (shares the one-aggregation
-    reduction; this is a rollup of that relation, not a second corpus
-    pass). Returns (group?, n, ece), ece rounded to 6.
-    """
-    gcols = [group] if group else []
-    labeled = df.filter(F.col(score).isNotNull() & F.col(label).isNotNull()).select(
-        *gcols,
-        F.col(score).cast("double").alias("__s"),
-        F.col(label).cast("int").alias("__y"),
-    )
-    b = F.least(F.floor(F.col("__s") * n_bins), F.lit(n_bins - 1)).cast("int")
-    per = labeled.groupBy(*gcols, b.alias("__b")).agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.avg("__s").alias("__ms"),
-        F.avg(F.col("__y").cast("double")).alias("__pr"),
-    )
-    return (
-        per.groupBy(*gcols)
-        .agg(
-            F.sum("__n").alias("n"),
-            (
-                F.sum(F.col("__n") * F.abs(F.col("__pr") - F.col("__ms")))
-                / F.sum("__n")
-            ).alias("__ece"),
-        )
-        .select(*gcols, "n", F.round("__ece", 6).alias("ece"))
     )
 
 

@@ -10,11 +10,10 @@ inversion), and baseline-sequential JPEG full-raster (T.81 marker +
 Huffman + IDCT decode, jpegdec module — round 5); palette/16-bit/
 interlaced PNG (CRC-checked IHDR), progressive/arithmetic/12-bit JPEG
 (SOFn marker scan), and GIF (logical-screen descriptor) degrade to
-container-header dims/depth — and falls back to a clearly-marked
-deterministic stub for everything else (MP3/video/... need
-PIL/libvips/ffmpeg, absent here; a deployment swaps the fallback).
+container-header dims/depth; everything else (MP3/video/... need
+PIL/libvips/ffmpeg, absent here) is reported as unsupported.
 
-Decode/feature-extract runs through ``mapInPandas`` (Arrow-batched,
+Decode runs through ``mapInPandas`` (Arrow-batched,
 vectorized) — the correct shape for CPU-heavy per-item work at scale:
 batches stream through Python workers without materializing a partition.
 """
@@ -26,11 +25,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURE_SCHEMA = (
-    "doc_id long, n_bytes long, kind string, width int, height int, "
-    "n_frames int, feature array<float>"
-)
 
 
 def binary_metadata(df: DataFrame, payload_col: str) -> DataFrame:
@@ -358,8 +352,7 @@ def decode_image_bytes(payload: bytes | None) -> dict | None:
     that scope (palette, 16-bit, interlaced, corrupt IDAT) and JPEGs
     outside baseline (progressive SOF2, arithmetic, 12-bit) fall back
     to the real container-header parse (CRC-checked IHDR / SOFn scan)
-    with pixel_sum=None. None for anything else (the caller falls
-    back to the stub)."""
+    with pixel_sum=None. None for anything else."""
     import numpy as np
 
     if not payload:
@@ -454,41 +447,6 @@ def decode_image_bytes(payload: bytes | None) -> dict | None:
     return None
 
 
-def _decode_image_stub(payload: bytes) -> dict:
-    """STUB: real implementation would be PIL/libvips decode. This
-    container has no image libraries, so we return a deterministic fake
-    derived from the payload bytes (stable across runs/partitions), which
-    keeps the downstream plumbing (schema, batching, joins) fully
-    testable."""
-    h = hash_bytes(payload)
-    return {
-        "kind": "image/fake",
-        "width": 16 + (h % 16) * 16,
-        "height": 16 + ((h >> 8) % 16) * 16,
-        "n_frames": 1,
-    }
-
-
-def hash_bytes(payload: bytes) -> int:
-    import zlib
-
-    return zlib.crc32(payload or b"")
-
-
-def _decode_image(payload: bytes) -> dict:
-    """Real decode when the format is stdlib-parseable (PPM/PGM/BMP),
-    deterministic stub otherwise."""
-    real = decode_image_bytes(payload)
-    if real is not None:
-        return {
-            "kind": real["kind"],
-            "width": real["width"],
-            "height": real["height"],
-            "n_frames": 1,
-        }
-    return _decode_image_stub(payload)
-
-
 AUDIO_META_SCHEMA = (
     "doc_id long, n_bytes long, kind string, n_channels long, "
     "sample_width long, frame_rate long, n_frames long, "
@@ -559,125 +517,3 @@ def decode_images(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
             yield out
 
     return df.select(id_col, payload_col).mapInPandas(batches, IMAGE_META_SCHEMA)
-
-
-def decode_features(df: DataFrame, id_col: str, payload_col: str, feat_dim: int = 8) -> DataFrame:
-    """mapInPandas decode + feature-extract over Arrow batches.
-
-    Real deployments swap `_decode_image_stub` for an actual decoder and
-    the feature block for a model forward pass; the batch shape
-    (pandas DataFrames streaming per partition) is exactly what a GPU/CPU
-    featurizer wants."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf[payload_col]
-            metas = [_decode_image(p) for p in payloads]
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": payloads.map(lambda p: len(p) if p is not None else 0).astype("int64"),
-                    "kind": [m["kind"] for m in metas],
-                    "width": pd.array([m["width"] for m in metas], dtype="int32"),
-                    "height": pd.array([m["height"] for m in metas], dtype="int32"),
-                    "n_frames": pd.array([m["n_frames"] for m in metas], dtype="int32"),
-                    # deterministic fake feature: normalized byte histogram head
-                    "feature": [
-                        _fake_feature(p, feat_dim) for p in payloads
-                    ],
-                }
-            )
-            yield out
-
-    return df.select(id_col, payload_col).mapInPandas(batches, FEATURE_SCHEMA)
-
-
-def _fake_feature(payload: bytes | None, dim: int) -> list[float]:
-    if not payload:
-        return [0.0] * dim
-    counts = [0] * dim
-    for b in payload[:4096]:
-        counts[b % dim] += 1
-    total = float(sum(counts)) or 1.0
-    return [c / total for c in counts]
-
-
-def frame_sample_plan(df: DataFrame, id_col: str, payload_col: str, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling PLAN: one output row per sampled frame index.
-    The decode itself is stubbed (NotImplementedError at decode time in
-    this container); the row-explosion plumbing is the part that matters
-    for partition sizing at scale."""
-    n_frames = F.greatest((F.octet_length(F.col(payload_col)) / 1024).cast("int"), F.lit(1))
-    idx = F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-    return df.select(
-        F.col(id_col),
-        F.explode(idx).alias("frame_idx"),
-        F.octet_length(F.col(payload_col)).alias("n_bytes"),
-    )
-
-
-RESIZE_SCHEMA = "doc_id long, width int, height int, payload binary"
-
-
-def resize_images(
-    df: DataFrame, id_col: str, payload_col: str, max_side: int = 256
-) -> DataFrame:
-    """Image resize over Arrow batches (mapInPandas): cap the longer side
-    at ``max_side`` preserving aspect ratio.
-
-    For P6 PPM payloads the resample is REAL: numpy nearest-neighbor
-    index sampling of the raster, re-emitted as valid P6 bytes. For
-    formats this container can't decode (JPEG/PNG — no PIL/libvips) the
-    pixel resample is stubbed: output dims are the exact scaled dims the
-    real decoder would produce for the stub-decoded input dims, and the
-    payload is a stable binary derived from (input bytes, target dims)
-    so downstream exact-dedup/caching plumbing behaves as it would on
-    real thumbnails. Batch shape, schema, and partition flow are
-    production shape either way."""
-    import numpy as np
-
-    def _resize_p6(p: bytes, meta: dict, nw: int, nh: int) -> bytes | None:
-        if meta.get("kind") != "image/x-portable-pixmap":
-            return None
-        full = decode_image_bytes(p)
-        if full is None:
-            return None
-        w, h = full["width"], full["height"]
-        # re-locate the raster (header length varies)
-        raster_off = len(p) - w * h * 3
-        arr = np.frombuffer(p, dtype=np.uint8, offset=raster_off).reshape(h, w, 3)
-        ys = (np.arange(nh) * h // nh).astype(np.int64)
-        xs = (np.arange(nw) * w // nw).astype(np.int64)
-        small = arr[ys][:, xs]
-        return b"P6\n%d %d\n255\n" % (nw, nh) + small.tobytes()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, payloads = [], [], [], []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                meta = _decode_image(p)
-                w, h = meta["width"], meta["height"]
-                scale = min(1.0, max_side / max(w, h))
-                nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-                ids.append(int(i))
-                ws.append(nw)
-                hs.append(nh)
-                real = _resize_p6(p, meta, nw, nh)
-                # fallback STUB resample: stable bytes keyed by content + dims
-                payloads.append(
-                    real
-                    if real is not None
-                    else (p or b"")[:64] + f":{nw}x{nh}".encode()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(ids, dtype="int64"),
-                    "width": pd.array(ws, dtype="int32"),
-                    "height": pd.array(hs, dtype="int32"),
-                    "payload": payloads,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, RESIZE_SCHEMA)
-
-

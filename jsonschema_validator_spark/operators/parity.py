@@ -58,12 +58,6 @@ def row_parity(
     )
 
 
-def parity_summary(parity: DataFrame) -> DataFrame:
-    """(status, n) counts from a row_parity frame — the one-line verdict
-    ('all ok' means the row-level invariant holds)."""
-    return parity.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
-
-
 def tost_equivalence(
     df: DataFrame,
     group_col: str,

@@ -12,7 +12,7 @@ this is part of the LLM-pipeline operator set the engine adds (SURVEY
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # kind -> (pattern, replacement token). Patterns are Java+RE2 compatible:
@@ -49,12 +49,3 @@ def scrub_pii(text: Column, kinds: tuple[str, ...] = _ORDER) -> Column:
         pat, repl = PII_PATTERNS[k]
         out = F.regexp_replace(out, pat, repl)
     return out
-
-
-def pii_report(df: DataFrame, text_col: str) -> DataFrame:
-    """Per-row counts + scrubbed text: df columns + n_<kind>... +
-    scrubbed. One projection, zero shuffles."""
-    t = F.col(text_col)
-    return df.select(
-        "*", *pii_counts(t), scrub_pii(t).alias("scrubbed")
-    )

@@ -6,8 +6,8 @@ scans everything. Interleaving the bits of two key columns into a
 Morton code and range-sorting on THAT makes every file's footprint a
 small rectangle in (x, y) space, so min/max stats prune scans for
 predicates on EITHER dimension — the standard lakehouse `OPTIMIZE
-ZORDER BY` layout, reproduced here with plain Column bit algebra +
-repartitionByRange, no table format required.
+ZORDER BY` layout, reproduced here with plain Column bit algebra (the writer
+range-partitions on the key), no table format required.
 
 All arithmetic is integer shifts/masks (engine-portable, SQL-oracle
 reproducible). At 100 TB the clustering write is one range exchange —
@@ -17,7 +17,7 @@ subsequent selective scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _SPREAD_MASKS = (
@@ -44,26 +44,3 @@ def morton_key(x: Column, y: Column) -> Column:
     BUCKETS, so precision loss only coarsens clustering, never
     correctness). x takes even bits, y odd."""
     return _spread16(x).bitwiseOR(F.shiftleft(_spread16(y), 1)).cast("long")
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    x_col: Column,
-    y_col: Column,
-    n_files: int = 32,
-) -> None:
-    """Cluster-write: range-partition on the Morton code of
-    (x_col, y_col) and sort within partitions, so each output file's
-    (x, y) min/max footprint is a compact rectangle. One range
-    exchange (sampled boundaries), one local sort — the write-time
-    layout that buys 2-D min/max pruning on every later scan."""
-    key = morton_key(x_col, y_col).alias("__z")
-    (
-        df.withColumn("__z", key)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -492,7 +492,8 @@ class CheckSuite:
         """The per-row key-check conditions over (g ORDER BY o), built once
         per (g, o, monotone) and shared by verdict pass B (counts) and the
         violations pass (structs): (duplicate, rootless, issues) where
-        duplicate marks every row whose order value repeats in its group,
+        duplicate marks every row whose order value repeats in its group
+        (a NULL group or order value is never a duplicate),
         rootless marks every row of a group whose smallest order value is
         not 0, and issues is the ordered list of (ordering issue name,
         condition)."""
@@ -515,7 +516,9 @@ class CheckSuite:
             for c in monotone:
                 lag_c = F.lag(c).over(w)
                 issues.append((f"{c}_inversion", lag_c.isNotNull() & (F.col(c) < lag_c)))
-            conds = ((lag_o == cur) | (lead_o == cur), first_o != 0, issues)
+            # certain keys: a row with a NULL key column duplicates nothing
+            dup = F.col(g).isNotNull() & ((lag_o == cur) | (lead_o == cur))
+            conds = (dup, first_o != 0, issues)
             self._expr_memo[memo_key] = conds
         return conds
 

@@ -15,7 +15,8 @@ invalidates prior lineage (the spec hash is the compile-memoization key
 analog, /root/reference/src/types/scope_builder.rs:43-54, made
 content-addressed instead of uuid-addressed).
 `partition` is the partition value cast to string, the form verdict
-rows carry as `day`.
+rows carry as `day`; a NULL partition value is a partition of its own
+(`"partition": null`), ordered last.
 
 Resume = anti-join pending partitions against the manifest (driver-side:
 the partition list is small — O(days), never O(rows)) and process only
@@ -41,6 +42,10 @@ from jsonschema_validator_spark.sources.tables import (
     overwrite_partitions,
     read_table,
 )
+
+
+def _partition_order(p: str | None) -> tuple:
+    return p is None, p
 
 
 @dataclass
@@ -129,7 +134,7 @@ class CheckpointedRunner:
         part = F.col(self.suite.partition_by).cast("string")
         allp = [r[0] for r in df.select(part).distinct().collect()]
         done = self.done_partitions()
-        return sorted(p for p in allp if p not in done)
+        return sorted((p for p in allp if p not in done), key=_partition_order)
 
     def run(
         self, df: DataFrame, batch_size: int | None = None, snapshot_id: int | None = None
@@ -138,14 +143,15 @@ class CheckpointedRunner:
         verdicts/violations partitions then commits manifest lines."""
         part = F.col(self.suite.partition_by).cast("string")
         pending = self.pending_partitions(df)
-        skipped = sorted(self.done_partitions())
+        skipped = sorted(self.done_partitions(), key=_partition_order)
         if not pending:
             return RunReport([], skipped, 0, snapshot_id)
         batch_size = batch_size or len(pending)
         batches = [pending[i : i + batch_size] for i in range(0, len(pending), batch_size)]
 
         for batch in batches:
-            sub = df.filter(part.isin(batch))
+            picked = part.isin([p for p in batch if p is not None])
+            sub = df.filter(picked | part.isNull() if None in batch else picked)
             # verdict and violation rows name the partition `day` whatever
             # the suite's partition column is called. The verdict rows are
             # collected once: the sink writes them and the manifest

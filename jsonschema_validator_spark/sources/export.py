@@ -1,4 +1,4 @@
-"""Training-data export: deterministic sharding + per-shard manifest.
+"""Training-data export: deterministic shard membership.
 
 The consumer of everything this engine validates/dedups/packs is a
 training job that reads FIXED, REPRODUCIBLE shards — shard membership
@@ -6,21 +6,11 @@ must be a pure function of the row key (same contract as
 operators/sampling.mix_key: stable across runs, partition layouts, and
 engines), not of Spark's task scheduling, or two exports of the same
 snapshot feed the trainer different data orders.
-
-Scale shape: one hash repartition on the shard id (the only exchange),
-an in-partition sort for the requested layout (e.g. curriculum order by
-length/quality — a LOCAL sort, no global ordering exchange), and a
-partitionBy(shard) parquet write. The manifest is an aggregation of the
-same relation — counts/token sums per shard — written next to the data
-so the trainer can verify completeness before reading a single row.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from jsonschema_validator_spark.operators.sampling import DOMAIN, mix_key
@@ -30,44 +20,3 @@ def shard_of(key: Column, n_shards: int) -> Column:
     """Deterministic shard id in [0, n_shards): engine-portable mixer,
     so the SQL oracle (and any other engine) reproduces membership."""
     return F.pmod(F.pmod(mix_key(key), F.lit(DOMAIN)), F.lit(n_shards))
-
-
-def export_shards(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    n_shards: int,
-    order_by: list[str] | None = None,
-) -> dict:
-    """Write ``df`` as ``path/shard=K/*.parquet`` with deterministic
-    membership (``shard_of``) and optional within-shard ordering, plus
-    ``path/_manifest.json`` recording per-shard row counts — the
-    completeness check a training job runs before consuming.
-
-    Returns the manifest dict. Rows: exactly the input rows, each in
-    exactly one shard.
-    """
-    with_shard = df.withColumn("shard", shard_of(F.col(key_col), n_shards))
-    out = with_shard.repartition(n_shards, "shard")
-    if order_by:
-        out = out.sortWithinPartitions("shard", *order_by)
-    out.write.mode("overwrite").partitionBy("shard").parquet(path)
-
-    counts = {
-        int(r["shard"]): int(r["n"])
-        for r in with_shard.groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    manifest = {
-        "n_shards": n_shards,
-        "key_col": key_col,
-        "order_by": order_by or [],
-        "rows": sum(counts.values()),
-        "shards": {str(k): counts.get(k, 0) for k in range(n_shards)},
-    }
-    tmp = os.path.join(path, "_manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.rename(tmp, os.path.join(path, "_manifest.json"))
-    return manifest

@@ -134,34 +134,6 @@ def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> Da
     return spark.createDataFrame(table, schema)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: str | list[str],
-    n_buckets: int,
-    sort_cols: str | list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a BUCKETED parquet table (Hive-style metastore
-    table via saveAsTable — bucketing metadata cannot ride on a bare
-    path). Two tables bucketed on the same key with the same bucket
-    count equi-join WITHOUT any Exchange: the co-located join that
-    turns the repeated 100 TB fact-to-fact shuffle into a one-time
-    layout cost at write time (pinned by
-    tests/test_plan_shape.py::test_bucketed_join_no_exchange).
-    ``sort_cols`` additionally sorts within buckets, letting the
-    sort-merge join skip its per-bucket sort when Spark can prove the
-    ordering. The Iceberg twin of this layout is a bucket(N, col)
-    partition transform + write-distribution-mode on the same column.
-    """
-    bucket_cols = [bucket_cols] if isinstance(bucket_cols, str) else bucket_cols
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        sort_cols = [sort_cols] if isinstance(sort_cols, str) else sort_cols
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,

@@ -395,19 +395,22 @@ def test_drift_null_partition_is_its_own_partition(spark):
         assert (got[day].metrics["ks_stat"], got[day].metrics["psi"]) == (x.ks_stat, x.psi)
 
 
-def test_standalone_unique_null_key_is_never_a_duplicate(spark):
-    """A one-column unique check counts the same rows in its verdict and
-    its violations: two rows with a NULL key are not duplicates (SQL
-    UNIQUE), two rows with key c1 are."""
+@pytest.mark.parametrize("columns", [["conv_id"], ["conv_id", "turn_idx"]], ids=["one", "two"])
+def test_unique_null_key_is_never_a_duplicate(spark, columns):
+    """A unique check counts the same rows in its verdict and its
+    violations, standalone (one column) or in pass B's key window (the
+    two key columns): two rows with a NULL conv_id are not duplicates
+    (SQL UNIQUE, certain keys), even with equal turn_idx; the two
+    (c1, 0) rows are."""
     df = spark.createDataFrame(
-        [("d1", None, 0), ("d1", None, 1), ("d1", "c1", 0), ("d2", "c1", 1), ("d2", "c2", 0)],
+        [("d1", None, 0), ("d1", None, 0), ("d1", "c1", 0), ("d2", "c1", 0), ("d2", "c2", 0)],
         "day string, conv_id string, turn_idx int",
     )
-    suite = _suite_rows([{"check": "unique", "columns": ["conv_id"]}])
+    suite = _suite_rows([{"check": "unique", "columns": columns}])
     verdicts = {r.day: r.violation_count for r in suite.verdicts(df).collect()}
     viol = suite.violations(df).collect()
     assert verdicts == {"d1": 1, "d2": 1}
-    assert sorted((r.day, r.conv_id, r.turn_idx) for r in viol) == [("d1", "c1", 0), ("d2", "c1", 1)]
+    assert sorted((r.day, r.conv_id, r.turn_idx) for r in viol) == [("d1", "c1", 0), ("d2", "c1", 0)]
 
 
 def test_unbounded_drift_memo_does_not_grow(spark):

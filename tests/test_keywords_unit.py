@@ -43,6 +43,50 @@ def test_compile_check_count(schema, n_checks):
     assert len(_compile(schema)) == n_checks
 
 
+_TRANSCRIPTS_CHECKS = [
+    *[("required", f"#{c}", "required property missing") for c in ("conv_id", "turn_idx", "role", "text", "ts")],
+    ("type", "#", "Invalid Type"),
+    ("type", "#conv_id", "Invalid Type"),
+    ("pattern", "#conv_id", "string does not match pattern"),
+    ("type", "#turn_idx", "Invalid Type"),
+    ("minimum", "#turn_idx", "minimum violated"),
+    ("maximum", "#turn_idx", "maximum violated"),
+    ("type", "#role", "Invalid Type"),
+    ("enum", "#role", "value not in enum"),
+    ("type", "#text", "Invalid Type"),
+    ("pattern", "#text", "string does not match pattern"),
+    ("minLength", "#text", "minLength violated"),
+    ("maxLength", "#text", "maxLength violated"),
+    ("type", "#tool", "Invalid Type"),
+    ("enum", "#tool", "value not in enum"),
+    ("dependencies", "#", "dependencies violated"),
+]
+
+_EVENTS_CHECKS = [
+    ("required", "#event_id", "required property missing"),
+    ("required", "#ts", "required property missing"),
+    ("enum", "#event_type", "value not in enum"),
+    ("minimum", "#value", "minimum violated"),
+    ("maximum", "#value", "maximum violated"),
+]
+
+
+def test_benchmark_suites_compile_to_pinned_checks():
+    """The compiled check lists of the transcripts suite and the events
+    suite, in order and with their labels: each (keyword, path) names a
+    verdict row (`keyword@path`) and a flag column `f{i}` by position."""
+    import __spark_entry__ as entry
+
+    from jsonschema_validator_spark.plans import CheckSuite
+    from jsonschema_validator_spark.specs import transcripts_spec
+
+    def triples(suite):
+        return [(c.keyword, c.path, c.message) for c in suite._checks]
+
+    assert triples(CheckSuite(transcripts_spec()).build()) == _TRANSCRIPTS_CHECKS
+    assert triples(entry._events_suite()) == _EVENTS_CHECKS
+
+
 # --- compile errors (exact taxonomy; type_.rs:158-187) ---------------------
 
 @pytest.mark.parametrize(

@@ -114,7 +114,7 @@ def test_new_pipeline_ops_plan_shapes(spark):
     presentation sort); sessionization's single user_id exchange feeds
     BOTH windows and the per-session rollup (subset-clustering rule — no
     second exchange before the aggregate)."""
-    from jsonschema_validator_spark.operators.pii import pii_report
+    from jsonschema_validator_spark.operators.pii import pii_counts, scrub_pii
     from jsonschema_validator_spark.operators.sessions import session_stats
     from jsonschema_validator_spark.operators.textstats import ngram_repetition
 
@@ -122,7 +122,8 @@ def test_new_pipeline_ops_plan_shapes(spark):
     p = plan_of(docs.select("doc_id", ngram_repetition(F.col("text")).alias("r")))
     assert p.count("Scan parquet") == 1 and "Exchange" not in p, p
 
-    p = plan_of(pii_report(docs, "text"))
+    text = F.col("text")
+    p = plan_of(docs.select("*", *pii_counts(text), scrub_pii(text).alias("scrubbed")))
     assert p.count("Scan parquet") == 1 and "Exchange" not in p, p
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -286,46 +287,6 @@ def test_violation_summary_no_reinlined_parse(spark):
     assert "Filter" not in lines[scan_idx - 1], lines[scan_idx - 1]
 
 
-def test_bucketed_join_no_exchange(spark):
-    """Two tables bucketed on the join key with the same bucket count
-    must equi-join with ZERO Exchange nodes — the co-located join is
-    the point of paying the bucketed layout at write time. An unbucketed
-    control join of the same data shows the Exchanges the layout saved."""
-    from jsonschema_validator_spark.sources.tables import write_bucketed
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    od = spark.read.parquet(f"{SF}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    write_bucketed(li, "jsv_li_b", "l_orderkey", 8, sort_cols="l_orderkey")
-    write_bucketed(
-        od.withColumnRenamed("o_orderkey", "l_orderkey"),
-        "jsv_od_b",
-        "l_orderkey",
-        8,
-        sort_cols="l_orderkey",
-    )
-    try:
-        # disable auto-broadcast so the join strategy is the bucketed SMJ,
-        # not a broadcast that would trivially have no shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table("jsv_li_b")
-        b = spark.table("jsv_od_b")
-        joined = a.join(b, "l_orderkey")
-        p = plan_of(joined)
-        assert "Exchange" not in p, p
-        control = li.join(
-            od.withColumnRenamed("o_orderkey", "l_orderkey"), "l_orderkey"
-        )
-        assert "Exchange" in plan_of(control)
-        # same rows either way
-        assert joined.count() == control.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS jsv_li_b")
-        spark.sql("DROP TABLE IF EXISTS jsv_od_b")
 
 
 def test_round3_conversation_ops_payload_pruned(spark):

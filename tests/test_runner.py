@@ -209,3 +209,34 @@ def test_date_partition_commits_manifest(spark, df, tmp_path):
     assert runner.done_partitions() == set(report.processed)
     again = runner.run(dfd)
     assert again.processed == [] and again.skipped == report.processed
+
+
+def test_null_partition_is_checked_committed_and_skipped(spark, tmp_path):
+    """A NULL partition value is a partition of its own: the run checks
+    it (its verdict row has day NULL, like verdicts()), writes it,
+    commits it as `"partition": null` and a resume skips it."""
+    suite = CheckSuite(
+        {
+            "name": "n",
+            "partition_by": "day",
+            "keys": ["conv_id", "turn_idx"],
+            "row": {"required": ["conv_id"]},
+            "dataset": [],
+        }
+    ).build()
+    frame = spark.createDataFrame(
+        [("d1", "c1", 0), ("d1", None, 1), (None, "c2", 0), (None, None, 1)],
+        "day string, conv_id string, turn_idx int",
+    )
+    out = str(tmp_path / "out_null")
+    runner = CheckpointedRunner(suite, out)
+    report = runner.run(frame, batch_size=1)
+    assert report.processed == ["d1", None] and report.batches == 2
+    assert runner.done_partitions() == {"d1", None}
+    got = spark.read.parquet(os.path.join(out, "verdicts"))
+    assert _verdict_rows(got) == _verdict_rows(suite.verdicts(frame))
+    assert ("None", "required@#conv_id", False, 1, 2, ()) in _verdict_rows(got)
+    viol = spark.read.parquet(os.path.join(out, "violations"))
+    assert sorted(((r["day"], r["turn_idx"]) for r in viol.collect()), key=str) == [("d1", 1), (None, 1)]
+    again = runner.run(frame)
+    assert again.processed == [] and again.skipped == ["d1", None]
